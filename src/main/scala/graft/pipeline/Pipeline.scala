@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -935,83 +935,6 @@ object Dedup {
   }
 
   /**
-   * Connected components over an undirected candidate-pair edge list:
-   * every node gets the MINIMUM id reachable from it as its component
-   * label — the step that turns near-dup PAIRS into dedupable CLUSTERS
-   * (pairs alone under-dedup: a~b and b~c must collapse to one survivor,
-   * not two).
-   *
-   * Min-label propagation, one hash-join + aggregate per round,
-   * converging in O(component diameter) rounds. Near-dup clusters from
-   * LSH are almost-cliques (diameter 2-3), so a handful of rounds
-   * suffices at any corpus size; every round is fully distributed and
-   * localCheckpointed (lineage truncated — see the loop comment).
-   * (For adversarial long-chain graphs use [[connectedComponentsStar]]
-   * — same join shapes, log-bounded rounds.)
-   *
-   * The returned (id, component) frame is a narrow projection over the
-   * final round's checkpoint (already materialized by the convergence
-   * check); `unpersist()` is a harmless no-op on it.
-   * If `maxIters` rounds elapse before the fixpoint (impossible for
-   * clusters of diameter < maxIters), the partially-converged labels
-   * are returned as-is: components may then be split, never merged
-   * wrongly — raise `maxIters` for long-chain graphs.
-   */
-  def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 20): DataFrame = {
-    // persist the raw edges first: the symmetric union references them
-    // twice, and without the cache the whole upstream pipeline (e.g. the
-    // LSH pair generation) would be evaluated twice
-    val e = edges.select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .where(col(aCol).isNotNull && col(bCol).isNotNull)
-      .persist()
-    val sym = e.select(col("__a").as("__s"), col("__b").as("__d"))
-      .unionAll(e.select(col("__b").as("__s"), col("__a").as("__d")))
-      .distinct()
-      .persist()
-    // seed with min(own id, min direct neighbor): LSH near-dup clusters
-    // are almost-cliques, so this is usually already the fixpoint and
-    // the loop exits after one no-change round.
-    // Per-round localCheckpoint (not persist): each round references
-    // the previous labels twice, so an un-truncated logical plan grows
-    // EXPONENTIALLY with the round count — harmless on diameter-2
-    // near-clique graphs, an OOM (in plan stringification alone) once a
-    // longer-diameter graph needs ~15 rounds. Checkpointing
-    // materializes AND truncates; blocks are freed by the
-    // ContextCleaner when the previous round's frame drops out of scope.
-    // LAZY localCheckpoint in the loop (r17 opt): every round runs an
-    // aggregate action immediately after (the convergence count), which
-    // materializes the checkpoint blocks in the SAME job — the eager
-    // variant paid one extra materialization job per round, pure
-    // scheduling overhead on an iterative operator. Lineage truncation
-    // (the reason the checkpoint exists) is identical.
-    var labels = sym.groupBy(col("__s"))
-      .agg(min(col("__d")).as("__nbr"))
-      .select(col("__s").as("id"),
-        least(col("__s"), col("__nbr")).as("component"))
-      .localCheckpoint(false)
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIters) {
-      val nbrMin = sym.join(labels, sym("__d") === labels("id"))
-        .groupBy(col("__s"))
-        .agg(min(col("component")).as("__nbr"))
-      val updated = labels
-        .join(nbrMin, labels("id") === nbrMin("__s"), "left")
-        .select(col("id"), col("component"),
-          least(col("component"), coalesce(col("__nbr"), col("component")))
-            .as("__next"))
-        .localCheckpoint(false)
-      changed = updated.where(col("__next") < col("component")).count()
-      labels = updated.select(col("id"), col("__next").as("component"))
-      i += 1
-    }
-    sym.unpersist(false)
-    e.unpersist(false)
-    labels
-  }
-
-  /**
    * Semantic dedup, SemDeDup-shape (cluster the embedding space, prune
    * near-duplicates WITHIN each cluster): assign every vector to its
    * nearest of `nlist` centroids (broadcast literals — narrow, no
@@ -1076,137 +999,111 @@ object Dedup {
   }
 
   /**
-   * Connected components via alternating LARGE-STAR / SMALL-STAR
-   * transforms (Kiveris et al., "Connected Components in MapReduce and
-   * Beyond") — the adversarial-graph twin of [[connectedComponents]]:
-   * min-label propagation needs O(diameter) rounds (fine for LSH
-   * near-cliques, hopeless for a million-node chain), the star
-   * operations converge in O(log n) rounds on ANY graph.
+   * Connected components over an undirected edge list, the step that
+   * turns near-dup PAIRS into dedupable CLUSTERS (a~b and b~c must
+   * collapse to one survivor, not two): every node incident to an edge
+   * gets the MINIMUM id reachable from it. Alternating LARGE-STAR /
+   * SMALL-STAR transforms (Kiveris et al., "Connected Components in
+   * MapReduce and Beyond", SoCC 2014) converge in O(log n) rounds on ANY
+   * graph, a long chain included:
    *
    *   large-star: every node u re-attaches its LARGER neighbors to
    *     m = min(N(u) ∪ {u});
    *   small-star: every node u (edges canonicalized smaller<-larger)
    *     re-attaches its smaller neighbors AND itself to their minimum.
    *
-   * Each half-round is one groupBy + re-emit over the edge list — the
-   * same keyed-shuffle shape as a round of label propagation, with the
-   * edge list shrinking toward the star fixpoint {(u, min of u's
-   * component)}. Convergence is detected by an (edge count, xxhash sum)
-   * signature — any structural change moves it. Returns (id, component
-   * = min reachable id) for every node incident to an edge, persisted
-   * (caller unpersists), exactly like [[connectedComponents]].
+   * A round is one localCheckpoint job over two keyed exchanges (3 Spark
+   * jobs under AQE: two shuffle stages and the result stage). Each star
+   * takes its per-center minimum with a window, `min(__v) over
+   * partitionBy(__u)`, on the exchanged rows instead of a groupBy joined
+   * back, so no join and no broadcast. The window buffer spills, so a hub
+   * of very high degree costs only its edge rows, never a collected
+   * neighborhood. Large-star's exchange on the center also deduplicates
+   * the symmetric edges for free (hash(__u) already clusters (__u, __v)).
+   *
+   * The convergence probe rides the same job as an [[Observation]] on
+   * large-star's window: the number of nodes with a smaller neighbor and
+   * degree > 1. It is zero exactly when the round's INPUT is a forest of
+   * stars centered on their minima, the fixpoint. The round that finds
+   * it reproduces that forest unchanged, so it is the confirming round
+   * that a test comparing consecutive edge sets also pays.
+   *
+   * Every round also emits one self row (r, r) per local minimum r; the
+   * next round drops it before the stars. At the fixpoint the output is
+   * then exactly {(leaf, root)} ∪ {(root, root)}: the labels, with no
+   * further job. Returns (id, component) as a projection of that
+   * checkpoint (`unpersist()` is a harmless no-op on it). Jobs carry the
+   * description "connectedComponentsStar: round <k>"; the caller's
+   * description is restored on return. Throws IllegalStateException when
+   * `maxIters` rounds pass without reaching the fixpoint, rather than
+   * return split components.
    */
   def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
                               maxIters: Int = 50): DataFrame = {
-    // localCheckpoint (eager) instead of persist: each star round
-    // references its input several times and the reference compounds
-    // per round, so an un-truncated logical plan grows EXPONENTIALLY
-    // with the round count (explain/AQE stringification alone OOMs).
-    // Checkpointing materializes AND truncates lineage; the blocks are
-    // released by the ContextCleaner when the previous round's frame
-    // goes out of scope.
-    // lazy: the signature aggregate right below materializes the
-    // blocks in its own job (same for every round's checkpoint)
-    var e = edges
-      .where(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
-      .select(col(aCol).cast("long").as("__u"), col(bCol).cast("long").as("__v"))
-      .distinct()
-      .localCheckpoint(false)
-
-    def signature(df: DataFrame): (Long, Long) = {
-      // bit_xor fold: order-independent and overflow-free (a sum of
-      // hashes trips ANSI long-overflow); orientation-insensitive via
-      // the least/greatest canonicalization inside the hash
-      val r = df.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(least(col("__u"), col("__v")),
-          greatest(col("__u"), col("__v")))), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    val (u, v) = (col("__u"), col("__v"))
+    val byCenter = Window.partitionBy(u)
+    def edge(a: Column, b: Column): Column = struct(a.as("__u"), b.as("__v"))
+    def round(e: DataFrame, probe: Observation): DataFrame = {
+      val large = e.where(u =!= v)
+        .select(inline(array(edge(u, v), edge(v, u))))
+        .repartition(u).distinct()
+        .select(u, v, min(v).over(byCenter).as("__n"), count(lit(1)).over(byCenter).as("__deg"))
+        .observe(probe, count_if(v === col("__n") && col("__n") < u && col("__deg") > 1)
+          .as("unfinished"))
+      // (v, m) for every larger neighbor v; (u, u) once for a local minimum
+      val m = least(u, col("__n"))
+      val root = v === col("__n") && col("__n") > u
+      val small = large
+        .select(inline(array(edge(when(v > u, v), m), edge(when(root, u), u))))
+        .where(u.isNotNull)
+        .select(greatest(u, v).as("__u"), least(u, v).as("__v"))
+        .repartition(u)
+        .withColumn("__m", min(v).over(byCenter))
+      // every smaller neighbor to the minimum; the minimum's own row
+      // re-attaches the center (and passes a self row through)
+      small.select(when(v === col("__m"), u).otherwise(v).as("__u"), col("__m").as("__v"))
     }
 
-    // large-star over the SYMMETRIC neighborhood; small-star over the
-    // smaller<-larger canonical orientation. Each is a groupBy(center)
-    // for the per-center minimum joined back to the edges ON THE SAME
-    // key — never a collected neighborhood array, so a 10^8-degree hub
-    // costs only its edge rows (both sides of the join share the
-    // center-keyed partitioning; no per-row memory blowup).
-    def largeStar(df: DataFrame): DataFrame = {
-      val sym = df.select(col("__u"), col("__v"))
-        .unionAll(df.select(col("__v").as("__u"), col("__u").as("__v")))
-        .repartition(col("__u")) // one exchange feeds both agg and join
-      val mins = sym.groupBy(col("__u"))
-        .agg(least(min(col("__v")), first(col("__u"))).as("__m"))
-      // NO distinct here: duplicate intermediate edges cannot change any
-      // min downstream, and smallStar ends in a distinct anyway — saving
-      // a full (u,v)-keyed exchange every round
-      sym.join(mins, "__u")
-        .where(col("__v") > col("__u") && col("__v") =!= col("__m"))
-        .select(col("__v").as("__u"), col("__m").as("__v"))
-    }
-    def smallStar(df: DataFrame): DataFrame = {
-      val canon = df.select(greatest(col("__u"), col("__v")).as("__u"),
-        least(col("__u"), col("__v")).as("__v"))
-        .repartition(col("__u"))
-      val mins = canon.groupBy(col("__u")).agg(min(col("__v")).as("__m"))
-      // re-attach every smaller neighbor to the min, and the center too
-      canon.join(mins, "__u")
-        .where(col("__v") =!= col("__m"))
-        .select(col("__v").as("__u"), col("__m").as("__v"))
-        .unionAll(mins.select(col("__u"), col("__m").as("__v")))
-        .where(col("__u") =!= col("__v"))
-        .distinct()
-    }
-
-    var sig = signature(e)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val nsig = signature(next)
-      e = next
-      converged = nsig == sig
-      sig = nsig
-      i += 1
-    }
-
-    // fixpoint edges are exactly {(node, component min) : node != min};
-    // add the roots' self-labels to cover every incident node
-    val labels = e.select(col("__u").as("id"), col("__v").as("component"))
-      .unionAll(e.select(col("__v").as("id"), col("__v").as("component")))
-      .groupBy(col("id")).agg(min(col("component")).as("component"))
-      .persist()
-    labels.count()
-    labels
+    val sc = edges.sparkSession.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try {
+      var e = edges.where(col(aCol).isNotNull && col(bCol).isNotNull)
+        .select(col(aCol).cast("long").as("__u"), col(bCol).cast("long").as("__v"))
+      var unfinished = 1L
+      var i = 0
+      while (unfinished > 0) {
+        if (i == maxIters) throw new IllegalStateException(
+          s"connectedComponentsStar: no fixpoint after $maxIters rounds " +
+            s"(${e.count()} edges left); raise maxIters")
+        i += 1
+        sc.setJobDescription(s"connectedComponentsStar: round $i")
+        val probe = Observation()
+        e = round(e, probe).localCheckpoint(true)
+        // no metric when the optimizer proved the round's input empty and
+        // pruned the probe's subtree: nothing is unfinished then
+        unfinished = probe.get.getOrElse("unfinished", 0L).asInstanceOf[Long]
+      }
+      e.select(u.as("id"), v.as("component"))
+    } finally sc.setJobDescription(callerDescription)
   }
 
   /**
    * Near-duplicate CLUSTER dedup end-to-end: minhash-LSH candidate
-   * pairs -> exact-Jaccard refine -> connected components -> keep the
-   * minimum-id document of every cluster (docs in no cluster survive
-   * untouched). Returns the surviving rows of `df`.
+   * pairs -> exact-Jaccard refine -> [[connectedComponentsStar]] -> keep
+   * the minimum-id document of every cluster (docs in no cluster survive
+   * untouched). Returns the surviving rows of `df`. The component labels
+   * are the checkpoint of the last CC round, so the pair cache is
+   * released before return and the losers are a narrow projection of
+   * that checkpoint.
    */
   def dedupNearClusters(df: DataFrame, idCol: String, textCol: String,
                         shingle: Int = 3, numHashes: Int = 64,
-                        bands: Int = 16, threshold: Double = 0.7,
-                        ccAlgorithm: String = "label"): DataFrame = {
+                        bands: Int = 16, threshold: Double = 0.7): DataFrame = {
     val (pairs, releasePairs) = minhashDupPairsWithRelease(df, idCol,
       textCol, shingle, numHashes, bands, threshold)
-    // "label" = min-label propagation (O(diameter) rounds — right for
-    // LSH near-cliques); "star" = large/small-star (O(log n) rounds —
-    // right when clusters can chain arbitrarily long)
-    val comps = ccAlgorithm match {
-      case "label" => connectedComponents(pairs, "id_a", "id_b")
-      case "star" => connectedComponentsStar(pairs, "id_a", "id_b")
-      case other => throw new IllegalArgumentException(
-        s"unknown ccAlgorithm '$other' (expected label|star)")
-    }
-    // pin the (small) loser-id set independently of the labels cache so
-    // the labels frame can be released NOW instead of leaking a cached
-    // frame per invocation (comps' contract: caller unpersists)
-    val losers = comps.where(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-      .localCheckpoint(true)
-    comps.unpersist(false)
+    val comps = connectedComponentsStar(pairs, "id_a", "id_b")
     releasePairs() // the CC rounds are checkpointed; pairs are consumed
+    val losers = comps.where(col("id") =!= col("component")).select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -1226,27 +1123,18 @@ object Dedup {
   def dedupNearClustersKeepBest(df: DataFrame, idCol: String, textCol: String,
                                 score: org.apache.spark.sql.Column,
                                 shingle: Int = 3, numHashes: Int = 64,
-                                bands: Int = 16, threshold: Double = 0.7,
-                                ccAlgorithm: String = "label"): DataFrame = {
+                                bands: Int = 16, threshold: Double = 0.7): DataFrame = {
     val (pairs, releasePairs) = minhashDupPairsWithRelease(df, idCol,
       textCol, shingle, numHashes, bands, threshold)
-    val comps = ccAlgorithm match {
-      case "label" => connectedComponents(pairs, "id_a", "id_b")
-      case "star" => connectedComponentsStar(pairs, "id_a", "id_b")
-      case other => throw new IllegalArgumentException(
-        s"unknown ccAlgorithm '$other' (expected label|star)")
-    }
+    val comps = connectedComponentsStar(pairs, "id_a", "id_b")
+    releasePairs()
     val scored = df.select(col(idCol).as("id"), score.as("__score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("component"))
+    val w = Window.partitionBy(col("component"))
       .orderBy(col("__score").desc, col("id").asc)
     val losers = comps.join(scored, "id")
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") > 1)
       .select(col("id").as(idCol))
-      .localCheckpoint(true)
-    comps.unpersist(false)
-    releasePairs()
     df.join(losers, Seq(idCol), "left_anti")
   }
 

@@ -283,16 +283,13 @@ object PipelineQueries {
         .select(col("doc_id"))
     }),
 
-    // the SAME cluster dedup through the large/small-star connected
-    // components (O(log n) rounds on any graph — the adversarial-chain
-    // scale path) — pinned to the SAME recursive-CTE oracle as
-    // dedup_clusters: both CC algorithms must agree with DuckDB's
-    // transitive closure exactly
+    // the SAME cluster dedup as dedup_clusters, pinned to the SAME
+    // recursive-CTE oracle; kept as its own catalog query
     "dedup_clusters_star" -> ((s, dir) => {
       Dedup.dedupNearClusters(
           t(s, dir, "documents").select(col("doc_id"), col("text")),
           "doc_id", "text", shingle = 3, numHashes = 64, bands = 16,
-          threshold = 0.8, ccAlgorithm = "star")
+          threshold = 0.8)
         .select(col("doc_id"))
     }),
 

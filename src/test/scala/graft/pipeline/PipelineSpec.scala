@@ -386,7 +386,7 @@ class PipelineSpec extends AnyFunSuite {
   test("connectedComponents labels chains and cliques with the min id") {
     // components: {1,2,3,4} (chain), {10,11} (edge), {20} absent (no edges)
     val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("a", "b")
-    val comps = Dedup.connectedComponents(edges, "a", "b")
+    val comps = Dedup.connectedComponentsStar(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L))
@@ -677,31 +677,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(tie == 7L)
   }
 
-  test("connectedComponentsStar: long chain + parity with label propagation") {
-    // path graph 0-1-…-300 (diameter 300): min-label propagation's
-    // O(diameter) rounds cannot finish inside its default maxIters —
-    // exactly the adversarial shape the star variant exists for;
-    // large/small-star converges in O(log n) rounds
+  test("connectedComponentsStar: long chain + parity with a union-find oracle") {
+    // path graph 0-1-…-300 (diameter 300): min-label propagation would
+    // need 300 rounds; large/small-star converges in O(log n) rounds
     val chain = (0 until 300).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
     val comps = Dedup.connectedComponentsStar(chain, "a", "b")
     assert(comps.count() == 301)
     assert(comps.select("component").distinct().collect()
       .map(_.getLong(0)).toSeq == Seq(0L))
-    comps.unpersist()
-    // random multi-component graphs over several densities/seeds:
-    // star == min-label propagation == the ground truth both encode
+    // random multi-component graphs over several densities/seeds
     for ((seed, nEdges, nNodes) <- Seq((7, 200, 80), (13, 40, 100), (29, 400, 60))) {
       val rnd = new scala.util.Random(seed)
-      val edges = (0 until nEdges)
+      val pairs = (0 until nEdges)
         .map(_ => (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong))
-        .filter(e => e._1 != e._2).toDF("a", "b")
-      val star = Dedup.connectedComponentsStar(edges, "a", "b")
-      val prop = Dedup.connectedComponents(edges, "a", "b")
-      assert(star.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-        prop.collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
-        s"star != label propagation for seed=$seed")
-      star.unpersist()
-      prop.unpersist()
+        .filter(e => e._1 != e._2)
+      val star = Dedup.connectedComponentsStar(pairs.toDF("a", "b"), "a", "b")
+      assert(star.as[(Long, Long)].collect().toMap == UnionFind.labels(pairs),
+        s"star != union-find for seed=$seed")
     }
   }
 

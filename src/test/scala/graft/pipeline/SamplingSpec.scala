@@ -204,7 +204,7 @@ class SamplingSpec extends AnyFunSuite {
     assert(Sampling.deterministicSample(empty, col("doc_id"), 0.5, "s").count() == 0)
     assert(Sampling.stratifiedTopK(empty, col("text"), col("doc_id"), 3, "s").count() == 0)
     val emptyEdges = spark.emptyDataset[(Long, Long)].toDF("a", "b")
-    assert(Dedup.connectedComponents(emptyEdges, "a", "b").count() == 0)
+    assert(Dedup.connectedComponentsStar(emptyEdges, "a", "b").count() == 0)
     // empty eval set: nothing is contaminated, all train rows survive
     val train = Seq((1L, "some training document with enough tokens present here ok"))
       .toDF("doc_id", "text")
