@@ -49,9 +49,20 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
  *    the rule converges at the optimizer fixpoint.
  *
  * Built filters cache by (canonicalized-build-plan semanticHash, key
- * ordinal) with the same recursion-safe get/putIfAbsent discipline and
- * size cap as [[SpatialJoinRewrite]]'s cell-size cache (the build
- * action re-enters the optimizer).
+ * ordinal) on the rule INSTANCE, with a recursion-safe
+ * get → build outside the lock → putIfAbsent discipline (the build
+ * action re-enters the optimizer) and a size cap. A session built with
+ * GraftExtensions gets a fresh instance per optimizer run, so a filter
+ * lives for one query's optimization: the fixpoint iterations reuse
+ * it, the next query builds its own (`install`, for tests and
+ * interactive use, keeps one instance per session). That is on
+ * purpose, unlike the
+ * session-wide spatial-join planner state
+ * ([[graft.tools.SpatialJoin.plannerState]]), whose values change
+ * speed only. A Bloom filter is correct only for the exact key set it
+ * was built from, and a plan fingerprint does not see the data behind
+ * a scan change; a cache that outlives the query would need its own
+ * argument for why it cannot go stale.
  */
 case class BloomJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 

@@ -9,26 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, P
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** Bounded LRU cache for plan-keyed planner state: evicts the
-  * least-recently-USED entry instead of wiping wholesale, so a long
-  * interactive session cycling more than `cap` distinct plans never
-  * re-pays stats/detection jobs for the entries it is actively using.
-  * putIfAbsent semantics (first computed value wins) to match the
-  * recursion-safe get → compute-outside-the-lock → putIfAbsent
-  * pattern of the callers. */
-private[plans] final class LruCache[K, V](cap: Int) {
-  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-      this.size() > cap
-  }
-  def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
-  def putIfAbsent(k: K, v: V): Unit =
-    m.synchronized { if (!m.containsKey(k)) { m.put(k, v); () } }
-  private[plans] def size: Int = m.synchronized(m.size())
-  private[plans] def contains(k: K): Boolean =
-    m.synchronized(m.containsKey(k))
-}
-
 /**
  * Optimizer rule planning spatial joins automatically: a
  * `Join(left, right, condition = st_intersects(pointAttr, geomAttr))`
@@ -54,96 +34,57 @@ private[plans] final class LruCache[K, V](cap: Int) {
  * so those fall through to Catalyst's BNLJ, which remains correct.
  * The geometry×geometry arm plans Inner only.
  *
- * The grid cell edge length comes from `spark.graft.sjoin.cellSize`
- * (data units) when set: any value is correct — it only shifts the
- * candidate-blowup / selectivity balance. When UNSET, the rule derives
- * it from the geometry side's bbox statistics
- * ([[SpatialJoin.autoCellSize]]: 2x the median bbox edge via one
- * approxQuantile pass), the same data-derived default as the API path
- * — so a 100x scale-up with different geometry extents needs no
- * manual retuning. The stats pass runs once per rewritten join, at
- * planning time, over the build side only — and is a BATCH action, so
- * a STREAMING geometry side with no explicit cellSize conf is left
- * untouched. Extra conjuncts in the join condition are preserved (as
- * a residual filter for inner, inside the join condition for the
- * outer variants); non-attribute operands fall through untouched
- * (BNLJ remains the correct fallback).
+ * The grid cell edge length comes from [[SpatialJoin.cellSizeFor]],
+ * the resolver the API joins use too: `spark.graft.sjoin.cellSize`
+ * (data units) when set — any value is correct, it only shifts the
+ * candidate-blowup / selectivity balance — else 2x the median bbox
+ * edge of the geometry (build) side, one approxQuantile pass
+ * ([[SpatialJoin.autoCellSize]]), so a 100x scale-up with different
+ * geometry extents needs no manual retuning. (For geometry×geometry
+ * joins the API takes the max over both sides; the rule sizes from
+ * the build side alone.) The pass is a BATCH action, so a STREAMING
+ * geometry side with no explicit cellSize conf is left untouched.
+ * Extra conjuncts in the join condition are preserved (as a residual
+ * filter for inner, inside the join condition for the outer
+ * variants); non-attribute operands fall through untouched (BNLJ
+ * remains the correct fallback).
+ *
+ * The rule holds no state. What its planning-time passes learn (cell
+ * size, hot cells, small-input verdicts) lives in the session's
+ * [[SpatialJoin.plannerState]], keyed on the canonicalized side plan,
+ * for as long as the session lives: a side planned again by the
+ * fixed-point optimizer, by another action on the same DataFrame or by
+ * a later query of the session skips the pass. That matters because
+ * a session built with GraftExtensions hands every optimizer run a
+ * fresh rule instance. The cached values change speed only, never
+ * results.
  *
  * Skew: `spark.graft.sjoin.salt` > 1 salts the grid keys on both
  * arms; `spark.graft.sjoin.adaptiveSalt=true` additionally runs
- * hot-cell detection (one counting pass, cached per canonicalized
- * probe-side plan so the fixed-point optimizer never re-fires it) and
- * salts ONLY the dense cells — the planner twin of
+ * hot-cell detection (one counting pass per distinct probe-side plan
+ * in the session) and salts ONLY the dense cells — the planner twin of
  * `pointInGeom(adaptiveSalt = true)` / `geomJoin(adaptiveSalt =
  * true)`, with the same small-input gate
  * (`spark.graft.sjoin.adaptiveSalt.minBytes`). The gate is HONEST on
  * derived (non-scan) probe sides: plan byte stats over-count there
  * (products of children), so the rule falls back to CBO rowCount when
  * available and otherwise a bounded row probe
- * ([[SpatialJoin.smallInputSide]]), cached like detection. Streaming
+ * ([[SpatialJoin.smallInputSide]]), kept like detection. Streaming
  * probe sides skip detection (blanket salt) — plan-time batch jobs
  * are illegal there.
  */
 case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import SpatialJoinRewrite.MaxCached
-
-  private def confCellSize: Option[Double] =
-    spark.conf.getOption("spark.graft.sjoin.cellSize").map(_.toDouble)
-  // derived sizes cache keyed by a COMPACT fingerprint of the
-  // canonicalized geometry-side plan (semanticHash + schema), not the
-  // plan object itself — plan trees retain relations/file listings and
-  // would leak driver memory across a long interactive session. The
-  // rule re-runs on every action of the same DataFrame (and per join
-  // in a multi-join plan) — without the cache each would pay the
-  // autoCellSize stats job again at planning time.
-  private val derivedSizes = new LruCache[(Int, String), java.lang.Double](MaxCached)
-  /** Conf value if set, else the data-derived size from the geometry
-    * (build) side — matching `SpatialJoin.sjoin`'s cellSize <= 0 path.
-    * NOT computeIfAbsent-under-the-lock: the stats job runs a Spark
-    * action that re-enters this rule, so the compute happens outside
-    * the cache's lock (get → compute → putIfAbsent); the worst case
-    * is a rare duplicate stats job. */
-  private def cellSizeFor(geomSide: LogicalPlan, geomAttr: AttributeReference): Double =
-    confCellSize.getOrElse {
-      val canon = geomSide.canonicalized
-      val key = (canon.semanticHash(), canon.schema.catalogString)
-      derivedSizes.get(key) match {
-        case Some(v) => v.doubleValue()
-        case None =>
-          val v = SpatialJoin.autoCellSize(
-            Bridge.ofRows(spark, geomSide), Bridge.column(geomAttr))
-          derivedSizes.putIfAbsent(key, v)
-          v
-      }
-    }
   private def salt: Int =
     spark.conf.get("spark.graft.sjoin.salt", "1").toInt
 
-  // hot-cell detection results keyed like derivedSizes — a COMPACT
-  // fingerprint of the canonicalized PROBE-side plan (the `kind` tag
-  // separates the point detector from the exploded-cell geometry
-  // detector) plus every conf the detection depends on. The cache is
-  // what keeps the eager counting pass from re-firing inside the
-  // fixed-point optimizer (the rule re-runs per optimizer iteration
-  // and per action of the same DataFrame); same get → compute outside
-  // the lock → putIfAbsent recursion-safety story as derivedSizes
-  // (the detection job's own planning re-enters this rule, but its
-  // plan carries no spatial join, so it cannot recurse into
-  // detection).
-  private val derivedHotCells = new LruCache[
-    (String, Int, String, Long, String, String), Option[Seq[(Long, Long)]]](MaxCached)
-
-  // small-input verdicts that needed the bounded row PROBE (a batch
-  // job): cached so re-planning the same derived probe side never
-  // re-pays it. Stats-only verdicts are cheap and not cached.
-  private val derivedSmall = new LruCache[(Int, String, Long), java.lang.Boolean](MaxCached)
+  private def state = SpatialJoin.plannerState(spark)
 
   /** The honest small-input gate, planner side: stats verdicts
     * (rowCount / definitive small bytes / honest scan bytes) are
     * computed directly on the mid-optimization plan; only the bounded
-    * row probe materializes a DataFrame, and its verdict is cached
-    * per canonicalized plan. */
+    * row probe materializes a DataFrame, and its verdict is kept per
+    * canonicalized plan for the session. */
   private def smallFor(side: LogicalPlan): Boolean = {
     val minBytes = SpatialJoin.adaptiveMinBytes(spark)
     if (minBytes <= 0) false
@@ -152,13 +93,8 @@ case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       SpatialJoin.smallPlanVerdict(side, minBytes, minRows).getOrElse {
         val canon = side.canonicalized
         val key = (canon.semanticHash(), canon.schema.catalogString, minRows)
-        derivedSmall.get(key) match {
-          case Some(v) => v.booleanValue()
-          case None =>
-            val v = SpatialJoin.probeSmall(Bridge.ofRows(spark, side), minRows)
-            derivedSmall.putIfAbsent(key, java.lang.Boolean.valueOf(v))
-            v
-        }
+        state.smallVerdicts.getOrCompute(key)(java.lang.Boolean.valueOf(
+          SpatialJoin.probeSmall(Bridge.ofRows(spark, side), minRows))).booleanValue()
       }
     }
   }
@@ -169,18 +105,15 @@ case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   private def detectCached(kind: String, side: LogicalPlan, cellSize: Double,
                            run: org.apache.spark.sql.DataFrame => Option[Seq[(Long, Long)]])
       : Option[Seq[(Long, Long)]] = {
+    // every conf the detection depends on is part of the key; the
+    // detection job's own planning re-enters this rule, but its plan
+    // carries no spatial join, so it cannot recurse into detection
     val canon = side.canonicalized
     val key = (kind, canon.semanticHash(), canon.schema.catalogString,
       java.lang.Double.doubleToLongBits(cellSize),
       spark.conf.get("spark.graft.sjoin.hotCellFactor", "2.0"),
       spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    derivedHotCells.get(key) match {
-      case Some(v) => v
-      case None =>
-        val v = run(Bridge.ofRows(spark, side))
-        derivedHotCells.putIfAbsent(key, v)
-        v
-    }
+    state.hotCells.getOrCompute(key)(run(Bridge.ofRows(spark, side)))
   }
 
   /** Planner twin of the API paths' adaptive-salt engage logic, one
@@ -259,9 +192,9 @@ case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // autoCellSize is a plan-time batch job — a streaming build
         // side with no explicit cellSize conf cannot be rewritten
         case Some((_, bSide, _, _, _, _))
-            if confCellSize.isEmpty && bSide.isStreaming => j
+            if SpatialJoin.confCellSize(spark).isEmpty && bSide.isStreaming => j
         case Some((aSide, bSide, aKind, bKind, aAttr, bAttr)) =>
-          val cs = cellSizeFor(bSide, bAttr)
+          val cs = SpatialJoin.cellSizeFor(spark, bSide, bAttr)
           val (effSalt, hot) = adaptiveGeomFor(aSide, aAttr, cs, salt)
           val joined = SpatialJoin.geomGridInner(
             Bridge.ofRows(spark, aSide), Bridge.ofRows(spark, bSide),
@@ -319,9 +252,9 @@ case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             }
           sides match {
             case Some((_, gmSide))
-                if confCellSize.isEmpty && gmSide.isStreaming => j
+                if SpatialJoin.confCellSize(spark).isEmpty && gmSide.isStreaming => j
             case Some((ptSide, gmSide)) =>
-              val cs = cellSizeFor(gmSide, g)
+              val cs = SpatialJoin.cellSizeFor(spark, gmSide, g)
               val (effSalt, hot) = adaptiveFor(ptSide, p, cs, salt)
               val rewritten = jt match {
                 case Inner =>
@@ -361,7 +294,6 @@ case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 object SpatialJoinRewrite {
-  private[plans] val MaxCached = 64
   /** Install on an existing session (tests / interactive use); new
     * sessions get it via `spark.sql.extensions=graft.plans.GraftExtensions`. */
   def install(spark: SparkSession): Unit = {

@@ -2,9 +2,40 @@ package graft.tools
 
 import graft.Geo._
 import graft.geom.HilbertRtree
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructField}
+
+/** Bounded LRU cache for plan-keyed planner state: evicts the
+  * least-recently-USED entry instead of wiping wholesale, so a long
+  * interactive session cycling more than `cap` distinct plans never
+  * re-pays stats/detection jobs for the entries it is actively using.
+  * putIfAbsent semantics (first computed value wins) to match the
+  * recursion-safe get → compute-outside-the-lock → putIfAbsent
+  * pattern of [[getOrCompute]]. */
+private[graft] final class LruCache[K, V](cap: Int) {
+  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+      this.size() > cap
+  }
+  def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
+  def putIfAbsent(k: K, v: V): Unit =
+    m.synchronized { if (!m.containsKey(k)) { m.put(k, v); () } }
+  /** The cached value, else `v` computed OUTSIDE the lock and stored:
+    * the planning-time passes run Spark actions that re-enter the
+    * optimizer, which must not wait on a lock its caller holds. */
+  def getOrCompute(k: K)(v: => V): V = get(k).getOrElse {
+    val computed = v
+    putIfAbsent(k, computed)
+    computed
+  }
+  private[graft] def size: Int = m.synchronized(m.size())
+  private[graft] def contains(k: K): Boolean =
+    m.synchronized(m.containsKey(k))
+}
 
 /**
  * Spatial join (reference: tools/sjoin.py:26-133) re-expressed Spark-first.
@@ -66,14 +97,93 @@ object SpatialJoin {
     * cells while cells stay small enough to prune. approxQuantile is
     * the distributed Greenwald-Khanna sketch — one cheap pass, no
     * collect beyond the quantile itself. Degenerate inputs (all empty /
-    * point-sized bboxes) fall back to 1.0. */
-  def autoCellSize(geoms: DataFrame, geomCol: Column): Double = {
-    val b = st_bounds(geomCol)
-    val edge = greatest(b.getField("x1") - b.getField("x0"),
-      b.getField("y1") - b.getField("y0"))
-    val q = geoms.select(edge.as("__edge")).na.drop
-      .stat.approxQuantile("__edge", Array(0.5), 0.05)
-    if (q.isEmpty || q(0).isNaN || q(0) <= 0) 1.0 else q(0) * 2
+    * point-sized bboxes) fall back to 1.0. Joins reach it through
+    * [[cellSizeFor]], which caches the answer per session. */
+  def autoCellSize(geoms: DataFrame, geomCol: Column): Double =
+    describedAs(geoms.sparkSession, "sjoin: cell size") {
+      val b = st_bounds(geomCol)
+      val edge = greatest(b.getField("x1") - b.getField("x0"),
+        b.getField("y1") - b.getField("y0"))
+      val q = geoms.select(edge.as("__edge")).na.drop
+        .stat.approxQuantile("__edge", Array(0.5), 0.05)
+      if (q.isEmpty || q(0).isNaN || q(0) <= 0) 1.0 else q(0) * 2
+    }
+
+  /** Runs `f` with every Spark job it starts described as `pass` (so a
+    * planning-time pass is named in the UI and in job listeners), and
+    * restores the caller's description afterwards. */
+  private def describedAs[T](spark: SparkSession, pass: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(pass)
+    try f finally sc.setJobDescription(caller)
+  }
+
+  /** Planner state of one session: what the planning-time passes
+    * learned about a plan, so a geometry or point side planned again
+    * in the same session skips the pass. Every value changes speed
+    * only, never results: any cell size is correct, both sides of a
+    * join read the same hot-cell literals, and a small-input verdict
+    * only picks blanket salting over hot-cell salting. Keys are
+    * compact fingerprints of canonicalized plans (semanticHash +
+    * schema), never the plan trees, which would pin relations and
+    * file listings on the driver. */
+  private[graft] final class PlannerState {
+    /** (plan hash, schema, geometry column ordinal) → cell size. */
+    val cellSizes = new LruCache[(Int, String, Int), java.lang.Double](MaxCached)
+    /** (detector kind, plan hash, schema, cell size bits,
+      * hotCellFactor, shuffle partitions) → detected hot cells. */
+    val hotCells = new LruCache[
+      (String, Int, String, Long, String, String), Option[Seq[(Long, Long)]]](MaxCached)
+    /** (plan hash, schema, minRows) → the bounded row probe's verdict;
+      * stats-only verdicts are cheap and not cached. */
+    val smallVerdicts = new LruCache[(Int, String, Long), java.lang.Boolean](MaxCached)
+  }
+
+  private val MaxCached = 64
+
+  /** One [[PlannerState]] per live session, held weakly: a session
+    * that is dropped takes its state with it, and a new session (or a
+    * new SparkContext) starts cold. Optimizer rules cannot hold this
+    * state themselves: a session built with GraftExtensions hands each
+    * optimizer run a fresh rule instance. */
+  private val plannerStates = new java.util.WeakHashMap[SparkSession, PlannerState]()
+
+  private[graft] def plannerState(spark: SparkSession): PlannerState =
+    plannerStates.synchronized {
+      plannerStates.computeIfAbsent(spark, _ => new PlannerState)
+    }
+
+  private[graft] def confCellSize(spark: SparkSession): Option[Double] =
+    spark.conf.getOption("spark.graft.sjoin.cellSize").map(_.toDouble)
+
+  /** The one cell-size resolver of every grid join, planner rule and
+    * API alike: `spark.graft.sjoin.cellSize` when set, else
+    * [[autoCellSize]] of the geometry column `geom` of `plan`, computed
+    * once per session for each (canonicalized plan, column). A cache
+    * miss runs the pass as a batch job, so callers guard streaming
+    * plans first. The pass re-enters the optimizer, so it runs outside
+    * the cache's lock; the worst case is a rare duplicate pass. */
+  private[graft] def cellSizeFor(spark: SparkSession, plan: LogicalPlan,
+                                 geom: Attribute): Double =
+    confCellSize(spark).getOrElse {
+      val canon = plan.canonicalized
+      val key = (canon.semanticHash(), canon.schema.catalogString,
+        plan.output.indexWhere(_.exprId == geom.exprId))
+      plannerState(spark).cellSizes.getOrCompute(key)(
+        autoCellSize(Bridge.ofRows(spark, plan), Bridge.column(geom))).doubleValue()
+    }
+
+  /** [[cellSizeFor]] for a named column of a DataFrame: keyed on its
+    * analyzed plan, or on a one-column projection when the name is a
+    * nested field rather than an output attribute. */
+  private def cellSizeOf(df: DataFrame, geomCol: String): Double = {
+    val plan = df.queryExecution.analyzed
+    Bridge.expression(df(geomCol)) match {
+      case a: Attribute if plan.outputSet.contains(a) =>
+        cellSizeFor(df.sparkSession, plan, a)
+      case _ => cellSizeOf(df.select(df(geomCol).as("__geom")), "__geom")
+    }
   }
 
   /**
@@ -306,10 +416,11 @@ object SpatialJoin {
   /** The bounded row probe (step 5 above) — one batch job. Small iff
     * strictly fewer than minRows rows exist, matching the stats
     * verdict's `rowCount < minRows` ("inputs UNDER this many rows"). */
-  private[graft] def probeSmall(df: DataFrame, minRows: Long): Boolean = {
-    probeRuns.incrementAndGet()
-    df.select(lit(1).as("__one")).take(minRows.toInt).length < minRows
-  }
+  private[graft] def probeSmall(df: DataFrame, minRows: Long): Boolean =
+    describedAs(df.sparkSession, "sjoin: small-input probe") {
+      probeRuns.incrementAndGet()
+      df.select(lit(1).as("__one")).take(minRows.toInt).length < minRows
+    }
 
   /** The shared engage mapping (API paths AND the planner — one copy,
     * so the semantics cannot drift): no hot cell → unsalted is
@@ -370,9 +481,8 @@ object SpatialJoin {
     * it is bounded like the broadcast-join caps. None = nothing hot;
     * Some(empty) = cap exceeded (degenerate guard: blanket salting
     * stays correct, never an error). */
-  private def hotFromCounts(counts0: DataFrame,
-                            spark: org.apache.spark.sql.SparkSession)
-      : Option[Seq[(Long, Long)]] = {
+  private def hotFromCounts(counts0: DataFrame, spark: SparkSession)
+      : Option[Seq[(Long, Long)]] = describedAs(spark, "sjoin: hot cells") {
     val factor = spark.conf
       .get("spark.graft.sjoin.hotCellFactor", "2.0").toDouble
     require(factor > 0, "spark.graft.sjoin.hotCellFactor must be > 0")
@@ -467,9 +577,9 @@ object SpatialJoin {
   /**
    * Name-based geometry × geometry join with inner/left/right variants —
    * the [[pointInGeom]] API shape for two geometry sides. `cellSize <= 0`
-   * derives the grid from the data: the max of both sides' median bbox
-   * edges (cells must be at least typical-bbox-sized on BOTH sides or
-   * the bigger side's explode blows up).
+   * takes the max of both sides' [[cellSizeFor]] (cells must be at least
+   * typical-bbox-sized on BOTH sides or the bigger side's explode blows
+   * up); the planner rule sizes from the build side alone.
    */
   def geomJoin(left: DataFrame, right: DataFrame,
                leftCol: String, leftKind: String,
@@ -479,8 +589,7 @@ object SpatialJoin {
                salt: Int = 1, adaptiveSalt: Boolean = false,
                adaptiveMinBytesOverride: Long = -1L): DataFrame = {
     val cs = if (cellSize > 0) cellSize
-             else math.max(autoCellSize(left, left(leftCol)),
-                           autoCellSize(right, right(rightCol)))
+             else math.max(cellSizeOf(left, leftCol), cellSizeOf(right, rightCol))
     // adaptive skew handling, mirroring pointInGeom: detect hot cells
     // on the LEFT (probe) side's EXPLODED cell keys and salt only
     // those. Same eager-by-design caveat and small-input gate
@@ -885,16 +994,18 @@ object SpatialJoin {
     * `spark.graft.sjoin.adaptiveSalt.minBytes` (default 32 MB of
     * plan-stats bytes) the counting pass cannot pay for itself and
     * blanket salting is used — so `adaptiveSalt = true` is safe to
-    * leave on as a default. */
+    * leave on as a default.
+    *
+    * `cellSize <= 0` resolves through [[cellSizeFor]], like the
+    * planner rule: `spark.graft.sjoin.cellSize` when set, else derived
+    * from the geometry side once per session. */
   def pointInGeom(points: DataFrame, geoms: DataFrame,
                   pointCol: String, geomCol: String, geomKind: String,
                   cellSize: Double = 0, how: String = "inner",
                   leftKey: String = null, rightKey: String = null,
                   salt: Int = 1, adaptiveSalt: Boolean = false,
                   adaptiveMinBytesOverride: Long = -1L): DataFrame = {
-    // cellSize <= 0 = derive from the data (median bbox edge)
-    val cs = if (cellSize > 0) cellSize
-             else autoCellSize(geoms, geoms(geomCol))
+    val cs = if (cellSize > 0) cellSize else cellSizeOf(geoms, geomCol)
     // adaptiveMinBytesOverride >= 0 replaces the session conf for this
     // call only — catalog queries and tests that force (or suppress)
     // detection no longer mutate session-global state to do it

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.tools.LruCache
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The planner caches' eviction contract (r16 verdict #5): a cap hit
