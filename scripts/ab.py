@@ -1,0 +1,130 @@
+#!/usr/bin/env python3
+"""Same-window A/B of one benchmark workload between two checkouts.
+
+    python3 scripts/ab.py run <parent-dir> <change-dir> <workload> <seeds> <out.jsonl>
+    python3 scripts/ab.py summary <out.jsonl> [<BENCHMARK.json>]
+
+`run` takes the benchmark command and run length from each checkout's own
+BENCHMARK.json and runs it there, untraced, once per seed and side.
+Pairs alternate the order: pair 0 runs the parent first, pair 1 the change
+first, and so on. `<seeds>` is a range ("1-10") or a list ("1,4,7"). Each
+run appends one JSON line: side, workload, seed, pair and either the
+benchmark's result line or, for a run that failed, its exit code and the
+tail of its stderr. A failed run does not stop the A/B. `summary` runs at
+the end of `run` as well.
+
+`summary` prints, for every end-to-end metric of BENCHMARK.json, over the
+pairs where both sides produced a result: each side's median and
+quartiles, the change/parent ratio, the change's wins, and the verdict
+of the claim rule. The rule holds when the change is better on at least
+nine of every ten pairs and its median beats the parent's by more than
+the parent's inter-quartile range. A metric worse than the parent's by
+more than its bound, or a side whose IQR exceeds the bound, is flagged.
+
+Each side must be a fresh `git clone` (never a `cp -r` of a built
+checkout: the copy would reuse the original's build directory).
+"""
+import json
+import math
+import os
+import statistics
+import subprocess
+import sys
+
+
+def seeds_of(spec):
+    if "-" in spec:
+        lo, hi = spec.split("-", 1)
+        return list(range(int(lo), int(hi) + 1))
+    return [int(s) for s in spec.split(",") if s]
+
+
+def bench_command(root, workload, seed):
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    return bench["command"] + ["--workload", workload, "--seed", str(seed),
+                               "--seconds", str(bench["run_seconds"]), "--trace", "0"]
+
+
+def run(parent, change, workload, seeds, out):
+    for pair, seed in enumerate(seeds_of(seeds)):
+        sides = [("parent", parent), ("change", change)]
+        for side, root in (sides if pair % 2 == 0 else sides[::-1]):
+            p = subprocess.run(bench_command(root, workload, seed), cwd=root,
+                               capture_output=True, text=True)
+            row = {"side": side, "workload": workload, "seed": seed, "pair": pair}
+            lines = p.stdout.strip().splitlines()
+            try:
+                if p.returncode != 0:
+                    raise ValueError
+                row["result"] = json.loads(lines[-1])
+            except (ValueError, IndexError):
+                row["error"] = {"code": p.returncode, "stderr_tail": p.stderr[-2000:]}
+                print(f"[ab] {side} seed {seed} failed with code {p.returncode}",
+                      file=sys.stderr, flush=True)
+            with open(out, "a") as f:
+                f.write(json.dumps(row) + "\n")
+
+
+def quartiles(v):
+    if len(v) == 1:
+        return v[0], v[0], v[0]
+    q1, med, q3 = statistics.quantiles(v, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def summary(path, bench_path):
+    with open(bench_path) as f:
+        metrics = json.load(f)["end_to_end"]
+    rows = [json.loads(l) for l in open(path) if l.strip()]
+    failed = [r for r in rows if "error" in r]
+    done = [r for r in rows if "result" in r]
+    wrong = sum(r["result"]["failed"] for r in done)
+    print(f"runs {len(rows)}  failed runs {len(failed)}  "
+          f"ops attempted {sum(r['result']['attempted'] for r in done)}  ops failed {wrong}  "
+          f"all correct {all(r['result']['correct'] for r in done)}")
+    for r in failed:
+        tail = r["error"]["stderr_tail"].strip().splitlines()[-1:] or [""]
+        print(f"  failed: {r['side']} seed {r['seed']} code {r['error']['code']}: {tail[0]}")
+    by = {}
+    for r in done:
+        by.setdefault((r["workload"], r["seed"]), {})[r["side"]] = r["result"]["metrics"]
+    pairs = [v for _, v in sorted(by.items()) if len(v) == 2]
+    print(f"complete pairs {len(pairs)}")
+    if not pairs:
+        return
+    for m in metrics:
+        name, higher, bound = m["name"], m["better"] == "higher", m["bound"]
+        P = [p["parent"][name]["value"] for p in pairs]
+        C = [p["change"][name]["value"] for p in pairs]
+        wins = sum((c > p) if higher else (c < p) for p, c in zip(P, C))
+        p1, pm, p3 = quartiles(P)
+        c1, cm, c3 = quartiles(C)
+        gap = (cm - pm) if higher else (pm - cm)
+        claim = wins >= math.ceil(0.9 * len(P)) and gap > p3 - p1
+        worse = -gap / pm if pm else 0.0
+        flags = []
+        if worse > bound:
+            flags.append(f"WORSE by {worse:.1%} > bound {bound}")
+        for side, (q1, med, q3) in (("parent", (p1, pm, p3)), ("change", (c1, cm, c3))):
+            if med and (q3 - q1) / med > bound:
+                flags.append(f"{side} IQR {(q3 - q1) / med:.1%} > bound {bound}")
+        print(f"{name:17s} parent {pm:10.1f} [{p1:.1f}, {p3:.1f}]  "
+              f"change {cm:10.1f} [{c1:.1f}, {c3:.1f}]  ratio {cm / pm if pm else float('nan'):.3f}  "
+              f"wins {wins}/{len(P)}  claim {'holds' if claim else 'does not hold'}"
+              + ("  " + "; ".join(flags) if flags else ""))
+
+
+def main(argv):
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if len(argv) == 6 and argv[0] == "run":
+        run(*argv[1:6])
+        summary(argv[5], os.path.join(argv[1], "BENCHMARK.json"))
+    elif len(argv) in (2, 3) and argv[0] == "summary":
+        summary(argv[1], argv[2] if len(argv) == 3 else os.path.join(here, "BENCHMARK.json"))
+    else:
+        raise SystemExit(__doc__)
+
+
+if __name__ == "__main__":
+    main(sys.argv[1:])

@@ -2,6 +2,7 @@ package graft.io
 
 import graft.Geo._
 import graft.api.GeoFrame
+import graft.tools.Jobs.describedAs
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
@@ -344,12 +345,12 @@ object GeoParquet {
       .groupBy(_._2)
       .map { case (cs, fs) => cs -> fs.map(_._1) }
     val withPartial = partialGroups.foldLeft(trusted) { case (acc, (cs, fs)) =>
-      mergeSidecarBounds(acc, numericBoundsPerFile(
-        spark.read.parquet(fs.map(f => s"$path/$f").toSeq: _*), cs))
+      mergeSidecarBounds(acc, describedAs(spark, "lake: bounds scan")(
+        numericBoundsPerFile(readFiles(spark, path, fs), cs)))
     }
     if (fallback.isEmpty) withPartial
-    else mergeSidecarBounds(withPartial, numericBoundsPerFile(
-      spark.read.parquet(fallback.map(f => s"$path/$f").toSeq: _*), cols))
+    else mergeSidecarBounds(withPartial, describedAs(spark, "lake: bounds scan")(
+      numericBoundsPerFile(readFiles(spark, path, fallback.toSeq), cols)))
   }
 
   /** [[boundsPerFile]] for POINT-geometry columns over known file names
@@ -408,8 +409,8 @@ object GeoParquet {
         f -> Array(rows.toDouble, rows.toDouble, rows.toDouble, rows.toDouble)
       }.toMap)
     if (fallback.isEmpty) trusted
-    else mergeSidecarBounds(trusted, boundsPerFile(spark.read.parquet(
-      fallback.map(f => s"$path/$f").toSeq: _*), geomCols))
+    else mergeSidecarBounds(trusted, describedAs(spark, "lake: bounds scan")(
+      boundsPerFile(readFiles(spark, path, fallback.toSeq), geomCols)))
   }
 
   /** One file's (rowCount, per-LEAF (min, max)) from its parquet
@@ -439,71 +440,125 @@ object GeoParquet {
     * count (block metadata — exact regardless of stats trust) plus each
     * requested leaf's bounds, `None` per leaf whose statistics are not
     * trusted — the caller scans ONLY those. Overall None only when the
-    * file fails `schemaOk`. */
+    * file fails `schemaOk`. The footer comes from [[footer]], so it is
+    * read with the options of `conf` (the session's Hadoop conf). */
   private def footerFileStatsPartial(conf: Configuration, file: HadoopPath,
       leaves: Seq[String],
       schemaOk: org.apache.parquet.schema.MessageType => Boolean = _ => true)
       : Option[(Long, Map[String, Option[(Double, Double)]])] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      if (!schemaOk(reader.getFooter.getFileMetaData.getSchema)) return None
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rowCount = blocks.map(_.getRowCount).sum
-      if (rowCount == 0) return Some((0L, Map.empty))
+    val meta = footer(conf, file)
+    if (!schemaOk(meta.getFileMetaData.getSchema)) return None
+    val blocks = meta.getBlocks.asScala.toSeq
+    val rowCount = blocks.map(_.getRowCount).sum
+    if (rowCount == 0) return Some((0L, Map.empty))
 
-      def leafStats(c: String): Option[(Double, Double)] = {
-        var mn = Double.PositiveInfinity
-        var mx = Double.NegativeInfinity
-        var nonNull = 0L
-        blocks.foreach { b =>
-          val cc = b.getColumns.asScala
-            .find(_.getPath.toDotString == c)
-            .getOrElse(return None)
-          val pt = cc.getPrimitiveType
-          val floating = pt.getPrimitiveTypeName match {
-            case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE => true
-            case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 => false
-            case _ => return None
-          }
-          pt.getLogicalTypeAnnotation match {
-            case null => ()
-            case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-              if i.isSigned => ()
-            case _ => return None
-          }
-          val st = cc.getStatistics
-          if (st == null || !st.isNumNullsSet) return None
-          val chunkNonNull = cc.getValueCount - st.getNumNulls
-          if (chunkNonNull > 0) {
-            if (!st.hasNonNullValue) return None
-            // NaN from toD means either an unexpected stats box (defense
-            // — the physical-type gate above should make it impossible)
-            // or a stored floating NaN: both distrust the footer
-            def toD(v: Any): Double = v match {
-              case d: java.lang.Double => d.doubleValue()
-              case f: java.lang.Float => f.doubleValue()
-              case l: java.lang.Long => l.doubleValue()
-              case i: java.lang.Integer => i.doubleValue()
-              case _ => Double.NaN
-            }
-            val cmn = toD(st.genericGetMin)
-            val cmx = toD(st.genericGetMax)
-            if (cmn.isNaN || cmx.isNaN ||
-                (floating && (cmn == 0.0 || cmx == 0.0))) return None
-            nonNull += chunkNonNull
-            if (cmn < mn) mn = cmn
-            if (cmx > mx) mx = cmx
-          }
+    def leafStats(c: String): Option[(Double, Double)] = {
+      var mn = Double.PositiveInfinity
+      var mx = Double.NegativeInfinity
+      var nonNull = 0L
+      blocks.foreach { b =>
+        val cc = b.getColumns.asScala
+          .find(_.getPath.toDotString == c)
+          .getOrElse(return None)
+        val pt = cc.getPrimitiveType
+        val floating = pt.getPrimitiveTypeName match {
+          case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE => true
+          case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 => false
+          case _ => return None
         }
-        Some(if (nonNull == 0) (Double.NaN, Double.NaN) else (mn, mx))
+        pt.getLogicalTypeAnnotation match {
+          case null => ()
+          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
+            if i.isSigned => ()
+          case _ => return None
+        }
+        val st = cc.getStatistics
+        if (st == null || !st.isNumNullsSet) return None
+        val chunkNonNull = cc.getValueCount - st.getNumNulls
+        if (chunkNonNull > 0) {
+          if (!st.hasNonNullValue) return None
+          // NaN from toD means either an unexpected stats box (defense
+          // — the physical-type gate above should make it impossible)
+          // or a stored floating NaN: both distrust the footer
+          def toD(v: Any): Double = v match {
+            case d: java.lang.Double => d.doubleValue()
+            case f: java.lang.Float => f.doubleValue()
+            case l: java.lang.Long => l.doubleValue()
+            case i: java.lang.Integer => i.doubleValue()
+            case _ => Double.NaN
+          }
+          val cmn = toD(st.genericGetMin)
+          val cmx = toD(st.genericGetMax)
+          if (cmn.isNaN || cmx.isNaN ||
+              (floating && (cmn == 0.0 || cmx == 0.0))) return None
+          nonNull += chunkNonNull
+          if (cmn < mn) mn = cmn
+          if (cmx > mx) mx = cmx
+        }
       }
+      Some(if (nonNull == 0) (Double.NaN, Double.NaN) else (mn, mx))
+    }
 
-      Some((rowCount, leaves.map(c => c -> leafStats(c)).toMap))
-    } finally reader.close()
+    Some((rowCount, leaves.map(c => c -> leafStats(c)).toMap))
+  }
+
+  /** The parquet footer of `file`, the one footer open of the lake (the
+    * stats path above and the schema of [[readFiles]]). Its read options
+    * are built from `conf`, the caller's session Hadoop conf, so
+    * session-level `parquet.*` read settings apply. The
+    * `ParquetFileReader.open(InputFile)` overload would build them from
+    * a fresh default Configuration instead: about 10 ms per open, and
+    * blind to the session's settings. */
+  private[graft] def footer(conf: Configuration, file: HadoopPath)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Reads exactly the data files `names` under `path`: the lake's one
+    * explicit-file read. The schema is what Spark's own inference would
+    * give for the same list under the session's SQLConf, but it is
+    * taken from footers on the driver, so no schema-inference job runs
+    * and planning the read starts no Spark job:
+    *  - normally from the footer of the first name by path, which is
+    *    the file Spark's inference reads (it sorts the files by path);
+    *  - with `spark.sql.parquet.mergeSchema=true`, every listed
+    *    footer's schema folded in that order with StructType.merge under
+    *    the session's case sensitivity, as Spark's merging inference
+    *    folds them.
+    * An empty `names` reads zero rows with the schema of `listing` (the
+    * pinned listing the selection was pruned from); only when that is
+    * empty too does the whole directory supply it, through Spark's
+    * listing and inference. */
+  private[graft] def readFiles(spark: SparkSession, path: String,
+      names: Seq[String], listing: Seq[String] = Nil): DataFrame = {
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val schemaFiles = (if (names.nonEmpty) names else listing).sorted
+    if (schemaFiles.isEmpty) return spark.read.parquet(path).limit(0)
+    val conf = spark.sessionState.newHadoopConf()
+    val sqlConf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(sqlConf)
+    def schemaOf(f: String) = {
+      val p = new HadoopPath(s"$path/$f")
+      ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer(conf, p)), converter)
+    }
+    val schema =
+      if (sqlConf.isParquetSchemaMergingEnabled)
+        schemaFiles.map(schemaOf).reduceLeft(
+          Bridge.mergeSchema(_, _, sqlConf.caseSensitiveAnalysis))
+      else schemaOf(schemaFiles.head)
+    val reader = spark.read.schema(schema)
+    if (names.nonEmpty) reader.parquet(names.map(f => s"$path/$f"): _*)
+    else reader.parquet(s"$path/${schemaFiles.head}").limit(0)
   }
 
   /** Append a batch to a [[packZOrderToParquet]] dataset and update the
@@ -552,7 +607,8 @@ object GeoParquet {
     val root = new HadoopPath(path)
     val fs = root.getFileSystem(conf)
     val before = listDataFiles(fs, root).toSet
-    val staged = stageInto(batch, root, fs)
+    val staged = describedAs(spark, "lake: stage append")(
+      stageInto(batch, root, fs))
     if (staged.nonEmpty) {
       val boundsAll = boundsFn(staged)
       // 0-row parts never enter the dataset (see [[dropEmptyNewFiles]]);
@@ -1101,7 +1157,7 @@ object GeoParquet {
     val snapshotGen = st.currentGen
     val live = st.liveAt(snapshotGen)
     require(live.nonEmpty, s"empty current snapshot at $path")
-    val df = spark.read.parquet(live.map(f => s"$path/$f"): _*)
+    val df = readFiles(spark, path, live)
     require(!df.columns.contains(ZCodeCol),
       s"input column collides with reserved name $ZCodeCol")
     val missing = cols.filterNot(df.columns.contains)
@@ -1116,9 +1172,9 @@ object GeoParquet {
     // rewrite output is marked by name (see [[RewritePrefix]]): until
     // the tombstoning commit lands these files duplicate live rows,
     // and the marker is what lets a racing reader drop them
-    val staged = stageInto(
+    val staged = describedAs(spark, "lake: compact")(stageInto(
       zSortedFrame(df, cols, numPartitions, bitsPerCol), root, fs,
-      prefix = RewritePrefix)
+      prefix = RewritePrefix))
     val liveSet = live.toSet
     // the abort cleanup below must only touch files still on disk:
     // the 0-row-part drop deletes some staged files pre-commit, so
@@ -1382,8 +1438,7 @@ object GeoParquet {
             }
           case _ => fl
         }
-        if (keep.isEmpty) spark.read.parquet(path).limit(0)
-        else spark.read.parquet(keep.map(f => s"$path/$f"): _*)
+        readFiles(spark, path, keep, fl)
     }
     norm.foldLeft(df) { case (d, (c, lo, hi)) =>
       // NaN bounds (e.g. min/max of an empty aggregate) match nothing,
@@ -2208,7 +2263,17 @@ object GeoParquet {
     * `bounds` (x0, y0, x1, y1). Mirrors read_parquet_dask's partition
     * filtering: file-level pruning only, no residual row filter
     * (reference: io/parquet.py:411-446). Falls back to a plain read when
-    * no sidecar exists. */
+    * no sidecar exists.
+    *
+    * A dataset with a manifest, and a bounded read pruned by a sidecar,
+    * read the pinned, reconciled file list through [[readFiles]]: the
+    * schema comes from a footer on the driver (merged over the listed
+    * footers under `spark.sql.parquet.mergeSchema`), so planning the
+    * read runs no Spark job. A pruned-empty selection reads zero rows
+    * with the schema of the pinned listing. Directory reads (no
+    * manifest, or a non-flat layout) keep Spark's own listing and
+    * schema inference, which runs one job, because they need partition
+    * discovery. */
   def read(spark: SparkSession, path: String, geomCol: String, kind: String,
            bounds: Option[(Double, Double, Double, Double)] = None): GeoFrame = {
     val conf = spark.sessionState.newHadoopConf()
@@ -2238,8 +2303,7 @@ object GeoParquet {
     // layouts (manifests only ever name flat files)
     def unprunedRead(): DataFrame =
       if (stOpt.isEmpty || listed.isEmpty) spark.read.parquet(path)
-      else if (current.isEmpty) spark.read.parquet(path).limit(0)
-      else spark.read.parquet(current.map(f => s"$path/$f"): _*)
+      else readFiles(spark, path, current, listed)
     val df = (normBounds, sidecarText) match {
       case (Some((qx0, qy0, qx1, qy1)), Some(text)) =>
         val perFile = parseSidecar(text, geomCol)
@@ -2261,8 +2325,7 @@ object GeoParquet {
           // subdir layout someone attached a sidecar to) — degrade to
           // the full read, never to zero rows
           if (listed.isEmpty) spark.read.parquet(path)
-          else if (keep.isEmpty) spark.read.parquet(path).limit(0)
-          else spark.read.parquet(keep.map(f => s"$path/$f"): _*)
+          else readFiles(spark, path, keep, listed)
         }
       case _ => unprunedRead()
     }

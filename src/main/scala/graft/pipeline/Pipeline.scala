@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.functions._
+import graft.tools.Jobs.describedAs
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1064,27 +1065,24 @@ object Dedup {
       small.select(when(v === col("__m"), u).otherwise(v).as("__u"), col("__m").as("__v"))
     }
 
-    val sc = edges.sparkSession.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    try {
-      var e = edges.where(col(aCol).isNotNull && col(bCol).isNotNull)
-        .select(col(aCol).cast("long").as("__u"), col(bCol).cast("long").as("__v"))
-      var unfinished = 1L
-      var i = 0
-      while (unfinished > 0) {
-        if (i == maxIters) throw new IllegalStateException(
-          s"connectedComponentsStar: no fixpoint after $maxIters rounds " +
-            s"(${e.count()} edges left); raise maxIters")
-        i += 1
-        sc.setJobDescription(s"connectedComponentsStar: round $i")
+    var e = edges.where(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(col(aCol).cast("long").as("__u"), col(bCol).cast("long").as("__v"))
+    var unfinished = 1L
+    var i = 0
+    while (unfinished > 0) {
+      if (i == maxIters) throw new IllegalStateException(
+        s"connectedComponentsStar: no fixpoint after $maxIters rounds " +
+          s"(${e.count()} edges left); raise maxIters")
+      i += 1
+      describedAs(edges.sparkSession, s"connectedComponentsStar: round $i") {
         val probe = Observation()
         e = round(e, probe).localCheckpoint(true)
         // no metric when the optimizer proved the round's input empty and
         // pruned the probe's subtree: nothing is unfinished then
         unfinished = probe.get.getOrElse("unfinished", 0L).asInstanceOf[Long]
       }
-      e.select(u.as("id"), v.as("component"))
-    } finally sc.setJobDescription(callerDescription)
+    }
+    e.select(u.as("id"), v.as("component"))
   }
 
   /**

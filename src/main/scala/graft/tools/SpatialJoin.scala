@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.Geo._
 import graft.geom.HilbertRtree
+import graft.tools.Jobs.describedAs
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -108,16 +109,6 @@ object SpatialJoin {
         .stat.approxQuantile("__edge", Array(0.5), 0.05)
       if (q.isEmpty || q(0).isNaN || q(0) <= 0) 1.0 else q(0) * 2
     }
-
-  /** Runs `f` with every Spark job it starts described as `pass` (so a
-    * planning-time pass is named in the UI and in job listeners), and
-    * restores the caller's description afterwards. */
-  private def describedAs[T](spark: SparkSession, pass: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val caller = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(pass)
-    try f finally sc.setJobDescription(caller)
-  }
 
   /** Planner state of one session: what the planning-time passes
     * learned about a plan, so a geometry or point side planned again

@@ -17,6 +17,13 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark), plan)
 
+  /** `a` merged with `b` the way Spark's parquet schema merging folds
+    * file schemas (StructType.merge is private[sql]). */
+  def mergeSchema(a: org.apache.spark.sql.types.StructType,
+                  b: org.apache.spark.sql.types.StructType,
+                  caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
+
   /** Register a SQL function builder under the given name. */
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit = {
