@@ -3,6 +3,7 @@
 
     python3 scripts/ab.py run <parent-dir> <change-dir> <workload> <seeds> <out.jsonl>
     python3 scripts/ab.py summary <out.jsonl> [<BENCHMARK.json>]
+    python3 scripts/ab.py trace <parent-dir> <change-dir> <workload> <seed> <out.json>
 
 `run` takes the benchmark command and run length from each checkout's own
 BENCHMARK.json and runs it there, untraced, once per seed and side.
@@ -20,6 +21,12 @@ of the claim rule. The rule holds when the change is better on at least
 nine of every ten pairs and its median beats the parent's by more than
 the parent's inter-quartile range. A metric worse than the parent's by
 more than its bound, or a side whose IQR exceeds the bound, is flagged.
+
+`trace` runs the same command with `--trace 1` once in each checkout, back
+to back (parent first), and writes one JSON object: workload, seed, the
+command line, and each side's result line (or its exit code and stderr
+tail) under "parent" and "change", so the per-layer metrics of both
+sides come from the same window.
 
 Each side must be a fresh `git clone` (never a `cp -r` of a built
 checkout: the copy would reuse the original's build directory).
@@ -39,31 +46,47 @@ def seeds_of(spec):
     return [int(s) for s in spec.split(",") if s]
 
 
-def bench_command(root, workload, seed):
+def bench_command(root, workload, seed, trace=0):
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         bench = json.load(f)
     return bench["command"] + ["--workload", workload, "--seed", str(seed),
-                               "--seconds", str(bench["run_seconds"]), "--trace", "0"]
+                               "--seconds", str(bench["run_seconds"]), "--trace", str(trace)]
+
+
+def run_once(side, root, workload, seed, trace=0):
+    """{"result": <the benchmark's JSON line>} or {"error": {code, stderr_tail}}."""
+    p = subprocess.run(bench_command(root, workload, seed, trace), cwd=root,
+                       capture_output=True, text=True)
+    lines = p.stdout.strip().splitlines()
+    try:
+        if p.returncode != 0:
+            raise ValueError
+        return {"result": json.loads(lines[-1])}
+    except (ValueError, IndexError):
+        print(f"[ab] {side} seed {seed} failed with code {p.returncode}",
+              file=sys.stderr, flush=True)
+        return {"error": {"code": p.returncode, "stderr_tail": p.stderr[-2000:]}}
 
 
 def run(parent, change, workload, seeds, out):
     for pair, seed in enumerate(seeds_of(seeds)):
         sides = [("parent", parent), ("change", change)]
         for side, root in (sides if pair % 2 == 0 else sides[::-1]):
-            p = subprocess.run(bench_command(root, workload, seed), cwd=root,
-                               capture_output=True, text=True)
             row = {"side": side, "workload": workload, "seed": seed, "pair": pair}
-            lines = p.stdout.strip().splitlines()
-            try:
-                if p.returncode != 0:
-                    raise ValueError
-                row["result"] = json.loads(lines[-1])
-            except (ValueError, IndexError):
-                row["error"] = {"code": p.returncode, "stderr_tail": p.stderr[-2000:]}
-                print(f"[ab] {side} seed {seed} failed with code {p.returncode}",
-                      file=sys.stderr, flush=True)
+            row.update(run_once(side, root, workload, seed))
             with open(out, "a") as f:
                 f.write(json.dumps(row) + "\n")
+
+
+def trace(parent, change, workload, seed, out):
+    doc = {"workload": workload, "seed": int(seed),
+           "command": " ".join(bench_command(parent, workload, seed, 1))}
+    for side, root in (("parent", parent), ("change", change)):
+        r = run_once(side, root, workload, seed, 1)
+        doc[side] = r.get("result", r)
+    with open(out, "w") as f:
+        json.dump(doc, f, indent=1)
+        f.write("\n")
 
 
 def quartiles(v):
@@ -120,6 +143,8 @@ def main(argv):
     if len(argv) == 6 and argv[0] == "run":
         run(*argv[1:6])
         summary(argv[5], os.path.join(argv[1], "BENCHMARK.json"))
+    elif len(argv) == 6 and argv[0] == "trace":
+        trace(*argv[1:6])
     elif len(argv) in (2, 3) and argv[0] == "summary":
         summary(argv[1], argv[2] if len(argv) == 3 else os.path.join(here, "BENCHMARK.json"))
     else:

@@ -2,10 +2,14 @@ package graft.pipeline
 
 import graft.functions._
 import graft.tools.Jobs.describedAs
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+
+import scala.collection.mutable
 
 /**
  * Large-scale training-data pipeline operators: deduplication families,
@@ -1011,7 +1015,10 @@ object Dedup {
    *   large-star: every node u re-attaches its LARGER neighbors to
    *     m = min(N(u) ∪ {u});
    *   small-star: every node u (edges canonicalized smaller<-larger)
-   *     re-attaches its smaller neighbors AND itself to their minimum.
+   *     re-attaches its smaller neighbors AND itself to their minimum;
+   *   contraction: a union-find over each partition's small-star output
+   *     re-attaches every node to the minimum of its component within
+   *     that partition (a narrow `mapPartitions`, see [[contractPartition]]).
    *
    * A round is one localCheckpoint job over two keyed exchanges (3 Spark
    * jobs under AQE: two shuffle stages and the result stage). Each star
@@ -1021,23 +1028,33 @@ object Dedup {
    * of very high degree costs only its edge rows, never a collected
    * neighborhood. Large-star's exchange on the center also deduplicates
    * the symmetric edges for free (hash(__u) already clusters (__u, __v)).
+   * The contraction holds one `LongMap` entry per distinct id of its
+   * partition (plus one per self row), so a round's task memory is
+   * linear in the ids of its partition.
    *
-   * The convergence probe rides the same job as an [[Observation]] on
-   * large-star's window: the number of nodes with a smaller neighbor and
-   * degree > 1. It is zero exactly when the round's INPUT is a forest of
-   * stars centered on their minima, the fixpoint. The round that finds
-   * it reproduces that forest unchanged, so it is the confirming round
-   * that a test comparing consecutive edge sets also pays.
+   * Two rules stop the loop, both read without a job:
+   *   - the round's checkpoint has one partition (AQE coalesced the small
+   *     input): its union-find saw every edge, so its output already is
+   *     the label set;
+   *   - otherwise the convergence probe, an [[Observation]] on large-star's
+   *     window in the same job: the number of nodes with a smaller neighbor
+   *     and degree > 1. It is zero exactly when the round's INPUT is a
+   *     forest of stars centered on their minima, the fixpoint. The round
+   *     that finds it reproduces that forest unchanged (the contraction
+   *     is the identity on it), so it is the confirming round that a test
+   *     comparing consecutive edge sets also pays.
    *
    * Every round also emits one self row (r, r) per local minimum r; the
-   * next round drops it before the stars. At the fixpoint the output is
+   * next round drops it before the stars. At either stop the output is
    * then exactly {(leaf, root)} ∪ {(root, root)}: the labels, with no
    * further job. Returns (id, component) as a projection of that
-   * checkpoint (`unpersist()` is a harmless no-op on it). Jobs carry the
-   * description "connectedComponentsStar: round <k>"; the caller's
-   * description is restored on return. Throws IllegalStateException when
-   * `maxIters` rounds pass without reaching the fixpoint, rather than
-   * return split components.
+   * checkpoint, the only one still persisted: each round releases the
+   * previous round's checkpoint (never the caller's input) once its own
+   * is written. Jobs carry the description
+   * "connectedComponentsStar: round <k>"; the caller's description is
+   * restored on return. Throws IllegalStateException when `maxIters`
+   * rounds pass without reaching the fixpoint, rather than return split
+   * components.
    */
   def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
                               maxIters: Int = 50): DataFrame = {
@@ -1063,10 +1080,16 @@ object Dedup {
       // every smaller neighbor to the minimum; the minimum's own row
       // re-attaches the center (and passes a self row through)
       small.select(when(v === col("__m"), u).otherwise(v).as("__u"), col("__m").as("__v"))
+        .as(idPairs).mapPartitions(contractPartition)(idPairs).toDF("__u", "__v")
+    }
+    // the RDD a localCheckpoint wrote, read from its plan without a job
+    def written(checkpoint: DataFrame): RDD[_] = checkpoint.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
     }
 
     var e = edges.where(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).cast("long").as("__u"), col(bCol).cast("long").as("__v"))
+    var previous: Option[RDD[_]] = None
     var unfinished = 1L
     var i = 0
     while (unfinished > 0) {
@@ -1077,12 +1100,54 @@ object Dedup {
       describedAs(edges.sparkSession, s"connectedComponentsStar: round $i") {
         val probe = Observation()
         e = round(e, probe).localCheckpoint(true)
-        // no metric when the optimizer proved the round's input empty and
+        val rdd = written(e)
+        previous.foreach(Bridge.releaseCheckpoint)
+        previous = Some(rdd)
+        // one partition: its union-find saw every edge, e is the label set.
+        // No metric when the optimizer proved the round's input empty and
         // pruned the probe's subtree: nothing is unfinished then
-        unfinished = probe.get.getOrElse("unfinished", 0L).asInstanceOf[Long]
+        unfinished = if (rdd.getNumPartitions <= 1) 0L
+          else probe.get.getOrElse("unfinished", 0L).asInstanceOf[Long]
       }
     }
     e.select(u.as("id"), v.as("component"))
+  }
+
+  private val idPairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
+  /**
+   * The contraction at the tail of a [[connectedComponentsStar]] round: a
+   * union-find (union by minimum, path halving) over one partition's
+   * edges. Emits (x, r) for every node x that is not the minimum r of its
+   * component within the partition, and the self row (r, r) only when
+   * the input carried it, so a round whose input is a star forest
+   * reproduces it without duplicate roots. Holds one `LongMap` entry per
+   * distinct id of the partition plus one per self row. The output is
+   * emitted in id order, so it depends only on the multiset of input rows
+   * and a retried task writes the same edges.
+   */
+  private def contractPartition(rows: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = new mutable.LongMap[Long]()
+    val selfRows = new mutable.LongMap[Unit]()
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrElseUpdate(x, x)
+      while (p != x) {
+        val g = parent(p)
+        parent(x) = g
+        x = g
+        p = parent(x)
+      }
+      x
+    }
+    rows.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      else if (a == b) selfRows(a) = ()
+    }
+    val ids = parent.keys.toArray
+    java.util.Arrays.sort(ids)
+    ids.iterator.map(x => (x, find(x))).filter { case (x, r) => x != r || selfRows.contains(x) }
   }
 
   /**

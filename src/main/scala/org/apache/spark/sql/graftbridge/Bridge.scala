@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -31,4 +32,10 @@ object Bridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
   }
+
+  /** Drops a spent local checkpoint's blocks, as the ContextCleaner does,
+    * without `RDD.unpersist`'s warning that a local checkpoint cannot be
+    * recomputed (SparkContext.unpersistRDD is private[spark]). */
+  def releaseCheckpoint(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

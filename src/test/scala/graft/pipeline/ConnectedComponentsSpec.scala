@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.grafttest.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
@@ -44,6 +46,33 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val ids = new scala.util.Random(seed).shuffle((0L until 10L * n).toVector).take(n)
     ids.zip(ids.tail)
   }
+
+  /** Runs `f` with the given SQL confs set, restoring the old values. */
+  def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Shuffle partitions that AQE does not coalesce: rounds end in `n` partitions. */
+  def uncoalesced(n: Int): Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> n.toString)
+
+  /** Labels and rounds of one call. */
+  def labelsAndRounds(df: DataFrame): (Map[Long, Long], Int) = {
+    val (comps, descs) = jobsOf(Dedup.connectedComponentsStar(df, "a", "b"))
+    val rows = comps.as[(Long, Long)].collect()
+    assert(rows.length == rows.map(_._1).distinct.length, "one row per id")
+    (rows.toMap, roundsOf(descs))
+  }
+
+  def roundsOf(descs: Seq[String]): Int =
+    descs.map(_.stripPrefix("connectedComponentsStar: round ").toInt).max
 
   /** Result and descriptions of every Spark job `f` started, in order. */
   def jobsOf[T](f: => T): (T, Seq[String]) = {
@@ -105,12 +134,15 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("the round cap fails loudly instead of returning split components") {
-    val chain = permutedChain(50, 6L).toDF("a", "b")
-    val e = intercept[IllegalStateException] {
-      Dedup.connectedComponentsStar(chain, "a", "b", maxIters = 1)
+    // several partitions per round, so round 1 cannot finish by itself
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val chain = permutedChain(50, 6L).toDF("a", "b")
+      val e = intercept[IllegalStateException] {
+        Dedup.connectedComponentsStar(chain, "a", "b", maxIters = 1)
+      }
+      assert(e.getMessage.contains("after 1 rounds") && e.getMessage.contains("edges left"),
+        e.getMessage)
     }
-    assert(e.getMessage.contains("after 1 rounds") && e.getMessage.contains("edges left"),
-      e.getMessage)
   }
 
   test("job budget: 3 jobs per round, no init or label jobs, on a 256-node chain") {
@@ -121,10 +153,11 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     spark.conf.set(key, "true")
     try {
       val (comps, descs) = jobsOf(Dedup.connectedComponentsStar(chain, "a", "b"))
-      val rounds = descs.map(_.stripPrefix("connectedComponentsStar: round ").toInt).max
-      // each round: two shuffle-map jobs and the checkpoint's result job
+      val rounds = roundsOf(descs)
+      // each round: two shuffle-map jobs and the checkpoint's result job;
+      // AQE coalesces round 1 into one partition, whose union-find is exact
       assert(descs.size == 3 * rounds, descs)
-      assert((rounds, descs.size) == (7, 21), descs)
+      assert((rounds, descs.size) == (1, 3), descs)
       assert(comps.select("component").distinct().count() == 1)
     } finally {
       spark.conf.set(key, aqe)
@@ -144,5 +177,50 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       val (_, after) = jobsOf(comps.collect())
       assert(after.nonEmpty && after.forall(_ == "caller"), after)
     } finally sc.setJobDescription(null)
+  }
+
+  test("several partitions per round: union-find labels, the star rounds unchanged") {
+    withConf(uncoalesced(16): _*) {
+      // (graph, rounds of the star loop without the per-partition contraction)
+      for ((n, seed, rounds) <- Seq((512, 9L, 8), (4096, 10L, 11))) {
+        val chain = new scala.util.Random(seed).shuffle(permutedChain(n, seed))
+        val (got, r) = labelsAndRounds(chain.toDF("a", "b"))
+        assert(got == UnionFind.labels(chain), s"chain of $n")
+        assert(r == rounds, s"chain of $n")
+      }
+    }
+  }
+
+  test("one shuffle partition: the first round's union-find ends the loop") {
+    withConf("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "1") {
+      val chain = permutedChain(512, 11L)
+      val (got, rounds) = labelsAndRounds(chain.toDF("a", "b"))
+      assert(got == UnionFind.labels(chain))
+      assert(rounds == 1)
+    }
+  }
+
+  test("only the last round's checkpoint stays persisted; the caller's input is kept") {
+    withConf(uncoalesced(16): _*) {
+      val sc = spark.sparkContext
+      def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+      val start = persisted
+      val cached = permutedChain(512, 12L).toDF("a", "b").persist(StorageLevel.MEMORY_ONLY)
+      cached.count()
+      val checkpointed = permutedChain(300, 13L).toDF("a", "b").localCheckpoint(true)
+      val inputs = persisted -- start
+      assert(inputs.nonEmpty)
+      for (in <- Seq(cached, checkpointed)) {
+        val before = persisted
+        val (comps, descs) = jobsOf(Dedup.connectedComponentsStar(in, "a", "b"))
+        assert(roundsOf(descs) > 1, descs)
+        val last = comps.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }
+        assert(last.nonEmpty && (persisted -- before) == last.toSet,
+          "one checkpoint left, the last round's")
+        assert(inputs.subsetOf(persisted), "the caller's inputs stay persisted")
+      }
+      assert(cached.storageLevel == StorageLevel.MEMORY_ONLY)
+      cached.unpersist()
+    }
   }
 }
