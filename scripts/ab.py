@@ -4,6 +4,7 @@
     python3 scripts/ab.py run <parent-dir> <change-dir> <workload> <seeds> <out.jsonl>
     python3 scripts/ab.py summary <out.jsonl> [<BENCHMARK.json>]
     python3 scripts/ab.py trace <parent-dir> <change-dir> <workload> <seed> <out.json>
+    python3 scripts/ab.py loc <parent-rev> <change-rev>
 
 `run` takes the benchmark command and run length from each checkout's own
 BENCHMARK.json and runs it there, untraced, once per seed and side.
@@ -27,6 +28,10 @@ to back (parent first), and writes one JSON object: workload, seed, the
 command line, and each side's result line (or its exit code and stderr
 tail) under "parent" and "change", so the per-layer metrics of both
 sides come from the same window.
+
+`loc` prints the net line change of `src/main` between two git revisions
+of this repository, once as written and once ignoring whitespace
+(`git diff -w`), so a reformat shows as the difference of the two.
 
 Each side must be a fresh `git clone` (never a `cp -r` of a built
 checkout: the copy would reuse the original's build directory).
@@ -89,6 +94,18 @@ def trace(parent, change, workload, seed, out):
         f.write("\n")
 
 
+def loc(parent, change, root):
+    for label, flags in (("", []), (" ignoring whitespace", ["-w"])):
+        out = subprocess.run(["git", "diff", "--numstat", *flags, parent, change, "--", "src/main"],
+                             cwd=root, capture_output=True, text=True, check=True).stdout
+        added = removed = 0
+        for line in out.splitlines():
+            a, r, _ = line.split("\t", 2)
+            if a != "-":  # binary files have no line counts
+                added, removed = added + int(a), removed + int(r)
+        print(f"src/main{label}: +{added} -{removed} = {added - removed:+d} lines")
+
+
 def quartiles(v):
     if len(v) == 1:
         return v[0], v[0], v[0]
@@ -145,6 +162,8 @@ def main(argv):
         summary(argv[5], os.path.join(argv[1], "BENCHMARK.json"))
     elif len(argv) == 6 and argv[0] == "trace":
         trace(*argv[1:6])
+    elif len(argv) == 3 and argv[0] == "loc":
+        loc(argv[1], argv[2], here)
     elif len(argv) in (2, 3) and argv[0] == "summary":
         summary(argv[1], argv[2] if len(argv) == 3 else os.path.join(here, "BENCHMARK.json"))
     else:

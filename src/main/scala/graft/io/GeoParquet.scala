@@ -3,7 +3,6 @@ package graft.io
 import graft.Geo._
 import graft.api.GeoFrame
 import graft.tools.Jobs.describedAs
-import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,14 +20,12 @@ import scala.jdk.CollectionConverters._
  * ("version" is the frozen FORMAT version; "_commit" counts CAS writes
  * — see [[sidecarCommit]] for the legacy fallback.)
  *
- * The sidecar is a DELTA LOG in `_sc/` (the twin of the manifest's
- * `_gen/`): ordinal N is exactly ONE artifact `_sc/_sc-N.json` — an
+ * The sidecar and the generation manifest are the two instances of the
+ * lake's one commit log, [[VersionedLog]] ([[scLog]] in `_sc/`,
+ * [[genLog]] in `_gen/`): ordinal N is one artifact `_sc-N.json` — an
  * O(change) delta (per-file upserts + removals) in steady state, or a
  * full-state checkpoint on the first commit, a full rebuild, or when
- * [[DeltaFoldEvery]] deltas have piled up; the KIND lives in the
- * canonical text head, not the name, so the never-replace publish
- * arbitrates the whole ordinal ([[ScArtPrefix]]). Checkpoints are
- * created-new-before-delete-old, never replaced in place. The root
+ * [[DeltaFoldEvery]] deltas have piled up. The root
  * `_spatial_metadata.json` is the LEGACY base (pre-delta-log datasets),
  * read until the first fold migrates and sweeps it. Readers
  * ([[readSidecarText]]) materialize checkpoint+deltas back into the one
@@ -345,12 +342,12 @@ object GeoParquet {
       .groupBy(_._2)
       .map { case (cs, fs) => cs -> fs.map(_._1) }
     val withPartial = partialGroups.foldLeft(trusted) { case (acc, (cs, fs)) =>
-      mergeSidecarBounds(acc, describedAs(spark, "lake: bounds scan")(
-        numericBoundsPerFile(readFiles(spark, path, fs), cs)))
+      applyScDelta(acc, ScDelta(describedAs(spark, "lake: bounds scan")(
+        numericBoundsPerFile(readFiles(spark, path, fs), cs)), Set.empty))
     }
     if (fallback.isEmpty) withPartial
-    else mergeSidecarBounds(withPartial, describedAs(spark, "lake: bounds scan")(
-      numericBoundsPerFile(readFiles(spark, path, fallback.toSeq), cols)))
+    else applyScDelta(withPartial, ScDelta(describedAs(spark, "lake: bounds scan")(
+      numericBoundsPerFile(readFiles(spark, path, fallback.toSeq), cols)), Set.empty))
   }
 
   /** [[boundsPerFile]] for POINT-geometry columns over known file names
@@ -409,8 +406,8 @@ object GeoParquet {
         f -> Array(rows.toDouble, rows.toDouble, rows.toDouble, rows.toDouble)
       }.toMap)
     if (fallback.isEmpty) trusted
-    else mergeSidecarBounds(trusted, describedAs(spark, "lake: bounds scan")(
-      boundsPerFile(readFiles(spark, path, fallback.toSeq), geomCols)))
+    else applyScDelta(trusted, ScDelta(describedAs(spark, "lake: bounds scan")(
+      boundsPerFile(readFiles(spark, path, fallback.toSeq), geomCols)), Set.empty))
   }
 
   /** One file's (rowCount, per-LEAF (min, max)) from its parquet
@@ -673,7 +670,7 @@ object GeoParquet {
       val explicit = cols.map(c => c -> Map(head ->
         Array(Double.NaN, Double.NaN, Double.NaN, Double.NaN))).toMap +
         (RowCountCol -> Map(head -> Array(0.0, 0.0, 0.0, 0.0)))
-      (Seq(head), mergeSidecarBounds(fresh, explicit), files.tail.toSet)
+      (Seq(head), applyScDelta(fresh, ScDelta(explicit, Set.empty)), files.tail.toSet)
     }
   }
 
@@ -1541,39 +1538,45 @@ object GeoParquet {
     * told apart from a busy writer. Legacy sidecars without "_commit"
     * read their "version" as the ordinal. */
   private[graft] def renderSidecar(m: Map[String, Map[String, Array[Double]]],
-                            commit: Int = 0): String = {
-    val sb = new StringBuilder
-    sb.append(s"""{"version":1,"_commit":$commit,"partition_bounds":{""")
-    sb.append(m.toSeq.sortBy(_._1).map { case (g, files) =>
+                            commit: Int = 0): String =
+    s"""{"version":1,"_commit":$commit,"partition_bounds":{""" +
+      renderBounds(m) + "}}"
+
+  /** The bounds blocks both sidecar artifacts carry (the checkpoint's
+    * `partition_bounds`, the delta's `ups`): `"<col>":{"<file>":[...]}`
+    * sorted by column, then file; NaN renders as null. */
+  private def renderBounds(m: Map[String, Map[String, Array[Double]]]): String =
+    m.toSeq.sortBy(_._1).map { case (g, files) =>
       val entries = files.toSeq.sortBy(_._1).map { case (f, vals) =>
         "\"" + f + "\":[" +
           vals.map(v => if (v.isNaN) "null" else v.toString).mkString(",") + "]"
       }
       "\"" + g + "\":{" + entries.mkString(",") + "}"
-    }.mkString(","))
-    sb.append("}}").toString
-  }
+    }.mkString(",")
 
-  /** Exclusively claim a commit marker holding `nonce`; the nonce
-    * distinguishes OUR claim from an adopter's re-created marker for
-    * the same ordinal. Delegates to [[LogFs.exclusiveCreate]] (contract
-    * primitive P1 — kernel-atomic O_EXCL on local filesystems). */
-  private def claimMarker(fs: org.apache.hadoop.fs.FileSystem,
-                          marker: HadoopPath, nonce: String): Boolean =
-    LogFs.exclusiveCreate(fs, marker, nonce.getBytes(StandardCharsets.UTF_8))
+  /** One column block's body (`"<file>":[v,...],...`) back to file ->
+    * bounds, for both sidecar artifacts: `null` reads as NaN, and an
+    * empty `[]` as an empty array — renderBounds emits it verbatim, and
+    * split(',') on "" would fail the entry, turning a committed sidecar
+    * into one no later read, commit or fold could parse. */
+  private def parseEntries(block: String): Map[String, Array[Double]] =
+    "\"([^\"]+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(block).map { m =>
+      val body = m.group(2).trim
+      m.group(1) -> (if (body.isEmpty) Array.empty[Double]
+        else body.split(',').map { s =>
+          val t = s.trim
+          if (t == "null") Double.NaN else t.toDouble
+        })
+    }.toMap
 
-  /** Does the marker still hold OUR nonce? (false on missing /
-    * unreadable / someone else's nonce — i.e. an adopter took over) */
-  private def markerHolds(fs: org.apache.hadoop.fs.FileSystem,
-                          marker: HadoopPath, nonce: String): Boolean =
-    try {
-      val in = fs.open(marker)
-      try {
-        val bytes = new Array[Byte](nonce.length)
-        in.readFully(bytes)
-        new String(bytes, StandardCharsets.UTF_8) == nonce
-      } finally in.close()
-    } catch { case _: java.io.IOException => false }
+  /** Bounds maps compared by value (NaN-aware, unlike ==). */
+  private def sameBounds(a: Map[String, Map[String, Array[Double]]],
+                         b: Map[String, Map[String, Array[Double]]]): Boolean =
+    a.keySet == b.keySet && a.forall { case (c, fa) =>
+      val fb = b(c)
+      fa.keySet == fb.keySet &&
+        fa.forall { case (f, v) => java.util.Arrays.equals(v, fb(f)) }
+    }
 
   /** The sidecar's CAS write ordinal: "_commit" in the current shape,
     * falling back to "version" for legacy sidecars that used it as the
@@ -1594,10 +1597,21 @@ object GeoParquet {
     * every update path (append / compaction / vacuum / abort-cleanup)
     * is expressible as one, and re-applying a change on top of a
     * concurrent writer's commit converges (upserts are per-file puts,
-    * removals per-file deletes). */
+    * removals per-file deletes). Equality compares the bounds by value,
+    * as the commit's self-round-trip needs. */
   private[graft] final case class ScDelta(
-      ups: Map[String, Map[String, Array[Double]]], del: Set[String])
+      ups: Map[String, Map[String, Array[Double]]], del: Set[String]) {
+    override def equals(o: Any): Boolean = o match {
+      case d: ScDelta => del == d.del && sameBounds(ups, d.ups)
+      case _ => false
+    }
+    override def hashCode: Int = del.hashCode
+  }
 
+  /** `d` applied to bounds `st`: removals leave every column, then a
+    * column-level outer + file-level inner merge of the upserts (an
+    * upsert-only delta is how fresh per-file bounds merge into existing
+    * ones; columns the change does not name stay untouched). */
   private[graft] def applyScDelta(
       st: Map[String, Map[String, Array[Double]]], d: ScDelta)
       : Map[String, Map[String, Array[Double]]] = {
@@ -1610,21 +1624,10 @@ object GeoParquet {
     }.toMap
   }
 
-  private[graft] def renderScDelta(d: ScDelta): String = {
-    val sb = new StringBuilder
-    sb.append("""{"version":1,"del":[""")
-    sb.append(d.del.toSeq.sorted.map("\"" + _ + "\"").mkString(","))
-    sb.append("""],"ups":{""")
-    sb.append(d.ups.toSeq.sortBy(_._1).map { case (g, files) =>
-      val entries = files.toSeq.sortBy(_._1).map { case (f, vals) =>
-        "\"" + f + "\":[" +
-          vals.map(v => if (v.isNaN) "null" else v.toString).mkString(",") +
-          "]"
-      }
-      "\"" + g + "\":{" + entries.mkString(",") + "}"
-    }.mkString(","))
-    sb.append("}}").toString
-  }
+  private[graft] def renderScDelta(d: ScDelta): String =
+    """{"version":1,"del":[""" +
+      d.del.toSeq.sorted.map("\"" + _ + "\"").mkString(",") +
+      """],"ups":{""" + renderBounds(d.ups) + "}}"
 
   /** Strict parse of [[renderScDelta]]'s canonical shape (commit-time
     * self-round-trip guarantees nothing else is ever on disk). */
@@ -1647,23 +1650,10 @@ object GeoParquet {
     while (pos < json.length && json.charAt(pos) == '"') {
       val nameEnd = json.indexOf("\":{", pos + 1)
       if (nameEnd < 0) fail("bad column block")
-      val colName = json.substring(pos + 1, nameEnd)
       val blockEnd = json.indexOf('}', nameEnd + 3)
       if (blockEnd < 0) fail("unterminated column block")
-      val entries = json.substring(nameEnd + 3, blockEnd)
-      val files = "\"([^\"]+)\":\\[([^\\]]*)\\]".r
-        .findAllMatchIn(entries).map { m =>
-          // an empty body renders as "[]" and must parse back to an
-          // empty array — split(',') would yield Array("") and fail a
-          // zero-width entry with a misleading "unparseable"
-          val body = m.group(2).trim
-          m.group(1) -> (if (body.isEmpty) Array.empty[Double]
-            else body.split(',').map { s =>
-              val t = s.trim
-              if (t == "null") Double.NaN else t.toDouble
-            })
-        }.toMap
-      ups += colName -> files
+      ups += json.substring(pos + 1, nameEnd) ->
+        parseEntries(json.substring(nameEnd + 3, blockEnd))
       pos = blockEnd + 1
       if (pos < json.length && json.charAt(pos) == ',') pos += 1
     }
@@ -1671,333 +1661,37 @@ object GeoParquet {
   }
 
   /** The one sidecar update path (append / pack / compaction / vacuum /
-    * abort-cleanup / full rebuild), now a DELTA LOG like the generation
-    * manifest's: the winner of the `_sc/.sccommit-(v+1)` marker owns
-    * sidecar version v+1 and publishes `_sc/_sc-(v+1).json` — normally
-    * an O(change) delta; a full-state checkpoint only on the first
-    * commit, a `replace` (full rebuild), or when [[DeltaFoldEvery]]
-    * deltas have piled up — per-commit metadata bytes no longer scale
-    * with the
-    * live file count (the last O(live-files) write the lake had). The
-    * fold CREATES the new checkpoint before deleting the older ones,
-    * the deltas it covers, and the legacy root file, so a max-ordinal
-    * base always exists — a crash mid-fold can never leave the deltas
-    * uncovered (a fixed-name checkpoint's delete-then-rename window
-    * could, and a later commit would then restart ordinals UNDER the
-    * surviving deltas); readers racing the cleanup retry (see
-    * [[readSidecarFull]]).
-    *
-    * Concurrency contract is unchanged: the sidecar is advisory for
-    * PRUNING (conservative-keep) but its row-count block is
-    * load-bearing for metadata stats, so losers of the marker re-read
-    * and re-apply on top (changes are per-file upserts/removals —
-    * re-application converges), a marker whose artifact never lands is
-    * adopted after ≥ 2 s, and a resumed slow owner is stopped by the
-    * marker-nonce + version re-check before its write. No-op changes
-    * (every upsert already present with equal bounds, no removal
-    * matching a recorded file) return without writing. Markers from
-    * the pre-delta protocol lived at the dataset ROOT; a crashed one
-    * left there is an invisible dotfile no code reads — harmless. */
+    * abort-cleanup / full rebuild): one commit of [[scLog]], normally an
+    * O(change) delta of `ups` and `dels`; `replace` (a full rebuild)
+    * writes a checkpoint. The sidecar is advisory for PRUNING
+    * (conservative-keep), but its row-count block is load-bearing for
+    * metadata stats, hence the full commit protocol. A change already in
+    * the sidecar (no removal hits a recorded file, every upsert matches
+    * the recorded bounds) writes nothing; the test is O(change), not an
+    * O(live) render. */
   private def commitSidecar(spark: SparkSession, path: String,
       ups: Map[String, Map[String, Array[Double]]],
       dels: Set[String],
       replace: Option[Map[String, Map[String, Array[Double]]]] = None)
       : Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val scDirStr = scLogDir(path)
-    val scDir = new HadoopPath(scDirStr)
-    val fs = scDir.getFileSystem(conf)
-    def boundsEq(a: Array[Double], b: Array[Double]): Boolean =
-      java.util.Arrays.equals(a, b) // NaN-aware, unlike ==
-    var lastVerSeen = -1
-    var staleSinceNanos = 0L
-    var attempts = 0
-    while (attempts < 24) {
-      attempts += 1
-      val full = readSidecarFull(path, conf)
-      val curText = full.map(_._1)
-      val deltasOnTop = full.map(_._2).getOrElse(0)
-      val curVer = curText.flatMap(sidecarCommit).getOrElse(0)
-      val curState = curText.map(parseSidecarAll).getOrElse(Map.empty)
-      val delta = ScDelta(ups, dels)
-      val next = replace.getOrElse(applyScDelta(curState, delta))
-      if (next.isEmpty && curText.isEmpty) return // nothing to fabricate
-      // no-op detection in O(change), not O(live) renders: a change
-      // whose removals hit no recorded file and whose upserts all
-      // match the recorded bounds leaves the state untouched
-      val noop = replace match {
-        case Some(_) => curText.isDefined &&
-          renderSidecar(next, curVer) == renderSidecar(curState, curVer)
-        case None => curText.isDefined &&
-          dels.forall(f => !curState.exists(_._2.contains(f))) &&
-          ups.forall { case (c, files) => files.forall { case (f, v) =>
-            curState.get(c).flatMap(_.get(f)).exists(boundsEq(_, v)) } }
-      }
-      if (noop) return
-      val nextVer = curVer + 1
-      val marker = new HadoopPath(scDir, s".sccommit-$nextVer")
-      val nonce = java.util.UUID.randomUUID().toString
-      if (claimMarker(fs, marker, nonce)) {
-        // version re-check mirrors the manifest's ordinal re-check:
-        // success-path cleanup deletes committed markers, so a writer
-        // stalled across several commits could re-claim an old version
-        // with a fresh marker — the sidecar having reached our target
-        // version voids the claim
-        val verNow = readSidecarFull(path, conf)
-          .flatMap(f => sidecarCommit(f._1)).getOrElse(0)
-        if (markerHolds(fs, marker, nonce) && verNow < nextVer) {
-          val fold = replace.isDefined || curText.isEmpty ||
-            deltasOnTop + 1 >= DeltaFoldEvery
-          // self-round-trip BEFORE the write (same guard as the
-          // manifest): a file/column name the canonical text cannot
-          // represent fails THIS commit with the dataset untouched
-          def surviveCanonical(check: => Boolean): Unit = {
-            val ok = try check
-              catch { case _: IllegalArgumentException => false }
-            require(ok,
-              s"sidecar commit at $path aborted: the change does not " +
-                "survive the canonical text (a file or column name the " +
-                "format cannot represent?) — dataset left untouched")
-          }
-          // post-mismatch version probe: PAST our ordinal = some writer
-          // read and applied our commit first (it landed); still AT our
-          // ordinal = a same-ordinal fold covered-and-deleted our
-          // artifact without reading it — in-protocol, retryable (the
-          // manifest twin's retryCovered)
-          def verAfter(sink: Throwable => Unit): Option[Int] =
-            try readSidecarFull(path, conf).flatMap(f => sidecarCommit(f._1))
-            catch { case e if scala.util.control.NonFatal(e) =>
-              sink(e); None }
-          // single-name-per-ordinal (the manifest twin's format): both
-          // kinds publish `_sc-N.json` — kind lives in the canonical
-          // text head — so a stalled fold's checkpoint and an
-          // adopter's delta collide on the NAME and P3 arbitrates.
-          val artText =
-            if (fold) {
-              val t = renderSidecar(next, nextVer)
-              surviveCanonical(renderSidecar(parseSidecarAll(t), nextVer) == t)
-              t
-            } else {
-              val dt = renderScDelta(delta)
-              surviveCanonical {
-                val rt = parseScDelta(dt, "self-check")
-                renderScDelta(rt) == dt
-              }
-              dt
-            }
-          val artName = scArtName(nextVer)
-          // ordinal-named artifacts are IMMUTABLE: never-replace write,
-          // so a writer resuming after a >2s stall can no longer
-          // overwrite the artifact an adopter already committed at the
-          // same ordinal (delete-then-rename could — both callers then
-          // reported success while one change was silently gone). A
-          // false return means the ordinal is already taken: fall back
-          // into the retry loop like any lost race.
-          // legacy twin names kept in alsoAbsent purely as
-          // mixed-version defense (an old JVM racing this one)
-          val wrote = writeTextNoReplace(spark, scDirStr, artName, artText,
-            alsoAbsent = Seq(scDeltaName(nextVer), scCkptName(nextVer)))
-          if (!wrote) {
-            // a refused publish can recur at the SAME version — release
-            // the marker while it still carries OUR nonce (mirrors the
-            // manifest twin; same check-then-delete residual as the 2 s
-            // adoption path), or the retry blocks on its own claim
-            if (markerHolds(fs, marker, nonce))
-              try fs.delete(marker, false)
-              catch { case _: java.io.IOException => () }
-          }
-          var coveredRetry = false
-          if (wrote) {
-            val back =
-              try readTextFile(scDirStr, artName, conf)
-              catch { case _: java.io.FileNotFoundException => None }
-            if (!back.contains(artText)) {
-              // our artifact GONE can be legitimate: a newer fold can
-              // only have covered and deleted it after some writer read
-              // and applied it — the commit landed. A log still
-              // readable AT our version is a same-ordinal fold that
-              // covered us without reading us — retry on fresh state
-              // (the manifest twin's retryCovered; the no-op detection
-              // resolves it quietly if the change did land). Different
-              // content under our name is out-of-protocol interference
-              // (the no-replace write makes in-protocol overwrites
-              // impossible) — always an error.
-              var suppressed: Throwable = null
-              val v = verAfter(e => suppressed = e)
-              val landed = back.isEmpty && v.exists(_ > nextVer)
-              coveredRetry = back.isEmpty && v.contains(nextVer)
-              if (!landed && !coveredRetry) {
-                val ex = new java.io.IOException(
-                  s"sidecar update at $path interleaved with a writer " +
-                    "outside the commit protocol (read-back mismatch " +
-                    s"on version $nextVer)")
-                if (suppressed != null) ex.addSuppressed(suppressed)
-                throw ex
-              }
-            }
-          }
-          if (wrote && !coveredRetry) {
-          // POST-write ownership re-check: a writer stalled past the
-          // 2 s adoption window between the pre-write checks and the
-          // write can land its artifact at an ordinal an adopter
-          // already owns (and a later fold may already have covered) —
-          // its own read-back still matches, so without this check it
-          // would report success while its change was never
-          // materialized. The marker no longer holding our nonce is
-          // the adoption's fingerprint: treat the write as suspect and
-          // RETRY — the retry's no-op detection returns quietly when
-          // the change in fact landed, and re-commits it on top of the
-          // adopter's state when it did not. (A marker a SUBSEQUENT
-          // commit's cleanup already deleted also lands here; the same
-          // retry resolves it via no-op in one extra read.)
-          if (markerHolds(fs, marker, nonce)) {
-          // cleanup inside the tiny _sc/ dir (one listing): after a
-          // verified fold the deltas it covers and the checkpoints it
-          // supersedes are dead (readers take the max checkpoint and
-          // apply only ordinals above it); dead markers and crashed
-          // writers' tmp files go in the same pass. Failures are
-          // harmless — the next fold re-deletes.
-          try {
-            val names = fs.listStatus(scDir).map(_.getPath.getName)
-            def tmpOrdinal(n: String): Option[Int] = {
-              val d = if (n.startsWith(".")) n.drop(1) else ""
-              val i = d.indexOf(".json.tmp-")
-              if (i <= 0) None
-              else ordinalOf(d.substring(0, i) + ".json", ScDeltaPrefix)
-                .orElse(ordinalOf(d.substring(0, i) + ".json", ScCkptPrefix))
-                .orElse(ordinalOf(d.substring(0, i) + ".json", ScArtPrefix))
-            }
-            // unified ordinals < N are dead whatever their kind; the
-            // legacy-NAMED sweep below IS the migration (twin layout
-            // gone after the first fold)
-            names.filter { n =>
-              (fold && ordinalOf(n, ScArtPrefix).exists(_ < nextVer)) ||
-                (fold && ordinalOf(n, ScDeltaPrefix).exists(_ <= nextVer)) ||
-                (fold && ordinalOf(n, ScCkptPrefix).exists(_ < nextVer)) ||
-                (n.startsWith(".sccommit-") && n.stripPrefix(".sccommit-")
-                  .toIntOption.exists(_ < nextVer)) ||
-                tmpOrdinal(n).exists(_ < nextVer)
-            }.foreach(n => fs.delete(new HadoopPath(scDir, n), false))
-            // the legacy root checkpoint (pre-delta-log datasets) is
-            // superseded once a versioned checkpoint exists — swept by
-            // the fold exactly like _generations.json was
-            if (fold)
-              fs.delete(new HadoopPath(new HadoopPath(path), SidecarName),
-                false)
-          } catch { case _: java.io.IOException => () }
-          return
-          }
-          }
-        }
-        Thread.sleep(25L * math.min(attempts, 8))
-      } else {
-        if (curVer != lastVerSeen || staleSinceNanos == 0L) {
-          lastVerSeen = curVer
-          staleSinceNanos = System.nanoTime()
-        } else if (System.nanoTime() - staleSinceNanos > 2000000000L) {
-          try fs.delete(marker, false)
-          catch { case _: java.io.IOException => () }
-          staleSinceNanos = 0L
-        }
-        Thread.sleep(25L * math.min(attempts, 8))
-      }
-    }
-    throw new java.io.IOException(
-      s"sidecar update contention at $path: 24 attempts lost")
-  }
-
-  /** Column-level outer + file-level inner merge of fresh per-file
-    * bounds into an existing sidecar: a column the update covers keeps
-    * the old files' entries and gains the new files'; other columns
-    * (and pseudo-columns like the row counts) stay untouched. */
-  private def mergeSidecarBounds(
-      existing: Map[String, Map[String, Array[Double]]],
-      fresh: Map[String, Map[String, Array[Double]]])
-      : Map[String, Map[String, Array[Double]]] =
-    (existing.keySet ++ fresh.keySet).map { c =>
-      c -> (existing.getOrElse(c, Map.empty) ++ fresh.getOrElse(c, Map.empty))
-    }.toMap
-
-  /** Atomic-visibility, NEVER-REPLACE write for ordinal-named log
-    * artifacts (deltas and versioned checkpoints in `_gen/` and
-    * `_sc/`): tmp write + rename, but the rename is attempted only
-    * when the target does not exist, and `false` is returned instead
-    * of clobbering. This is what makes log artifacts immutable — a
-    * writer resuming after a >2 s stall (whose ordinal an adopter
-    * re-claimed and committed) gets `false` and retries, instead of
-    * delete-then-rename silently replacing the adopter's committed
-    * artifact while both callers report success. The publish itself is
-    * [[LogFs]] contract primitive P3: on local filesystems an ATOMIC
-    * no-replace hard link (no probe-to-rename window at all); only on
-    * filesystems without such a primitive does it degrade to the
-    * guarded probe+rename, whose residual (two publishes racing inside
-    * the probe window) LogFsSpec forces and pins. */
-  private def writeTextNoReplace(spark: SparkSession, path: String,
-                                 name: String, text: String,
-                                 alsoAbsent: Seq[String] = Nil): Boolean = {
-    val p = new HadoopPath(path, name)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // `alsoAbsent`: sibling names that ALSO claim this ordinal (a fold
-    // checkpoint vs a delta at the same N — an adopter may have
-    // committed the other KIND, and landing ours beside it would
-    // shadow or dead-letter theirs). Checked before the upload (a fold
-    // checkpoint is O(live-files) bytes — don't pay it on the common
-    // refusal path) and again, for the target name, via the rename
-    // guard below.
-    def taken: Boolean = (name +: alsoAbsent).exists { n =>
-      // a TRANSIENT probe failure retries once, but the second
-      // probe's verdict is TRUSTED only where an atomic no-replace
-      // primitive will arbitrate the publish anyway (then a spurious
-      // "absent" just loses the race at publish) AND the probed name
-      // IS the publish target — the atomic publish arbitrates `name`
-      // only, never the `alsoAbsent` legacy twins. Everywhere else
-      // (probe+rename fallback, twin probes) the probe is the only
-      // defense against a clobber/shadow, so a suspicious failure
-      // reads as taken: one wasted marker-release round, never a
-      // replaced committed artifact. A failure that REPEATS on the
-      // immediate second probe is a broken filesystem, not a race —
-      // the second call's exception propagates in every mode so the
-      // caller surfaces the real I/O error instead of burning its
-      // retry budget on fake contention.
-      val p = new HadoopPath(path, n)
-      try fs.exists(p)
-      catch {
-        case _: java.io.IOException =>
-          val second = fs.exists(p) // throws -> broken fs, loud
-          if (n == name && LogFs.publishArbitrates(fs)) second else true
-      }
-    }
-    if (taken) return false
-    val tmp = new HadoopPath(path,
-      s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      val out = fs.create(tmp, true)
-      try out.write(text.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      if (taken) {
-        try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
-        false
-      } else {
-        LogFs.raceInjection.foreach(_(p)) // test seam: competitor lands HERE
-        LogFs.linkNoReplace(fs, tmp, p) match {
-          case Some(published) =>
-            try fs.delete(tmp, false)
-            catch { case _: java.io.IOException => () }
-            published
-          case None => // no atomic primitive: guarded rename fallback
-            if (fs.rename(tmp, p)) true
-            else {
-              try fs.delete(tmp, false)
-              catch { case _: java.io.IOException => () }
-              false
-            }
+    val change = ScDelta(ups, dels)
+    scLog.commit(spark.sessionState.newHadoopConf(), path, (cur, n) => {
+      val next = replace.getOrElse(applyScDelta(
+        cur.fold(Map.empty[String, Map[String, Array[Double]]])(_.bounds), change))
+      val noop = cur match {
+        case None => next.isEmpty // nothing to fabricate
+        case Some(c) => replace match {
+          case Some(r) => sameBounds(r, c.bounds)
+          case None =>
+            dels.forall(f => !c.bounds.exists(_._2.contains(f))) &&
+              ups.forall { case (col, files) => files.forall { case (f, v) =>
+                c.bounds.get(col).flatMap(_.get(f))
+                  .exists(java.util.Arrays.equals(_, v)) } }
         }
       }
-    } catch {
-      case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-        throw e
-    }
+      if (noop) None
+      else Some((new ScState(n, next), if (replace.isEmpty) Some(change) else None))
+    })
   }
 
   /** Names of the data files directly under `root` (excludes metadata
@@ -2029,235 +1723,51 @@ object GeoParquet {
       files => pointBoundsForFiles(batch.sparkSession, path, files, geomCols))
   }
 
-  /** Sidecar delta-log artifacts live in `_sc/` next to the data,
-    * exactly like the generation manifest's `_gen/`. Checkpoints are
-    * ORDINAL-NAMED (`_sc-N.json`, created-new-before-delete-old,
-    * never overwritten in place): a fixed-name root checkpoint would
-    * need a delete-then-rename swap whose crash window leaves the
-    * deltas uncovered — and a later commit, finding no base, would
-    * restart the ordinals UNDER the surviving deltas (silent wrong-base
-    * replay). The root `_spatial_metadata.json` remains as the LEGACY
-    * base (pre-delta-log datasets) and is swept by the first fold,
-    * exactly like `_generations.json` was for the manifest. */
-  private[graft] val ScDirName = "_sc"
-  /** LEGACY (pre-r16) twin-name layout — still read, swept by the
-    * first fold, never written (see [[GenArtPrefix]] for why the
-    * kind-in-the-name layout had a cross-name shadow window). */
-  private[graft] val ScDeltaPrefix = "_scdelta-"
-  private[graft] val ScCkptPrefix = "_scckpt-"
-  /** CURRENT single-name-per-ordinal layout: `_sc-N.json`, kind in the
-    * canonical text head (checkpoints start `{"version":1,"_commit":`,
-    * deltas `{"version":1,"del":[`) — the manifest's `_gen-N.json`
-    * twin, same P3 whole-ordinal arbitration. */
-  private[graft] val ScArtPrefix = "_sc-"
-  private def scDeltaName(commit: Int) = s"$ScDeltaPrefix$commit.json"
-  private def scCkptName(commit: Int) = s"$ScCkptPrefix$commit.json"
-  private[graft] def scArtName(commit: Int) = s"$ScArtPrefix$commit.json"
-  private def scLogDir(path: String): String = s"$path/$ScDirName"
-
-  /** Kind of a unified `_sc-N.json` artifact by its canonical head
-    * (both shapes are machine-rendered, commit-time self-round-trip
-    * checked): Some(true) = materialized checkpoint, Some(false) =
-    * delta, None = neither — same dead-vs-live error policy as
-    * [[genArtKind]]. */
-  private[graft] def scArtKind(text: String): Option[Boolean] = {
-    val t = text.trim
-    if (t.startsWith("{\"version\":1,\"_commit\":")) Some(true)
-    else if (t.startsWith("{\"version\":1,\"del\":[")) Some(false)
-    else None
+  /** The sidecar log's state: the CAS ordinal and the bounds blocks.
+    * `text` is the canonical text: verbatim when the state was read
+    * straight from one artifact (so a pre-delta-log root sidecar reads
+    * back byte-identical), rendered once otherwise. Equality compares
+    * the bounds by value, as the commit's self-round-trip needs. */
+  private[graft] final class ScState(val commit: Int,
+      val bounds: Map[String, Map[String, Array[Double]]],
+      source: Option[String] = None) {
+    lazy val text: String = source.getOrElse(renderSidecar(bounds, commit))
+    override def equals(o: Any): Boolean = o match {
+      case s: ScState => commit == s.commit && sameBounds(bounds, s.bounds)
+      case _ => false
+    }
+    override def hashCode: Int = commit
   }
 
-  /** [[scArtKind]] for a LIVE artifact: unknown head = ERROR. */
-  private[graft] def scArtIsCkpt(text: String, where: String): Boolean =
-    scArtKind(text).getOrElse(throw new IllegalArgumentException(
-      s"malformed unified sidecar log artifact at $where: head is " +
-        "neither a checkpoint nor a delta"))
-
-  /** Per-process memo of the MATERIALIZED sidecar text, keyed on an
-    * md5 over the root checkpoint text AND every applicable delta
-    * text: pure content addressing, so no same-path rebuild or
-    * snapshot restore can ever alias (a stat signature could — fixed-
-    * width names collide in length, object-store mtimes are coarse).
-    * The hash costs one pass over bytes the read fetches anyway; what
-    * the memo saves is the parse+apply+render, exactly the part that
-    * grows with the live file count. */
-  private val scTextMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** The sidecar as a [[VersionedLog]] in `_sc/`: checkpoints are
+    * [[renderSidecar]] texts (head `{"version":1,"_commit":`), deltas
+    * [[renderScDelta]] texts (head `{"version":1,"del":[`); the root
+    * `_spatial_metadata.json` is the pre-delta-log base. */
+  private[graft] val scLog = new VersionedLog[ScState, ScDelta](
+    dirName = "_sc", artPrefix = "_sc-", markerPrefix = ".sccommit-",
+    idPrefix = "_scid-", label = "sidecar", legacyRoot = SidecarName,
+    ordinal = _.commit,
+    renderState = _.text,
+    parseState = (t, _) =>
+      new ScState(sidecarCommit(t).getOrElse(0), parseSidecarAll(t), Some(t)),
+    renderDelta = renderScDelta,
+    parseDelta = parseScDelta,
+    kindOf = { text =>
+      val t = text.trim
+      if (t.startsWith("{\"version\":1,\"_commit\":")) Some(true)
+      else if (t.startsWith("{\"version\":1,\"del\":[")) Some(false)
+      else None
+    },
+    applyDelta = (s, d, n) => new ScState(n, applyScDelta(s.bounds, d)))
 
   /** Sidecar text via the Hadoop FileSystem API, so every helper works
     * on any supported filesystem (file:, hdfs://, s3a://, ...) exactly
-    * like the planner rule. None when no sidecar exists. The returned
-    * text is the MATERIALIZED current state: the root checkpoint with
-    * any contiguous `_sc/` delta commits applied and the CAS ordinal
-    * advanced accordingly — datasets without deltas (including every
-    * pre-delta-log dataset) return their root text byte-identical. */
+    * like the planner rule. None when no sidecar exists. The text is
+    * the MATERIALIZED current state: checkpoint plus deltas, rendered
+    * as one canonical sidecar, so every consumer parses exactly what it
+    * always did; a state read from one artifact returns its bytes. */
   private[graft] def readSidecarText(path: String, conf: Configuration): Option[String] =
-    readSidecarFull(path, conf).map(_._1)
-
-  /** [[readSidecarText]] plus how many deltas sit on top of the root
-    * checkpoint (the fold trigger). Retries transient windows: the
-    * fold's checkpoint swap can momentarily hide the root file while
-    * deltas still exist, and its cleanup can delete a delta between
-    * our listing and our read. */
-  private[graft] def readSidecarFull(path: String, conf: Configuration)
-      : Option[(String, Int)] = {
-    val scDir = new HadoopPath(scLogDir(path))
-    val fs = scDir.getFileSystem(conf)
-    def listSc(): Seq[(String, Long, Long)] =
-      try fs.listStatus(scDir).map(st => (st.getPath.getName, st.getLen,
-        st.getModificationTime)).toSeq.sortBy(_._1)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    def readArt(name: String): Option[String] =
-      try readTextFile(scLogDir(path), name, conf)
-      catch { case _: java.io.FileNotFoundException => None }
-    var attempts = 0
-    while (attempts < 50) {
-      attempts += 1
-      val entries = listSc()
-      // unified artifacts (`_sc-N.json`, current layout) carry their
-      // kind in the text head — read + classify up front with the
-      // policy SHARED with the manifest reader ([[classifyUniArts]]:
-      // dead-vs-live for vanished and malformed ordinals, twin-drop
-      // warning). None = a LIVE artifact vanished → re-list.
-      val legacyScCkptOrdsAll = entries.flatMap(e =>
-        ordinalOf(e._1, ScCkptPrefix))
-      val uniArtsOpt = classifyUniArts(entries.map(_._1), ScArtPrefix,
-        scArtName, scArtKind, legacyScCkptOrdsAll,
-        entries.flatMap(e => ordinalOf(e._1, ScDeltaPrefix)),
-        scLogDir(path), readArt, "sidecar", path)
-      if (uniArtsOpt.isEmpty) {
-        if (attempts >= 8) throw new java.io.IOException(
-          s"sidecar log artifact at $path vanished across retries — " +
-            "torn dataset")
-        Thread.sleep(10L * attempts)
-      } else {
-      val uniArts = uniArtsOpt.get
-      val uniTexts = uniArts.texts
-      val uniCkptOrds = uniArts.ckptOrds
-      val uniDeltaOrds = uniArts.deltaOrds
-      val deltaOrdsAll = (uniDeltaOrds ++ entries.flatMap(e =>
-        ordinalOf(e._1, ScDeltaPrefix))).distinct
-      // base selection uses the classifier's POST-POLICY legacy set
-      // (twins excluded, except the twin-only fallback) — the gen
-      // reader's identical policy, by construction
-      val ckptOrds = (uniArts.legacyCkptOrds ++ uniCkptOrds).distinct
-      // base: the max versioned checkpoint across BOTH namespaces; the
-      // legacy root file only when none exists yet (pre-delta-log
-      // dataset, swept by the first fold). A checkpoint vanishing
-      // between the listing and the read means a newer fold's cleanup
-      // raced us — re-list.
-      val root = ckptOrds.maxOption match {
-        case Some(n) =>
-          if (uniCkptOrds.contains(n)) uniTexts.get(n)
-          else readArt(scCkptName(n))
-        case None =>
-          // FNF-guarded like every other artifact read (the gen
-          // reader's readArtifact twin): a migration fold can sweep
-          // the legacy root between our exists-probe and the open —
-          // that is a retry, never a crash out of the 50-attempt loop
-          try readTextFile(path, SidecarName, conf)
-          catch { case _: java.io.FileNotFoundException => None }
-      }
-      def deltaText(n: Int): Option[String] =
-        if (uniDeltaOrds.contains(n)) uniTexts.get(n)
-        else readArt(scDeltaName(n))
-      def deltaWhere(n: Int): String =
-        if (uniDeltaOrds.contains(n)) s"${scLogDir(path)}/${scArtName(n)}"
-        else s"${scLogDir(path)}/${scDeltaName(n)}"
-      root match {
-        case None =>
-          if (ckptOrds.isEmpty && deltaOrdsAll.isEmpty) {
-            // "no sidecar at all" must be CONFIRMED: a migration fold
-            // racing this read can have written its checkpoint and
-            // swept the legacy root between our _sc listing and our
-            // root read (the same interleaving the manifest reader
-            // confirms against). A checkpoint in the fresh listing
-            // means retry; still nothing means genuinely no sidecar.
-            // Unified artifacts need an open to classify — one that
-            // vanishes mid-confirm is a racing fold: NOT confirmed.
-            val fresh = listSc()
-            val legacyCkpt = fresh.exists(e =>
-              ordinalOf(e._1, ScCkptPrefix).isDefined)
-            // vanished mid-confirm and unclassifiable heads both count
-            // as "maybe a checkpoint" — not confirmed; the main pass
-            // raises the precise error if the artifact participates
-            val uniMaybeCkpt = fresh
-              .flatMap(e => ordinalOf(e._1, ScArtPrefix)).exists { o =>
-                readArt(scArtName(o)).flatMap(scArtKind).forall(identity)
-              }
-            if (!legacyCkpt && !uniMaybeCkpt)
-              return None
-          } else if (ckptOrds.isEmpty && attempts >= 8) {
-            // deltas with no readable base, persistently: someone
-            // deleted the checkpoint out of protocol. THROW like the
-            // manifest's torn-dataset error — a conservative None here
-            // would let the next commit fabricate a fresh base UNDER
-            // the surviving deltas (wrong-base replay, or permanently
-            // non-contiguous ordinals bricking every later read)
-            throw new java.io.IOException(
-              s"sidecar log at $path has deltas but no readable " +
-                "checkpoint — torn dataset")
-          }
-          // a LISTED checkpoint whose read found nothing is a racing
-          // fold's cleanup — retry into the fresh listing
-          Thread.sleep(10L * attempts)
-        case Some(text) =>
-          val v = sidecarCommit(text).getOrElse(0)
-          val applicable = deltaOrdsAll.filter(_ > v).sorted
-          if (applicable.isEmpty) return Some((text, 0))
-          val contiguous = applicable ==
-            (v + 1 to v + applicable.length)
-          if (contiguous) {
-            val texts = applicable.map(deltaText)
-            // the signature CONTENT-hashes everything it covers —
-            // checkpoint and deltas — so no rebuild/restore at the same
-            // path can ever alias (a stat signature could: fixed-width
-            // names collide in length, object-store mtimes are coarse).
-            // Deltas are O(change)-small and read here anyway; what the
-            // memo saves is the O(live-files) parse + apply + render.
-            val md = java.security.MessageDigest.getInstance("MD5")
-            md.update(text.getBytes(StandardCharsets.UTF_8))
-            texts.foreach(t => md.update(
-              t.getOrElse("\u0000").getBytes(StandardCharsets.UTF_8)))
-            val sig = java.util.Base64.getEncoder.encodeToString(md.digest()) +
-              "|" + applicable.mkString(",")
-            val hit = scTextMemo.get(path)
-            if (hit != null && hit._1 == sig)
-              return Some((hit._2, applicable.length))
-            if (texts.forall(_.isDefined)) {
-              val st = applicable.zip(texts)
-                .foldLeft(parseSidecarAll(text)) { case (s, (n, t)) =>
-                  applyScDelta(s, parseScDelta(t.get, deltaWhere(n)))
-                }
-              val out = renderSidecar(st, v + applicable.length)
-              if (scTextMemo.size > 64) scTextMemo.clear()
-              scTextMemo.put(path, (sig, out))
-              return Some((out, applicable.length))
-            } // a delta vanished: fold cleanup raced the listing — retry
-          } // non-contiguous: our root read predates a fold — retry
-          Thread.sleep(5L * attempts)
-      }
-      }
-    }
-    throw new java.io.IOException(
-      s"unable to obtain a consistent sidecar read at $path " +
-        "after 50 attempts")
-  }
-
-  private def readTextFile(path: String, name: String,
-                           conf: Configuration): Option[String] = {
-    val p = new HadoopPath(path, name)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-  }
+    scLog.read(path, conf).map(_._1.text)
 
   /** Read a dataset, pruning files whose stored bounds do not intersect
     * `bounds` (x0, y0, x1, y1). Mirrors read_parquet_dask's partition
@@ -2593,214 +2103,30 @@ object GeoParquet {
       rwAdd: Set[Int], rwDel: Set[Int],
       set: Map[String, GenEntry], del: Set[String])
 
-  private[graft] val DeltaFoldEvery = 16
-  /** Every log artifact lives in this dedicated subdirectory (<= ~
-    * DeltaFoldEvery + 2 entries at any time): readers discover the
-    * newest checkpoint and the deltas with ONE small listing instead
-    * of paging the whole (possibly million-file) dataset directory. An
-    * underscore prefix keeps it invisible to Spark's data listings. */
-  private[graft] val GenDirName = "_gen"
-  /** LEGACY (pre-r16) twin-name layout: deltas and checkpoints carried
-    * their kind in the NAME, so a >2s-stalled fold's `_genckpt-N`
-    * could land BESIDE an adopter's committed `_gendelta-N` — two
-    * different names at one ordinal that no never-replace publish can
-    * referee, and readers taking the max checkpoint silently shadowed
-    * the delta (the protocol's one documented lost-commit residual).
-    * Still READ (and swept by the first fold) for existing datasets;
-    * never written. */
-  private[graft] val DeltaPrefix = "_gendelta-"
-  private[graft] val CkptPrefix = "_genckpt-"
-  /** CURRENT single-name-per-ordinal layout: ordinal N is exactly ONE
-    * artifact `_gen-N.json` whose KIND lives in the canonical text
-    * itself (checkpoints start `{"_commit":`, deltas `{"_dcommit":` —
-    * both strict-round-trip shapes, so the head is load-bearing and
-    * verified). With one name per ordinal the P3 never-replace publish
-    * ([[LogFs.linkNoReplace]], EEXIST-atomic on `file://`) arbitrates
-    * the WHOLE ordinal: a stalled fold's checkpoint and an adopter's
-    * delta now collide on the NAME and one of them LOSES loudly —
-    * the cross-name shadow window is closed, not narrowed. */
-  private[graft] val GenArtPrefix = "_gen-"
-  /** Dataset identity: an empty `_genid-<uuid>` file whose NAME (never
-    * its content — it is listed, not opened) feeds the log-read memo's
-    * listing signature. Without it, a dataset DELETED and REBUILT at
-    * the same path whose checkpoint coincides in name, byte length,
-    * and mtime granule (coarse object-store mtimes make length the
-    * only real discriminator — and part-file names are fixed-width,
-    * so lengths collide by construction) would serve the memoized
-    * stale state. Created at FOLD time only (first commit and every
-    * [[DeltaFoldEvery]]-th), so steady-state delta commits pay no
-    * extra RPC; never deleted by any cleanup. Two racing folds can
-    * leave two id files — harmless, the signature just carries both. */
-  private[graft] val IdPrefix = "_genid-"
-  private def deltaName(commit: Int) = s"$DeltaPrefix$commit.json"
-  private def ckptName(commit: Int) = s"$CkptPrefix$commit.json"
-  private[graft] def genArtName(commit: Int) = s"$GenArtPrefix$commit.json"
-  private def ordinalOf(name: String, prefix: String): Option[Int] =
-    if (name.startsWith(prefix) && name.endsWith(".json"))
-      name.stripPrefix(prefix).stripSuffix(".json").toIntOption
-    else None
-  // the namespaces cannot alias: "_gendelta-5.json".stripPrefix("_gen-")
-  // = "delta-5" has no integer ordinal, and "_genid-…" never carries
-  // the "_gen-" dash. Same for "_sc-" vs "_scdelta-"/"_scckpt-".
+  private[graft] val DeltaFoldEvery = VersionedLog.DeltaFoldEvery
 
-  /** Kind of a unified `_gen-N.json` artifact, decided by the
-    * canonical text's HEAD (both render shapes are strict-round-trip
-    * machine text, so the first key is as load-bearing as a name):
-    * Some(true) = full-state checkpoint, Some(false) = delta, None =
-    * neither (hand edit / truncation / out-of-band damage). Whether
-    * None is an error depends on whether the artifact PARTICIPATES:
-    * a damaged straggler at or below the live checkpoint is dead
-    * (ignored, swept by the next fold — opening it at all is new in
-    * the unified layout, and it must not brick reads the legacy
-    * layout survived), while a damaged artifact that would
-    * participate in the state is a loud [[genArtIsCkpt]] error. */
-  private[graft] def genArtKind(text: String): Option[Boolean] = {
-    val t = text.trim
-    if (t.startsWith("{\"_commit\":")) Some(true)
-    else if (t.startsWith("{\"_dcommit\":")) Some(false)
-    else None
-  }
+  /** The manifest as a [[VersionedLog]] in `_gen/`: checkpoints are
+    * [[renderGenState]] texts (head `{"_commit":`), deltas
+    * [[renderGenDelta]] texts (head `{"_dcommit":`); the root
+    * `_generations.json` is the pre-delta-log base (both of its shapes
+    * parse through [[parseGenState]]). */
+  private[graft] val genLog = new VersionedLog[GenState, GenDelta](
+    dirName = "_gen", artPrefix = "_gen-", markerPrefix = ".gencommit-",
+    idPrefix = "_genid-", label = "generation", legacyRoot = GenerationsName,
+    ordinal = _.commit,
+    renderState = renderGenState,
+    parseState = parseGenState,
+    renderDelta = renderGenDelta,
+    parseDelta = parseGenDelta,
+    kindOf = { text =>
+      val t = text.trim
+      if (t.startsWith("{\"_commit\":")) Some(true)
+      else if (t.startsWith("{\"_dcommit\":")) Some(false)
+      else None
+    },
+    applyDelta = (s, d, _) => applyGenDelta(s, d))
 
-  /** [[genArtKind]] for a LIVE artifact: unknown head = ERROR. */
-  private[graft] def genArtIsCkpt(text: String, where: String): Boolean =
-    genArtKind(text).getOrElse(throw new IllegalArgumentException(
-      s"malformed unified log artifact at $where: head is neither a " +
-        "checkpoint nor a delta"))
-
-  /** One listing's unified-artifact view, shared by BOTH log readers
-    * (the classification policy must never drift between the twins):
-    * unified checkpoints, usable unified deltas, the texts already in
-    * hand, and `legacyCkptOrds` — the POST-POLICY set of legacy
-    * checkpoint ordinals the reader may use for base selection.
-    * Legacy twins (a legacy name at an ordinal a unified artifact
-    * holds) are excluded from it, so a pre-r16 stalled fold's
-    * `_genckpt-N` can never shadow the committed `_gen-N.json` —
-    * UNLESS the chain without the twin is UNREADABLE (no base, or a
-    * delta gap a pre-r16 fold's sweep left): then the highest twin
-    * checkpoint that yields a consistent read is included, because
-    * drop-the-colliding-commit must degrade to readable-with-loss,
-    * never to a permanently torn dataset. The classifier's own
-    * dead/live horizons use the same post-policy set, so a dead
-    * straggler below a twin-only base stays dead. */
-  private[graft] final case class UniArts(ckptOrds: Seq[Int], deltaOrds: Seq[Int],
-                                   texts: Map[Int, String],
-                                   legacyCkptOrds: Seq[Int])
-
-  /** Once-per-(path, twin-set) guard for the dropped-twin warning: a
-    * read-only dataset stuck in the twin state must not log the
-    * multi-line WARN on every sidecar read forever. Bounded like the
-    * log-read memos. */
-  private val warnedTwins =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Read + classify every unified artifact in one listing. Policies
-    * (identical for `_gen`/`_sc`):
-    *  - VANISHED between listing and read: dead (ignored) when a
-    *    checkpoint at or above its ordinal is visible in this listing
-    *    — that is a fold's sweep racing us over an artifact nobody
-    *    needs; a vanish that could PARTICIPATE returns None → the
-    *    caller re-lists (bounded by its attempts guard).
-    *  - MALFORMED head: dead (ignored, next fold sweeps) below the
-    *    max checkpoint; a LIVE one throws via `strictKind` — the
-    *    strict-parse philosophy, scoped to artifacts that matter.
-    *  - LEGACY TWIN at a unified ordinal: the unified artifact wins;
-    *    warn loudly — an unsupported pre-r16 writer lost that commit.
-    */
-  private[graft] def classifyUniArts(
-      listedNames: Seq[String], artPrefix: String, artNameOf: Int => String,
-      kindOf: String => Option[Boolean],
-      legacyCkptOrds: Seq[Int], legacyDeltaOrds: Seq[Int],
-      dirWhere: String, read: String => Option[String],
-      logLabel: String, path: String): Option[UniArts] = {
-    val uniOrds = listedNames.flatMap(ordinalOf(_, artPrefix)).sorted
-    val texts: Map[Int, String] =
-      uniOrds.flatMap(o => read(artNameOf(o)).map(o -> _)).toMap
-    val present = uniOrds.filter(texts.contains)
-    val uniCkpt = present.filter(o => kindOf(texts(o)).contains(true))
-    // legacy twins never out-rank unified artifacts anywhere — not
-    // even in the coverage horizon below — UNLESS the chain WITHOUT
-    // the twin is unreadable. A pre-r16 fold folds at N and sweeps
-    // the legacy deltas its twin covered, which can leave (a) no
-    // other versioned base at all, or (b) a stale base below a delta
-    // GAP; in both shapes the highest twin checkpoint that yields a
-    // CONSISTENT read becomes the base (readable-with-loss), and the
-    // dead/live horizons agree with that choice by construction. The
-    // preference test is contiguity of the post-dedup delta ordinals
-    // above the post-policy base — when that chain is whole, the
-    // unified commits win and the twin is ignored (the shadow stays
-    // closed).
-    val twins = (legacyDeltaOrds ++ legacyCkptOrds).toSet
-      .intersect(uniOrds.toSet)
-    val nonTwinLegacyCkpt = legacyCkptOrds.filterNot(twins.contains)
-    val malformed = present.filter(o => kindOf(texts(o)).isEmpty)
-    val uniDelta = present
-      .filterNot(uniCkpt.contains).filterNot(malformed.contains)
-    val deltaSet = (uniDelta ++ legacyDeltaOrds).distinct.sorted
-    def contiguousAbove(b: Int): Boolean = {
-      val ds = deltaSet.filter(_ > b)
-      ds == (b + 1 to b + ds.length)
-    }
-    val postMax = (nonTwinLegacyCkpt ++ uniCkpt).maxOption
-    val twinMax = legacyCkptOrds.filter(twins.contains).maxOption
-    val twinWanted = twinMax.exists(t =>
-      postMax.forall(_ < t) &&
-        postMax.forall(b => !contiguousAbove(b)) &&
-        contiguousAbove(t))
-    // The fallback expands the coverage horizon (ckptMax) up to the
-    // legacy twin — which would reclassify a unified artifact that
-    // VANISHED between listing and read as dead, below the vanish
-    // check's horizon. But a transient vanish is exactly what can have
-    // created the delta gap that ENGAGED the fallback, so that verdict
-    // is circular: engage it only when every LISTED unified ordinal
-    // was actually read; otherwise re-list (None — bounded by the
-    // caller's attempts guard). A persistent gap still converges: a
-    // genuinely swept artifact drops out of the next LISTING, allRead
-    // holds, and the fallback proceeds.
-    val allRead = present.length == uniOrds.length
-    if (twinWanted && !allRead) return None
-    val useTwin = twinWanted
-    val effLegacyCkpt =
-      if (useTwin) (nonTwinLegacyCkpt ++ twinMax).distinct
-      else nonTwinLegacyCkpt
-    val ckptMax = (effLegacyCkpt ++ uniCkpt).maxOption
-    def liveOnly(ords: Seq[Int]): Seq[Int] =
-      ckptMax.fold(ords)(b => ords.filter(_ > b))
-    if (liveOnly(uniOrds.filterNot(texts.contains)).nonEmpty) return None
-    val liveMalformed = liveOnly(malformed)
-    if (liveMalformed.nonEmpty) throw new IllegalArgumentException(
-      s"malformed unified $logLabel log artifact at " +
-        s"$dirWhere/${artNameOf(liveMalformed.head)}: head is neither " +
-        "a checkpoint nor a delta")
-    if (twins.nonEmpty && {
-        // membership FIRST: an over-capacity set must not clear (and
-        // thereby re-log) a dataset whose key is already present —
-        // eviction runs only when a genuinely NEW key is about to go
-        // in (evicted datasets re-warn once each; bounded, not spam)
-        val key = s"$path|$logLabel|${twins.toSeq.sorted.mkString(",")}"
-        !warnedTwins.contains(key) && {
-          if (warnedTwins.size > 256) warnedTwins.clear()
-          warnedTwins.add(key)
-        }
-      }) {
-      // name the RIGHT loser: in the twin-fallback the legacy
-      // checkpoint IS the base and it is the CURRENT format's
-      // colliding commit that is dropped; everywhere else the
-      // pre-r16 writer's twin is the one ignored
-      val loser =
-        if (useTwin)
-          "the legacy checkpoint is the only readable base, so the " +
-            "CURRENT-format commit(s) at the colliding ordinal(s) " +
-            "were dropped"
-        else "its commits at those ordinals were ignored"
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$logLabel log at $path has legacy twin-name artifacts at " +
-          s"ordinal(s) ${twins.toSeq.sorted.mkString(",")} beside " +
-          "unified ones — a pre-r16 writer is sharing this dataset " +
-          s"(unsupported during migration); $loser. " +
-          "Upgrade all writers together.")
-    }
-    Some(UniArts(uniCkpt, uniDelta, texts, effLegacyCkpt))
-  }
+  private[graft] def genArtName(commit: Int): String = genLog.artName(commit)
 
   private[graft] def renderGenDelta(d: GenDelta): String =
     s"""{"_dcommit":${d.commit},"_min":${d.minGen},"_rwa":[""" +
@@ -2872,541 +2198,24 @@ object GeoParquet {
       files = (prev.files -- d.del) ++ d.set,
       rewrites = prev.rewrites -- d.rwDel ++ d.rwAdd)
 
-  /** The manifest state plus how many deltas sit on top of the
-    * checkpoint (the commit path folds a new checkpoint once this
-    * reaches [[DeltaFoldEvery]]). ONE listing of the tiny `_gen/` dir
-    * discovers checkpoints and deltas together; the base is the
-    * HIGHEST-ordinal checkpoint (the fold creates the new one before
-    * deleting older ones, so a max-ordinal checkpoint always exists —
-    * no delete-then-rename window can leave the log uncovered), with
-    * the legacy root `_generations.json` as the pre-delta-era
-    * fallback. Any file vanishing between the listing and its read is
-    * a racing fold's cleanup — the base was superseded; re-list (the
-    * new checkpoint covers everything). A GAP in the delta ordinals
-    * above the base has the same cause and the same cure. Either
-    * persisting across retries is a torn dataset (hand-deleted file),
-    * an ERROR — never a silently older snapshot. */
-  /** Per-process memo of the last assembled state per dataset, keyed
-    * by the log's LISTING SIGNATURE (max checkpoint ordinal + delta
-    * ordinal set). Log artifacts are immutable once their atomic
-    * rename lands (ordinals are claimed exclusively; a same-ordinal
-    * rewrite is out of protocol and caught by the commit read-back),
-    * so an identical signature implies identical content — the memo
-    * skips the per-artifact opens and parses, not the listing, which
-    * stays the freshness authority. Metadata-read-heavy paths
-    * (statsAtGeneration per generation, history, per-read manifest
-    * checks) would otherwise pay ~DeltaFoldEvery small opens each.
-    * Only versioned-checkpoint reads are memoized (legacy and
-    * no-manifest conclusions go through the confirm step). Bounded:
-    * cleared wholesale past 64 datasets. */
-  private val genStateMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[(String, Long, Long)], (GenState, Int))]()
-
-  private[graft] def readGenStateFull(path: String, conf: Configuration)
-      : Option[(GenState, Int)] = {
-    val genDir = new HadoopPath(path, GenDirName)
-    val fs = genDir.getFileSystem(conf)
-    // one listing of _gen: (artifact statuses, dir-exists) — existence
-    // is free here (FNF vs empty success), no separate exists() RPC.
-    // Statuses (name, length, mtime) feed the memo signature: a
-    // dataset DELETED and REBUILT at the same path reuses ordinal 1,
-    // so ordinals alone cannot discriminate content.
-    def listGen(): (Seq[(String, Long, Long)], Boolean) =
-      try (fs.listStatus(genDir).map(st => (st.getPath.getName, st.getLen,
-        st.getModificationTime)).toSeq.sortBy(_._1), true)
-      catch { case _: java.io.FileNotFoundException => (Nil, false) }
-    // every conclusion that did NOT come from a versioned checkpoint
-    // (a legacy-based state, or "no manifest at all") is CONFIRMED by
-    // re-listing _gen: the migration fold writes its versioned
-    // checkpoint BEFORE sweeping anything at the root, so if no
-    // versioned checkpoint exists at confirm time, no sweep can have
-    // raced the legacy reads this attempt made — the conclusion
-    // stands. If one appeared, retry into it. This closes every
-    // stale-legacy / transient-None interleaving at the cost of one
-    // extra tiny-dir (or FNF) round-trip on the non-steady-state
-    // paths only.
-    // exists-then-open races a fold's cleanup on every artifact —
-    // treat a throw as vanished (superseded base), never corruption
-    def readArtifact(dir: String, name: String): Option[String] =
-      try readTextFile(dir, name, conf)
-      catch { case _: java.io.FileNotFoundException => None }
-    // a versioned checkpoint is a legacy-NAMED `_genckpt-…` or a
-    // unified artifact whose TEXT is a checkpoint — the latter needs
-    // an open to classify, which only the rare non-steady-state
-    // confirm paths pay (the tiny-dir artifacts are O(change) bytes).
-    // A unified artifact that vanishes mid-confirm is a racing fold's
-    // cleanup — NOT confirmed (retry into the fresh layout).
-    def confirmedNoVersionedCkpt(): Boolean = {
-      val entries = listGen()._1
-      entries.forall(e => ordinalOf(e._1, CkptPrefix).isEmpty) &&
-        !entries.flatMap(e => ordinalOf(e._1, GenArtPrefix)).exists { o =>
-          // vanished mid-confirm (racing fold) and unclassifiable
-          // heads both count as "maybe a checkpoint" — NOT confirmed;
-          // the main pass raises the precise error if the artifact
-          // actually participates
-          readArtifact(genLogDir(path), genArtName(o))
-            .flatMap(genArtKind).forall(identity)
-        }
-    }
-    var attempts = 0
-    var emptySeen = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 50) throw new java.io.IOException(
-        s"unable to obtain a consistent generation-log read at $path " +
-          "after 50 attempts")
-      val (statuses, genDirExists) = listGen()
-      val names = statuses.map(_._1)
-      // the signature is the full (name, length, mtime) listing of the
-      // log artifacts PLUS the dataset-identity file names ([[IdPrefix]]):
-      // identical signature implies identical content, and a same-path
-      // rebuild always carries a fresh identity name. Checked BEFORE
-      // the unified-artifact opens — the memo's whole point is to skip
-      // per-artifact reads, and it only ever stores conclusions from
-      // versioned-checkpoint reads, so a signature hit is safe
-      // regardless of what this attempt would have classified.
-      val sig = statuses.filter(e =>
-        ordinalOf(e._1, CkptPrefix).isDefined ||
-          ordinalOf(e._1, DeltaPrefix).isDefined ||
-          ordinalOf(e._1, GenArtPrefix).isDefined ||
-          e._1.startsWith(IdPrefix))
-      val hit = genStateMemo.get(path)
-      if (hit != null && hit._1 == sig) return Some(hit._2)
-      // unified artifacts (`_gen-N.json`, current layout) carry their
-      // kind in the text head — read + classify them up front (the
-      // same opens a base+deltas read pays anyway; only post-crash
-      // stragglers an upcoming fold will sweep cost an extra open).
-      // Shared policy with the sidecar reader: [[classifyUniArts]].
-      val legacyCkptOrdsAll = names.flatMap(ordinalOf(_, CkptPrefix))
-      val uniArtsOpt = classifyUniArts(names, GenArtPrefix, genArtName,
-        genArtKind, legacyCkptOrdsAll,
-        names.flatMap(ordinalOf(_, DeltaPrefix)), genLogDir(path),
-        n => readArtifact(genLogDir(path), n), "generation", path)
-      if (uniArtsOpt.isEmpty) {
-        // a LIVE unified artifact vanished between listing and read —
-        // a racing fold; re-list (persistently = torn)
-        if (attempts >= 8) throw new java.io.IOException(
-          s"generation log artifact at $path vanished across retries — " +
-            "torn dataset")
-        Thread.sleep(25L * math.min(attempts, 8))
-      } else {
-      val uniArts = uniArtsOpt.get
-      val uniTexts = uniArts.texts
-      val uniCkptOrds = uniArts.ckptOrds
-      // base selection uses the classifier's POST-POLICY legacy set
-      // (twins excluded, except the twin-only fallback — see
-      // [[UniArts.legacyCkptOrds]]), so the dead/live horizons and
-      // the effective base can never disagree
-      val ckptOrds =
-        (uniArts.legacyCkptOrds ++ uniCkptOrds).distinct.sorted
-      // legacy layouts put log artifacts at the ROOT: the pre-delta
-      // era's _generations.json checkpoint, and the one intermediate
-      // build's root-level deltas on top of it. Both are read until
-      // the first fold migrates and sweeps them. The root listing is
-      // taken ONLY on the legacy path (no versioned checkpoint yet) —
-      // steady-state reads never page the data directory.
-      // deltas merge BOTH namespaces: legacy-named `_gendelta-…`
-      // (and the intermediate era's root-level ones) read lazily by
-      // name, unified ones already in hand.
-      def legacyDeltaText(dir: String)(o: Int): Option[String] =
-        readArtifact(dir, deltaName(o))
-      val uniDeltaSrc: Seq[(Int, (String, Int => Option[String]))] =
-        uniArts.deltaOrds.map(o =>
-          o -> (s"${genLogDir(path)}/${genArtName(o)}",
-            (n: Int) => uniTexts.get(n)))
-      // deltas merge BOTH namespaces with the UNIFIED artifact
-      // preferred on a duplicate ordinal (distinctBy keeps the first
-      // occurrence): a mixed-version race can leave `_gendelta-N`
-      // beside `_gen-N.json`, and without the dedup the duplicate
-      // ordinal fails the contiguity check forever — a fake torn
-      // dataset instead of the documented mixed-version residual
-      // (classifyUniArts warned about the dropped twin).
-      val (base, deltaSrcs) = ckptOrds.lastOption match {
-        case Some(n) =>
-          val bText =
-            if (uniCkptOrds.contains(n))
-              Some(uniTexts(n) -> s"${genLogDir(path)}/${genArtName(n)}")
-            else readArtifact(genLogDir(path), ckptName(n))
-              .map(_ -> s"${genLogDir(path)}/${ckptName(n)}")
-          (bText.map { case (t, w) => parseGenState(t, w) },
-            (uniDeltaSrc ++
-             names.flatMap(ordinalOf(_, DeltaPrefix))
-               .map(o => o -> (s"${genLogDir(path)}/${deltaName(o)}",
-                 legacyDeltaText(genLogDir(path)) _))).distinctBy(_._1))
-        case None =>
-          val legacy = readArtifact(path, GenerationsName)
-            .map(parseGenState(_, s"$path/$GenerationsName"))
-          val rootNames =
-            if (legacy.isEmpty) Nil
-            else try fs.listStatus(new HadoopPath(path))
-              .map(_.getPath.getName).toSeq
-            catch { case _: java.io.FileNotFoundException => Nil }
-          (legacy,
-            (uniDeltaSrc ++
-             names.flatMap(ordinalOf(_, DeltaPrefix))
-              .map(o => o -> (s"${genLogDir(path)}/${deltaName(o)}",
-                legacyDeltaText(genLogDir(path)) _)) ++
-             rootNames.flatMap(ordinalOf(_, DeltaPrefix))
-               .map(o => o -> (s"$path/${deltaName(o)}",
-                 legacyDeltaText(path) _))).distinctBy(_._1))
-      }
-      val legacyBased = ckptOrds.isEmpty && base.isDefined
-      val deltaOrds = deltaSrcs.map(_._1).sorted
-      val deltaSrcOf = deltaSrcs.toMap
-      base match {
-        case None if ckptOrds.isEmpty && deltaOrds.isEmpty =>
-          // "no manifest at all" must be confirmed: a migration fold
-          // racing this attempt could have created _gen and swept the
-          // legacy checkpoint between our listing and our legacy read
-          // (SaveMode-ignore would otherwise reset an established
-          // dataset). An _gen dir that EXISTS but lists empty is
-          // either a torn first commit (legitimately manifest-less)
-          // or a readdir racing a fold — retried on its own counter.
-          if (confirmedNoVersionedCkpt()) {
-            if (!genDirExists) return None
-            emptySeen += 1
-            if (emptySeen >= 3) return None
-          }
-        case None =>
-          // listed a checkpoint/deltas but the base read found nothing:
-          // a fold's cleanup (or its crash window) — retry into the
-          // fresh listing
-          if (attempts >= 8) throw new java.io.IOException(
-            s"generation log at $path has artifacts but no readable " +
-              "checkpoint — torn dataset")
-        case Some(b) =>
-          val applicable = deltaOrds.filter(_ > b.commit)
-          val contiguous = applicable ==
-            (b.commit + 1 to b.commit + applicable.length)
-          if (contiguous) {
-            val texts = applicable.map(n => n -> deltaSrcOf(n)._2(n))
-            if (texts.forall(_._2.isDefined)) {
-              if (!legacyBased || confirmedNoVersionedCkpt()) {
-                val result = (texts.foldLeft(b) { case (s, (n, t)) =>
-                  applyGenDelta(s, parseGenDelta(t.get, deltaSrcOf(n)._1))
-                }, applicable.length)
-                if (!legacyBased) {
-                  if (genStateMemo.size > 64) genStateMemo.clear()
-                  genStateMemo.put(path, (sig, result))
-                }
-                return Some(result)
-              }
-              // else: a versioned checkpoint appeared while this
-              // attempt read the legacy base — nothing vanished, the
-              // dataset is healthy; retry into the checkpoint (the
-              // 50-attempt backstop bounds the loop)
-            } else if (attempts >= 8) throw new java.io.IOException(
-              s"generation delta at $path vanished across retries — " +
-                "torn dataset")
-          } else if (attempts >= 8) throw new java.io.IOException(
-            s"generation log at $path has a delta gap above commit " +
-              s"${b.commit} (${applicable.mkString(",")}) — torn dataset")
-      }
-      Thread.sleep(25L * math.min(attempts, 8))
-      }
-    }
-    None // unreachable
-  }
-
-  private def genLogDir(path: String): String = s"$path/$GenDirName"
-
-  /** Create the [[IdPrefix]] identity file if none exists (exclusive
-    * create; a racer winning the create, or any IO failure, is fine —
-    * the id is a memo-invalidation aid, never load-bearing for
-    * correctness of the log itself). */
-  private def ensureDatasetId(fs: org.apache.hadoop.fs.FileSystem,
-                              genDir: HadoopPath): Unit =
-    try {
-      val has =
-        try fs.listStatus(genDir).exists(_.getPath.getName.startsWith(IdPrefix))
-        catch { case _: java.io.FileNotFoundException => false }
-      if (!has)
-        fs.create(new HadoopPath(genDir,
-          IdPrefix + java.util.UUID.randomUUID().toString.take(12)), false)
-          .close()
-    } catch { case _: java.io.IOException => () }
-
   private[graft] def readGenState(path: String, conf: Configuration)
       : Option[GenState] =
-    readGenStateFull(path, conf).map(_._1)
+    genLog.read(path, conf).map(_._1)
 
-  /** Single-winner manifest commit (the "detected, not assumed"
-    * replacement for the old last-writer-wins rename): the writer that
-    * exclusively CREATES the `.gencommit-N` marker owns write ordinal
-    * N; a loser re-reads the (by then advanced) manifest and retries
-    * its update on top of it, so a concurrent API writer's commit is
-    * merged instead of clobbered. After the rename the manifest is
-    * read back and must be byte-identical — a non-API writer racing
-    * the rename is an IOException, never lost history. A marker whose
-    * manifest never lands (the owner crashed between the two steps) is
-    * adopted after ≥ 2 s of observed staleness, and a slow owner that
-    * resumes after being adopted is stopped by an ownership re-check
-    * (manifest already at its ordinal ⇒ claim void) before it can
-    * clobber the adopter. Exclusive create is atomic on local/HDFS
-    * semantics; object stores without atomic create-if-absent keep
-    * only the read-back detection.
-    *
-    * WHAT the winner writes (the 100×-commit design): ordinal N is
-    * exactly ONE artifact `_gen/_gen-N.json` ([[GenArtPrefix]]) —
-    * normally an O(change) delta, so per-commit driver work does not
-    * scale with the file count; a full-state checkpoint only for the
-    * FIRST commit, or when [[DeltaFoldEvery]] deltas have piled up
-    * (the kind lives in the text head, so the never-replace publish
-    * arbitrates the whole ordinal). The fold CREATES
-    * the new checkpoint before deleting anything, so a max-ordinal
-    * checkpoint always exists — a crash mid-fold can never leave
-    * deltas uncovered (the delete-then-rename window of a fixed-name
-    * checkpoint could). After read-back the fold deletes the older
-    * checkpoints, the deltas it covers, and the legacy root
-    * `_generations.json`; readers racing the cleanup re-list (see
-    * [[readGenStateFull]]); a crash mid-cleanup leaves stale
-    * artifacts every reader filters out and the next fold re-deletes.
-    *
-    * Both artifact kinds are self-round-trip-checked BEFORE the write:
-    * a file name the canonical text cannot represent fails THIS commit
-    * with the dataset untouched, instead of bricking every subsequent
-    * read of a log that no longer parses. */
+  /** Single-winner manifest commit: one commit of [[genLog]] (the
+    * protocol is stated there). `update` maps the current manifest
+    * (None = none yet) to the next; the commit ordinal is the log's.
+    * A retry that re-applies an update which already landed (an
+    * adoption or success-path cleanup voided our marker after the
+    * write) finds it CONVERGED and commits nothing: an empty delta
+    * would inflate the ordinals and break exact commit counting. */
   private[graft] def commitGenState(spark: SparkSession, path: String,
-      update: Option[GenState] => GenState): GenState = {
-    val conf = spark.sessionState.newHadoopConf()
-    val genDirStr = genLogDir(path)
-    val genDir = new HadoopPath(genDirStr)
-    val fs = genDir.getFileSystem(conf)
-    var lastCommitSeen = -1
-    var staleSinceNanos = 0L
-    var attempts = 0
-    while (attempts < 24) {
-      attempts += 1
-      val full = readGenStateFull(path, conf)
-      val cur = full.map(_._1)
-      val deltasOnTop = full.map(_._2).getOrElse(0)
-      val next = update(cur).copy(commit = cur.map(_.commit).getOrElse(0) + 1)
-      // converged-change no-op (commitSidecar's twin): a retry entered
-      // because success-path cleanup deleted our marker (or an adopter
-      // took the ordinal) re-applies the caller's update on state that
-      // already CONTAINS it; committing that would write a spurious
-      // empty delta, inflating ordinals under contention and breaking
-      // exact commit-count accounting (CrossProcessSpec's 1+appends)
-      if (cur.exists(c => next == c.copy(commit = next.commit)))
-        return cur.get
-      val marker = new HadoopPath(genDir, s".gencommit-${next.commit}")
-      val nonce = java.util.UUID.randomUUID().toString
-      if (claimMarker(fs, marker, nonce)) {
-        // ownership re-check via the marker NONCE right before the
-        // write: if we stalled long enough after claiming that a loser
-        // adopted the ordinal (deleted + re-created the marker), its
-        // content no longer holds our nonce and our claim is void —
-        // fall back into the retry loop instead of clobbering the
-        // adopter's commit. The ORDINAL re-check closes the other
-        // hole: success-path cleanup deletes committed markers, so a
-        // writer that stalled across SEVERAL commits can re-claim an
-        // old ordinal with a fresh marker of its own — the manifest
-        // having reached its ordinal voids the claim regardless of
-        // who holds the marker. RESIDUAL window: an owner resuming in
-        // the microseconds between these checks and the rename can
-        // still clobber (rename-if-match does not exist on a plain
-        // filesystem); the read-back below catches one of the two
-        // orderings. Documented, not assumed impossible.
-        if (!markerHolds(fs, marker, nonce) ||
-            readGenState(path, conf).exists(_.commit >= next.commit)) {
-          Thread.sleep(25L * math.min(attempts, 8))
-        } else {
-        val fold = cur.isEmpty || deltasOnTop + 1 >= DeltaFoldEvery
-        // fold-time only: make sure the dataset has an identity file
-        // BEFORE the checkpoint lands (a crash in between leaves a
-        // harmless extra id the next fold's exists-check tolerates)
-        if (fold) ensureDatasetId(fs, genDir)
-        // self-round-trip BEFORE the write: a file name the canonical
-        // text cannot represent must fail THIS commit with the dataset
-        // untouched, not write a log later reads cannot parse. The
-        // strict parsers throw on any drift, so the check is
-        // try-wrapped to produce the write-side diagnostic.
-        def surviveCanonical(check: => Boolean): Unit = {
-          val ok = try check
-            catch { case _: IllegalArgumentException => false }
-          require(ok,
-            s"commit at $path aborted: the update does not survive the " +
-              "canonical log text (a file name the format cannot " +
-              "represent?) — dataset left untouched")
-        }
-        // single-name-per-ordinal: BOTH kinds publish `_gen-N.json`
-        // (kind lives in the canonical text head), so a stalled fold's
-        // checkpoint and an adopter's delta at the same ordinal now
-        // collide on the NAME and the P3 never-replace publish
-        // arbitrates — the cross-name shadow window is closed. The
-        // legacy twin names stay in `alsoAbsent` purely as
-        // mixed-version defense (an old JVM racing this one).
-        val text =
-          if (fold) {
-            val t = renderGenState(next)
-            surviveCanonical(parseGenState(t, "self-check") == next)
-            t
-          } else {
-            val d = diffGenState(cur.get, next)
-            val t = renderGenDelta(d)
-            surviveCanonical(parseGenDelta(t, "self-check") == d)
-            t
-          }
-        val name = genArtName(next.commit)
-        val wrote = writeTextNoReplace(spark, genDirStr, name, text,
-          alsoAbsent = Seq(deltaName(next.commit), ckptName(next.commit)))
-        if (!wrote) {
-          // a refused publish can recur at the SAME ordinal (transient
-          // probe fault with the manifest unmoved) — release the marker
-          // while it still carries OUR nonce, or the retry blocks on
-          // its own claim and waits out its own 2 s adoption clock
-          // while rivals read a live owner as a stale marker. The
-          // markerHolds-then-delete pair is check-then-act — the same
-          // residual shape as the 2 s adoption delete, caught by the
-          // ordinal re-checks and never-replace publish like it
-          if (markerHolds(fs, marker, nonce))
-            try fs.delete(marker, false)
-            catch { case _: java.io.IOException => () }
-          Thread.sleep(25L * math.min(attempts, 8))
-        } else {
-        val back =
-          try readTextFile(genDirStr, name, conf)
-          catch { case _: java.io.FileNotFoundException => None }
-        var retryCovered = false
-        if (!back.contains(text)) {
-          // our artifact GONE may be legitimate: a racing fold at a
-          // STRICTLY higher ordinal can only exist if some writer read
-          // and applied our commit first — the commit landed. A log
-          // gone but still readable AT our ordinal is a same-ordinal
-          // fold that covered-and-deleted our artifact WITHOUT having
-          // read it (the stale-fold shadow) — in-protocol, recoverable:
-          // retry re-applies on fresh state (the loop-head converged
-          // guard no-ops if the change is in fact inside). Only a
-          // DIFFERENT text under our name, or a state that went
-          // BACKWARD, is out-of-protocol interference — an error, or
-          // the clobbered writer's batch silently vanishes while its
-          // caller reports success.
-          var confirmFailure: Throwable = null
-          val stCommit: Option[Int] =
-            try readGenStateFull(path, conf).map(_._1.commit)
-            catch { case scala.util.control.NonFatal(e) =>
-              confirmFailure = e; None }
-          val landedAnyway = back.isEmpty && stCommit.exists(_ > next.commit)
-          retryCovered = back.isEmpty && stCommit.contains(next.commit)
-          if (!landedAnyway && !retryCovered) {
-            val ex = new java.io.IOException(
-              s"generation-manifest commit at $path interleaved with a " +
-                "writer outside the commit protocol (read-back mismatch " +
-                s"on ordinal ${next.commit}) — refusing to continue with " +
-                "lost history")
-            if (confirmFailure != null) ex.addSuppressed(confirmFailure)
-            throw ex
-          }
-        }
-        if (retryCovered) {
-          Thread.sleep(25L * math.min(attempts, 8))
-        } else {
-        // POST-write ownership re-check (mirrors commitSidecar's): a
-        // writer stalled past the 2 s adoption window between the
-        // pre-write checks and the write can land its artifact at an
-        // ordinal an adopter already owns — and if a later fold has
-        // already covered and deleted the adopter's artifact, the
-        // stale writer's read-back matches its OWN dead file and it
-        // would report success for a commit no reader will ever apply
-        // (a silently lost append). The marker no longer holding our
-        // nonce fingerprints the adoption: retry instead of returning —
-        // the retry re-applies the caller's update on the adopter's
-        // state (append/compaction updates are per-file upserts, so
-        // re-application converges; a change that already landed
-        // resolves via the converged-change no-op at the loop head,
-        // committing nothing). The stale-fold checkpoint clobber
-        // remains the documented residual, narrowed here.
-        if (!markerHolds(fs, marker, nonce)) {
-          Thread.sleep(25L * math.min(attempts, 8))
-        } else {
-        // cleanup, all inside the tiny _gen/ dir (one listing): after
-        // a verified fold the older checkpoints and the deltas it
-        // covers are dead (every reader takes the max checkpoint and
-        // filters ordinals <= its commit); dead markers (ordinals <=
-        // the current commit) and crashed writers' orphaned tmp files
-        // go in the same pass. Failures are harmless — the next fold
-        // re-deletes.
-        try {
-          val entries = fs.listStatus(genDir).map(_.getPath.getName)
-          // ".<artifact>.json.tmp-<uuid>" left by a crashed
-          // writeTextAtomic: recover the artifact stem and its ordinal
-          def tmpOrdinal(n: String): Option[Int] = {
-            val d = if (n.startsWith(".")) n.drop(1) else ""
-            val i = d.indexOf(".json.tmp-")
-            if (i <= 0) None
-            else {
-              val stem = d.substring(0, i) + ".json"
-              ordinalOf(stem, DeltaPrefix).orElse(ordinalOf(stem, CkptPrefix))
-                .orElse(ordinalOf(stem, GenArtPrefix))
-            }
-          }
-          // unified ordinals strictly below the fold's checkpoint are
-          // dead whatever their kind (deltas are covered, checkpoints
-          // superseded); the artifact AT next.commit is the checkpoint
-          // this fold just verified. Legacy-NAMED artifacts (pre-r16
-          // twin layout) are swept on the same fold: deltas <= N are
-          // covered, checkpoints < N superseded — this is the
-          // migration, after which the dataset is single-name only.
-          val dead = entries.filter { n =>
-            (fold && ordinalOf(n, GenArtPrefix).exists(_ < next.commit)) ||
-            (fold && ordinalOf(n, DeltaPrefix).exists(_ <= next.commit)) ||
-            (fold && ordinalOf(n, CkptPrefix).exists(_ < next.commit)) ||
-            n.startsWith(".gencommit-") &&
-              n.stripPrefix(".gencommit-").toIntOption.exists(_ < next.commit) ||
-            tmpOrdinal(n).exists(_ < next.commit)
-          }
-          dead.foreach(n => fs.delete(new HadoopPath(genDir, n), false))
-          // legacy-era artifacts at the ROOT (the pre-delta checkpoint
-          // and the one intermediate build's root deltas/markers) are
-          // superseded by the fold; the root listing is taken only
-          // when the legacy checkpoint actually exists
-          if (fold) {
-            val rootPath = new HadoopPath(path)
-            if (fs.exists(new HadoopPath(rootPath, GenerationsName))) {
-              fs.listStatus(rootPath).map(_.getPath.getName)
-                .filter(n => ordinalOf(n, DeltaPrefix).isDefined ||
-                  n.startsWith(".gencommit-") ||
-                  // the intermediate era's own crashed-writer tmp
-                  // files, matched by the EXACT writeTextAtomic shape
-                  // (".<stem>.json.tmp-<uuid>") — an unanchored
-                  // substring match could delete a user's look-alike
-                  // file in the data root
-                  tmpOrdinal(n).isDefined ||
-                  n.startsWith(s".$GenerationsName.tmp-"))
-                .foreach(n => fs.delete(new HadoopPath(rootPath, n), false))
-              fs.delete(new HadoopPath(rootPath, GenerationsName), false)
-            }
-          }
-        } catch { case _: java.io.IOException => () }
-        return next
-        }
-        }
-        }
-        }
-      } else {
-        // lost the marker race: wait for the winner's manifest, then
-        // retry on top of it. A marker whose manifest NEVER lands (the
-        // owner died between the two steps) is adopted — but only after
-        // the staleness has persisted ≥ 2 s of wall clock, so a merely
-        // SLOW owner (GC pause, slow store) keeps its claim; a live
-        // owner that stalls past that and resumes is caught by the
-        // ownership re-check above before it can clobber the adopter
-        val seen = cur.map(_.commit).getOrElse(0)
-        if (seen != lastCommitSeen || staleSinceNanos == 0L) {
-          lastCommitSeen = seen
-          staleSinceNanos = System.nanoTime()
-        } else if (System.nanoTime() - staleSinceNanos > 2000000000L) {
-          try fs.delete(marker, false)
-          catch { case _: java.io.IOException => () }
-          staleSinceNanos = 0L
-        }
-        Thread.sleep(25L * math.min(attempts, 8))
-      }
-    }
-    throw new java.io.IOException(
-      s"generation-manifest commit contention at $path: 24 attempts lost")
-  }
+      update: Option[GenState] => GenState): GenState =
+    genLog.commit(spark.sessionState.newHadoopConf(), path, (cur, n) => {
+      val next = update(cur).copy(commit = n)
+      if (cur.exists(_.copy(commit = n) == next)) None
+      else Some((next, cur.map(diffGenState(_, next))))
+    }).get
 
   /** Every geometry column recorded in a sidecar, with its per-file
     * bounds (column blocks are flat `{file:[...],...}` objects, so the
@@ -3429,25 +2238,8 @@ object GeoParquet {
     val colKey = "\"" + geomCol + "\":{"
     val start = json.indexOf(colKey)
     if (start < 0) return Map.empty
-    val body = json.substring(start + colKey.length)
-    val end = body.indexOf('}')
-    val entries = body.substring(0, end)
-    if (entries.trim.isEmpty) return Map.empty
     // entries look like: "file1":[1.0,2.0,3.0,4.0],"file2":[...]
-    val pat = "\"([^\"]+)\":\\[([^\\]]*)\\]".r
-    pat.findAllMatchIn(entries).map { m =>
-      // "[]" must round-trip like parseScDelta's — renderSidecar emits
-      // an empty array verbatim, and split(',') on "" would throw,
-      // turning a committed empty-array entry into a sidecar no later
-      // read, commit, or fold could ever parse (a poison pill the
-      // delta-side fix alone would have let THROUGH the commit gate)
-      val arrayBody = m.group(2).trim // NOT the enclosing `body` (JSON tail)
-      val vals = if (arrayBody.isEmpty) Array.empty[Double]
-        else arrayBody.split(',').map { s =>
-          val t = s.trim
-          if (t == "null") Double.NaN else t.toDouble
-        }
-      m.group(1) -> vals
-    }.toMap
+    val from = start + colKey.length
+    parseEntries(json.substring(from, json.indexOf('}', from)))
   }
 }

@@ -4,29 +4,24 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import org.apache.hadoop.fs.{FileSystem, Path => HadoopPath}
 
 /**
- * THE FILESYSTEM CONTRACT of the two commit protocols (`_gen/` and
- * `_sc/` delta logs), stated once, with the primitives implemented in
+ * THE FILESYSTEM CONTRACT of the lake's one commit log
+ * ([[VersionedLog]], whose two instances are the `_gen/` manifest and
+ * the `_sc/` sidecar), stated once, with the primitives implemented in
  * one place. Everything the CAS design assumes about the storage layer
  * is one of these three facts; anything weaker degrades exactly as
  * documented per primitive. SCOPE OF THE GUARANTEE: each primitive
- * arbitrates ONE name. Since r16 both logs are SINGLE-NAME-PER-ORDINAL
+ * arbitrates ONE name. The log is SINGLE-NAME-PER-ORDINAL
  * (`_gen-N.json` / `_sc-N.json`, kind tagged in the canonical text
- * head), so the publish arbitration covers the WHOLE ordinal: the old
- * cross-name shadow — a >2s-stalled fold's `_genckpt-N` landing beside
- * an adopter's committed `_gendelta-N` and shadowing it (readers take
- * the max checkpoint) — is structurally impossible between writers of
- * this format. MIXED VERSIONS ARE NOT SUPPORTED ON A SHARED DATASET:
- * a pre-r16 JVM's commits publish legacy twin names the current
- * reader deliberately ignores on a duplicate ordinal (and the first
- * fold sweeps) — every such commit is dropped, not raced — and once
- * any fold has migrated the layout, a pre-r16 JVM cannot even READ
- * the dataset (it knows only the legacy names, so it concludes no
- * manifest exists and a commit from it would fabricate a fresh legacy
- * base under the live log). Upgrade every JVM touching a dataset
- * together; the current reader logs a warning whenever it drops a
- * legacy twin so the misconfiguration is visible, and the current
- * writer's own publishes still probe the legacy names (`alsoAbsent`)
- * so IT never tramples an old JVM's committed artifact.
+ * head), so the publish arbitration covers the WHOLE ordinal: a
+ * >2s-stalled fold's checkpoint and an adopter's delta at the same
+ * ordinal collide on the name and one of them loses. MIXED VERSIONS
+ * ARE NOT SUPPORTED ON A SHARED DATASET: the pre-r16 layout carried
+ * the kind in the name, and this version does not read it — a log
+ * directory holding only such names fails loudly, naming the layout,
+ * rather than reading as "no log" (a commit would then build a fresh
+ * base under the live history); stray pre-r16 names beside a current
+ * checkpoint are ignored. Upgrade every JVM touching a dataset
+ * together.
  *
  * P1 EXCLUSIVE CREATE (load-bearing for the marker CAS): creating a
  *    file that must not already exist ([[exclusiveCreate]]) fails when
@@ -48,10 +43,10 @@ import org.apache.hadoop.fs.{FileSystem, Path => HadoopPath}
  *    lost race for one writer instead of a lost commit.
  *
  * P3 PUBLISH-NO-REPLACE (load-bearing for artifact immutability): a
- *    log artifact (`_gendelta-N` / `_genckpt-N` / `_scdelta-N` /
- *    `_scckpt-N`), once committed, is never silently overwritten — a
- *    stale writer publishing at an ordinal an adopter re-claimed must
- *    LOSE (and retry on fresh state), not clobber. On `file://` the
+ *    log artifact (`_gen-N.json` / `_sc-N.json`), once committed, is
+ *    never silently overwritten — a stale writer publishing at an
+ *    ordinal an adopter re-claimed must LOSE (and retry on fresh
+ *    state), not clobber. On `file://` the
  *    publish is a POSIX hard link ([[linkNoReplace]]): link(2) fails
  *    EEXIST atomically, so the probe-to-rename window of a plain
  *    exists+rename DOES NOT EXIST here. On filesystems without any

@@ -4,157 +4,106 @@ import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r16 single-name-per-ordinal log format: why it exists (the
-  * legacy twin-name layout's cross-name shadow window, PINNED here on
-  * a hand-built legacy log), why it closes the window (the same
-  * interleaving FORCED through the race seam now costs the fold a
-  * lost-race retry instead of shadowing the adopter's commit), and
-  * how pre-r16 datasets migrate (twin-name artifacts read exactly,
-  * new commits land unified beside them, the first fold sweeps the
-  * legacy names — including every crash-window intermediate state). */
+/** The r16 single-name-per-ordinal log format, on both instances of
+  * the lake's commit log (the generation manifest in `_gen/`, the
+  * bounds sidecar in `_sc/`): the fold-vs-adopter interleaving FORCED
+  * through the race seam costs the fold a lost-race retry instead of
+  * shadowing the adopter's commit; damaged artifacts are dead below the
+  * checkpoint and loud above it; the read memo never aliases a
+  * same-path rebuild; and a pre-r16 twin-name layout fails loudly
+  * instead of reading as "no log". */
 class LogFormatSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder().master("local[2]")
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.ui.enabled", "false").getOrCreate()
 
-  import GeoParquet.{GenDelta, GenEntry, GenState}
+  import GeoParquet.{GenDelta, GenEntry, GenState, ScDelta, ScState}
 
-  private def writeGen(path: String, name: String, text: String): Unit = {
-    val d = new java.io.File(s"$path/_gen")
+  private def writeGen(path: String, name: String, text: String): Unit =
+    writeLog(path, "_gen", name, text)
+
+  private def writeLog(path: String, dir: String, name: String,
+                       text: String): Unit = {
+    val d = new java.io.File(s"$path/$dir")
     d.mkdirs()
     java.nio.file.Files.writeString(new java.io.File(d, name).toPath, text)
   }
 
-  test("LEGACY twin-name layout: a stalled fold's checkpoint SHADOWS an adopter's same-ordinal delta (the residual the r16 format removes, pinned)") {
-    val dir = java.nio.file.Files.createTempDirectory("shadow-legacy").toFile
-    try {
-      val path = s"$dir/d"
-      val conf = spark.sessionState.newHadoopConf()
-      // commit 1: checkpoint {f1}
-      val stA = GenState(1, 0, Map("f1.parquet" -> GenEntry(0, -1)))
-      writeGen(path, "_genckpt-1.json", GeoParquet.renderGenState(stA))
-      // commit 2, the ADOPTER's delta: adds f2
-      val d2 = GenDelta(2, 0, Set.empty, Set.empty,
-        Map("f2.parquet" -> GenEntry(1, -1)), Set.empty)
-      writeGen(path, "_gendelta-2.json", GeoParquet.renderGenDelta(d2))
-      // commit 2 AGAIN, the stalled fold's checkpoint — folded from
-      // state as of commit 1, never saw the adopter's delta. Two
-      // DIFFERENT names at one ordinal: no never-replace publish can
-      // referee this, and readers take the max checkpoint.
-      val stStale = GenState(2, 0, Map("f1.parquet" -> GenEntry(0, -1)))
-      writeGen(path, "_genckpt-2.json", GeoParquet.renderGenState(stStale))
+  /** One log under test: commit "file `f` is recorded" through the
+    * log's own commit (converged when already there), the delta text a
+    * competitor publishes for it at ordinal n, and whether a read state
+    * records it. */
+  private final class LogCase(val log: VersionedLog[_, _],
+      val commitFile: (String, String) => Unit,
+      val competitor: (Int, String) => String,
+      val records: (String, String) => Boolean)
 
-      val st = GeoParquet.readGenState(path, conf).get
-      assert(st.commit == 2)
-      assert(!st.files.contains("f2.parquet"),
-        "legacy layout no longer shadows — this pin is stale, " +
-          "re-examine whether the migration story is still needed")
-      // the pinned residual: the adopter's committed f2 is INVISIBLE
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
-  }
+  private def conf = spark.sessionState.newHadoopConf()
+
+  private val genCase = new LogCase(GeoParquet.genLog,
+    (path, f) => GeoParquet.commitGenState(spark, path, cur => cur.get.copy(
+      files = cur.get.files + (f -> GenEntry(0, -1)))),
+    (n, f) => GeoParquet.renderGenDelta(GenDelta(n, 0, Set.empty, Set.empty,
+      Map(f -> GenEntry(0, -1)), Set.empty)),
+    (path, f) => GeoParquet.readGenState(path, conf).exists(_.files.contains(f)))
+
+  private def upsert(f: String) =
+    ScDelta(Map("a" -> Map(f -> Array(0.0, 0.0, 1.0, 1.0))), Set.empty)
+
+  private val scCase = new LogCase(GeoParquet.scLog,
+    (path, f) => GeoParquet.scLog.commit(conf, path, (cur, n) =>
+      if (cur.exists(_.bounds.get("a").exists(_.contains(f)))) None
+      else Some((new ScState(n,
+        GeoParquet.applyScDelta(cur.get.bounds, upsert(f))), Some(upsert(f))))),
+    (n, f) => GeoParquet.renderScDelta(upsert(f)),
+    (path, f) => GeoParquet.readSidecarText(path, conf).exists(t =>
+      GeoParquet.parseSidecar(t, "a").contains(f)))
 
   test("r16 format: the SAME fold-vs-adopter interleaving is a lost race, never a shadow — both commits land") {
-    val dir = java.nio.file.Files.createTempDirectory("shadow-closed").toFile
-    try {
-      import spark.implicits._
-      val path = s"$dir/z"
-      val conf = spark.sessionState.newHadoopConf()
-      GeoParquet.packZOrderToParquet(
-        Seq((1L, 0, 0), (2L, 1, 1)).toDF("id", "a", "b").coalesce(1),
-        Seq("a", "b"), path, 1)
-      // drive to the brink of the fold: commits 2..16 are deltas, the
-      // NEXT commit (17) folds (DeltaFoldEvery deltas on top)
-      (2 to GeoParquet.DeltaFoldEvery).foreach { i =>
-        GeoParquet.commitGenState(spark, path, cur => cur.get.copy(
-          files = cur.get.files + (s"pad-$i.parquet" -> GenEntry(0, -1))))
+    Seq(genCase, scCase).foreach { c =>
+      val dir = java.nio.file.Files.createTempDirectory("shadow-closed").toFile
+      try {
+        import spark.implicits._
+        val path = s"$dir/z"
+        GeoParquet.packZOrderToParquet(
+          Seq((1L, 0, 0), (2L, 1, 1)).toDF("id", "a", "b").coalesce(1),
+          Seq("a", "b"), path, 1)
+        // drive to the brink of the fold: commits 2..16 are deltas, the
+        // NEXT commit (17) folds (DeltaFoldEvery deltas on top)
+        (2 to GeoParquet.DeltaFoldEvery).foreach(i =>
+          c.commitFile(path, s"pad-$i.parquet"))
+        val foldOrd = GeoParquet.DeltaFoldEvery + 1
+        // the adopter's competitor delta lands at the fold's ordinal in
+        // the exact publish window — at the SAME NAME the fold wants,
+        // because the format has only one name per ordinal
+        val competitor = c.competitor(foldOrd, "competitor.parquet")
+        val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+        LogFs.raceInjection = Some { (dst: HadoopPath) =>
+          if (dst.getParent.getName == c.log.dirName &&
+              dst.getName == c.log.artName(foldOrd) &&
+              fired.compareAndSet(false, true))
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(dst.toUri.getPath),
+              competitor.getBytes("UTF-8"))
+        }
+        // our writer walks into the fold at ordinal 17 and loses the
+        // publish; the retry re-reads (the competitor's delta INCLUDED)
+        // and folds at 18 on top of BOTH changes
+        c.commitFile(path, "mine.parquet")
+        assert(fired.get(), s"${c.log.dirName}: the race was never injected")
+        assert(c.records(path, "competitor.parquet"),
+          s"${c.log.dirName}: the fold SHADOWED the adopter's commit")
+        assert(c.records(path, "mine.parquet"),
+          s"${c.log.dirName}: the writer lost its commit")
+        // the retry folded at 18: one checkpoint, nothing below it
+        val arts = new java.io.File(s"$path/${c.log.dirName}").list().toSeq
+          .filter(n => n.startsWith(c.log.artPrefix) && n.endsWith(".json"))
+        assert(arts == Seq(c.log.artName(foldOrd + 1)), s"log after the fold: $arts")
+      } finally {
+        LogFs.raceInjection = None
+        org.apache.commons.io.FileUtils.deleteQuietly(dir)
       }
-      val foldOrd = GeoParquet.DeltaFoldEvery + 1
-      // the adopter's competitor delta lands at the fold's ordinal in
-      // the exact publish window — at the SAME NAME the fold wants,
-      // because the format has only one name per ordinal
-      val competitor = GeoParquet.renderGenDelta(GenDelta(foldOrd, 0,
-        Set.empty, Set.empty,
-        Map("competitor.parquet" -> GenEntry(0, -1)), Set.empty))
-      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-      LogFs.raceInjection = Some { (dst: HadoopPath) =>
-        if (dst.getName == GeoParquet.genArtName(foldOrd) &&
-            fired.compareAndSet(false, true))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(dst.toUri.getPath),
-            competitor.getBytes("UTF-8"))
-      }
-      // our writer walks into the fold at ordinal 17 and loses the
-      // publish; the retry re-reads (the competitor's delta INCLUDED)
-      // and folds at 18 on top of BOTH changes
-      val st = GeoParquet.commitGenState(spark, path, cur => cur.get.copy(
-        files = cur.get.files + ("mine.parquet" -> GenEntry(0, -1))))
-      assert(fired.get(), "the race was never injected — fold path drifted")
-      assert(st.files.contains("competitor.parquet"),
-        "the fold SHADOWED the adopter's same-ordinal commit")
-      assert(st.files.contains("mine.parquet"), "the writer lost its commit")
-      val reread = GeoParquet.readGenState(path, conf).get
-      assert(reread == st)
-      // and the log is single-name-per-ordinal unified artifacts only
-      val names = new java.io.File(s"$path/_gen").list().toSeq
-      assert(!names.exists(n => n.startsWith(GeoParquet.DeltaPrefix) ||
-        n.startsWith(GeoParquet.CkptPrefix)))
-    } finally {
-      LogFs.raceInjection = None
-      org.apache.commons.io.FileUtils.deleteQuietly(dir)
     }
-  }
-
-  test("mixed-version duplicate ordinal: a legacy twin BESIDE the unified artifact reads (unified preferred) — never a fake torn dataset") {
-    val dir = java.nio.file.Files.createTempDirectory("dup-ordinal").toFile
-    try {
-      import spark.implicits._
-      val path = s"$dir/z"
-      val conf = spark.sessionState.newHadoopConf()
-      def batch(lo: Int) = Seq((lo.toLong, lo % 10, (lo * 3) % 10))
-        .toDF("id", "a", "b").coalesce(1)
-      GeoParquet.packZOrderToParquet(batch(0), Seq("a", "b"), path, 1)
-      (1 to 2).foreach(i =>
-        GeoParquet.appendNumericWithSidecar(batch(i), path, Seq("a", "b")))
-      val st = GeoParquet.readGenState(path, conf).get
-      // a pre-r16 JVM (whose publish guard probes only the legacy twin
-      // names) lands `_gendelta-3` beside the committed `_gen-3.json`;
-      // same on the sidecar log. Without per-ordinal dedup the
-      // duplicate fails the contiguity check forever.
-      val rogue = GeoParquet.renderGenDelta(GeoParquet.GenDelta(3, 0,
-        Set.empty, Set.empty,
-        Map("rogue.parquet" -> GenEntry(0, -1)), Set.empty))
-      writeGen(path, "_gendelta-3.json", rogue)
-      val scDir = new java.io.File(s"$path/_sc")
-      java.nio.file.Files.writeString(
-        new java.io.File(scDir, "_scdelta-3.json").toPath,
-        GeoParquet.renderScDelta(GeoParquet.ScDelta(
-          Map("geom" -> Map("rogue.parquet" -> Array(0.0, 0.0, 1.0, 1.0))),
-          Set.empty)))
-      val reread = GeoParquet.readGenState(path, conf).get
-      assert(reread == st, "duplicate ordinal changed the state — the " +
-        "unified artifact must win")
-      assert(!reread.files.contains("rogue.parquet"))
-      assert(GeoParquet.readSidecarText(path, conf).exists(
-        !_.contains("rogue.parquet")))
-      // the WORST twin: a pre-r16 stalled fold's legacy CHECKPOINT at
-      // the unified ordinal — if it became the read base it would
-      // shadow the unified delta (the exact window this format
-      // closes, re-opened through the migration seam). It must lose.
-      val staleCkpt = GeoParquet.renderGenState(GenState(3, 0,
-        Map("only-f0.parquet" -> GenEntry(0, -1))))
-      writeGen(path, "_genckpt-3.json", staleCkpt)
-      val reread2 = GeoParquet.readGenState(path, conf).get
-      assert(reread2 == st,
-        "a legacy checkpoint twin out-ranked the unified artifact")
-      assert(new java.io.File(s"$path/_gen/_genckpt-3.json").delete())
-      // and the lake keeps working past it (commits, fold, sweep)
-      (3 to GeoParquet.DeltaFoldEvery + 1).foreach(i =>
-        GeoParquet.appendNumericWithSidecar(batch(i), path, Seq("a", "b")))
-      val names = new java.io.File(s"$path/_gen").list().toSeq
-      assert(!names.contains("_gendelta-3.json"), "fold did not sweep the twin")
-      assert(GeoParquet.readZOrderRange(spark, path, Seq(("a", -1e9, 1e9)))
-        .count() == GeoParquet.DeltaFoldEvery + 2)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
   test("a damaged DEAD unified artifact (covered by the checkpoint) is ignored; a damaged LIVE one is a loud error (both logs)") {
@@ -174,7 +123,7 @@ class LogFormatSpec extends AnyFunSuite {
       // legacy layout (which never opened covered artifacts) survived
       writeGen(path, GeoParquet.genArtName(0), "")
       java.nio.file.Files.writeString(new java.io.File(
-        s"$path/_sc/${GeoParquet.scArtName(0)}").toPath, "")
+        s"$path/_sc/${GeoParquet.scLog.artName(0)}").toPath, "")
       assert(GeoParquet.readGenState(path, conf).contains(st))
       assert(GeoParquet.readSidecarText(path, conf).contains(sc))
       // LIVE: the same damage ABOVE the checkpoint would participate
@@ -185,11 +134,11 @@ class LogFormatSpec extends AnyFunSuite {
       assert(e.getMessage.contains("malformed"))
       assert(new java.io.File(s"$path/_gen/${GeoParquet.genArtName(3)}").delete())
       java.nio.file.Files.writeString(new java.io.File(
-        s"$path/_sc/${GeoParquet.scArtName(3)}").toPath, "{broken}")
+        s"$path/_sc/${GeoParquet.scLog.artName(3)}").toPath, "{broken}")
       val e2 = intercept[IllegalArgumentException] {
         GeoParquet.readSidecarText(path, conf) }
       assert(e2.getMessage.contains("malformed"))
-      assert(new java.io.File(s"$path/_sc/${GeoParquet.scArtName(3)}").delete())
+      assert(new java.io.File(s"$path/_sc/${GeoParquet.scLog.artName(3)}").delete())
       // healthy again, and the next fold sweeps the dead stragglers
       assert(GeoParquet.readGenState(path, conf).contains(st))
       (2 to GeoParquet.DeltaFoldEvery + 1).foreach(i =>
@@ -199,226 +148,135 @@ class LogFormatSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
-  test("twin-only base: when a legacy checkpoint twin is the ONLY base, the dataset stays READABLE (colliding commit dropped) — never torn") {
-    // the shape a pre-r16 fold leaves when it folds+sweeps while a
-    // current JVM committed a unified delta at the same ordinal:
-    // {_genckpt-5, _gen-5.json(delta)} and nothing else. Excluding
-    // the twin from base selection here would leave base=None with a
-    // delta present — a permanent fake torn dataset; the policy is
-    // drop-the-colliding-commit, keep reading.
-    val dir = java.nio.file.Files.createTempDirectory("twin-only").toFile
-    try {
-      val path = s"$dir/d"
-      val conf = spark.sessionState.newHadoopConf()
-      val legacySt = GenState(5, 0, Map("legacy.parquet" -> GenEntry(0, -1)))
-      writeGen(path, "_genckpt-5.json", GeoParquet.renderGenState(legacySt))
-      writeGen(path, GeoParquet.genArtName(5),
-        GeoParquet.renderGenDelta(GenDelta(5, 0, Set.empty, Set.empty,
-          Map("uni.parquet" -> GenEntry(1, -1)), Set.empty)))
-      val st = GeoParquet.readGenState(path, conf).get
-      assert(st == legacySt,
-        s"twin-only base did not fall back to the legacy checkpoint: $st")
-      assert(!st.files.contains("uni.parquet"),
-        "the colliding unified commit must be dropped, not merged")
-      // the dead/live horizon must AGREE with the fallback base: a
-      // damaged unified straggler BELOW the twin-only base is dead
-      // (ignored), not a brick — the classifier computes its horizon
-      // from the same post-policy checkpoint set the reader bases on
-      writeGen(path, GeoParquet.genArtName(3), "")
-      assert(GeoParquet.readGenState(path, conf).contains(legacySt),
-        "a dead straggler below a twin-only base bricked the read")
-      assert(new java.io.File(s"$path/_gen/${GeoParquet.genArtName(3)}").delete())
-      // a STALE unified checkpoint below a delta GAP must not defeat
-      // the fallback: {_gen-1(ckpt), _gen-5(delta), _genckpt-5} is
-      // what a pre-r16 fold leaves when it sweeps legacy deltas 2-4 —
-      // the only consistent read bases on the twin at 5, never a
-      // permanent "delta gap — torn dataset"
-      val gapDir = s"$dir/gap"
-      writeGen(gapDir, GeoParquet.genArtName(1),
-        GeoParquet.renderGenState(
-          GenState(1, 0, Map("old.parquet" -> GenEntry(0, -1)))))
-      writeGen(gapDir, GeoParquet.genArtName(5),
-        GeoParquet.renderGenDelta(GenDelta(5, 0, Set.empty, Set.empty,
-          Map("uni.parquet" -> GenEntry(1, -1)), Set.empty)))
-      writeGen(gapDir, "_genckpt-5.json", GeoParquet.renderGenState(legacySt))
-      val gapSt = GeoParquet.readGenState(gapDir, conf).get
-      assert(gapSt == legacySt,
-        s"gap-below-twin did not fall back to the twin base: $gapSt")
-      // and when the post-policy chain IS whole, the twin stays
-      // ignored (the shadow must not re-open through the fallback)
-      val wholeDir = s"$dir/whole"
-      writeGen(wholeDir, GeoParquet.genArtName(1),
-        GeoParquet.renderGenState(
-          GenState(1, 0, Map("old.parquet" -> GenEntry(0, -1)))))
-      writeGen(wholeDir, GeoParquet.genArtName(2),
-        GeoParquet.renderGenDelta(GenDelta(2, 0, Set.empty, Set.empty,
-          Map("uni.parquet" -> GenEntry(1, -1)), Set.empty)))
-      writeGen(wholeDir, "_genckpt-2.json", GeoParquet.renderGenState(
-        GenState(2, 0, Map("old.parquet" -> GenEntry(0, -1)))))
-      val wholeSt = GeoParquet.readGenState(wholeDir, conf).get
-      assert(wholeSt.files.contains("uni.parquet"),
-        "a consistent unified chain lost its commit to a twin checkpoint")
-      // sidecar twin of the same shape
-      val scDir = new java.io.File(s"$path/_sc"); scDir.mkdirs()
-      val scText = GeoParquet.renderSidecar(
-        Map("geom" -> Map("legacy.parquet" -> Array(0.0, 0.0, 1.0, 1.0))), 2)
-      java.nio.file.Files.writeString(
-        new java.io.File(scDir, "_scckpt-2.json").toPath, scText)
-      java.nio.file.Files.writeString(
-        new java.io.File(scDir, GeoParquet.scArtName(2)).toPath,
-        GeoParquet.renderScDelta(GeoParquet.ScDelta(
-          Map("geom" -> Map("uni.parquet" -> Array(2.0, 2.0, 3.0, 3.0))),
-          Set.empty)))
-      assert(GeoParquet.readSidecarText(path, conf).contains(scText),
-        "sidecar twin-only base did not fall back to the legacy checkpoint")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
-  }
 
-  test("classifyUniArts vanish policy: a DEAD artifact vanishing mid-read is ignored; a LIVE one forces a re-list") {
-    // simulate the racing-fold sweep directly at the classifier seam:
-    // the listing shows ordinals {1 (ckpt), 2, 3}, but ordinal 2's
-    // read returns None (deleted between listStatus and open)
+  test("classify vanish policy: a DEAD artifact vanishing mid-read is ignored; a LIVE one forces a re-list") {
+    // the racing-fold sweep at the classifier seam: the listing shows
+    // ordinals {1 (ckpt), 2, 3}, but ordinal 2's read returns None
+    // (deleted between listStatus and open)
     val ckpt1 = GeoParquet.renderGenState(
       GenState(1, 0, Map("f.parquet" -> GenEntry(0, -1))))
     val delta3 = GeoParquet.renderGenDelta(GenDelta(3, 0, Set.empty,
       Set.empty, Map("g.parquet" -> GenEntry(1, -1)), Set.empty))
     def readOf(m: Map[String, String])(n: String): Option[String] = m.get(n)
+    val log = GeoParquet.genLog
     // dead vanish: ckpt at 3 covers ordinal 2 — classification proceeds
-    val deadOk = GeoParquet.classifyUniArts(
-      Seq("_gen-1.json", "_gen-2.json", "_gen-3.json"),
-      GeoParquet.GenArtPrefix, GeoParquet.genArtName,
-      GeoParquet.genArtKind,
-      legacyCkptOrds = Nil, legacyDeltaOrds = Nil, dirWhere = "spec",
-      read = readOf(Map(
+    val deadOk = log.classify(
+      Seq("_gen-1.json", "_gen-2.json", "_gen-3.json"), "spec",
+      readOf(Map(
         "_gen-1.json" -> ckpt1,
         "_gen-3.json" -> GeoParquet.renderGenState(
-          GenState(3, 0, Map("f.parquet" -> GenEntry(0, -1)))))),
-      logLabel = "generation", path = "spec")
-    assert(deadOk.exists(u => u.ckptOrds == Seq(1, 3) && u.deltaOrds.isEmpty),
+          GenState(3, 0, Map("f.parquet" -> GenEntry(0, -1)))))))
+    assert(deadOk.exists(u => u.ckpts == Seq(1, 3) && u.deltas.isEmpty),
       s"dead vanish was not tolerated: $deadOk")
     // live vanish: ordinal 3 (above the max checkpoint 1) is missing —
     // the caller must re-list, never assemble around a live hole
-    val liveGone = GeoParquet.classifyUniArts(
-      Seq("_gen-1.json", "_gen-3.json"),
-      GeoParquet.GenArtPrefix, GeoParquet.genArtName,
-      GeoParquet.genArtKind,
-      legacyCkptOrds = Nil, legacyDeltaOrds = Nil, dirWhere = "spec",
-      read = readOf(Map("_gen-1.json" -> ckpt1)),
-      logLabel = "generation", path = "spec")
+    val liveGone = log.classify(Seq("_gen-1.json", "_gen-3.json"), "spec",
+      readOf(Map("_gen-1.json" -> ckpt1)))
     assert(liveGone.isEmpty, "a LIVE vanished artifact must force a re-list")
     // and the delta variant still classifies
-    val both = GeoParquet.classifyUniArts(
-      Seq("_gen-1.json", "_gen-3.json"),
-      GeoParquet.GenArtPrefix, GeoParquet.genArtName,
-      GeoParquet.genArtKind,
-      legacyCkptOrds = Nil, legacyDeltaOrds = Nil, dirWhere = "spec",
-      read = readOf(Map("_gen-1.json" -> ckpt1, "_gen-3.json" -> delta3)),
-      logLabel = "generation", path = "spec")
-    assert(both.exists(u => u.ckptOrds == Seq(1) && u.deltaOrds == Seq(3)))
+    val both = log.classify(Seq("_gen-1.json", "_gen-3.json"), "spec",
+      readOf(Map("_gen-1.json" -> ckpt1, "_gen-3.json" -> delta3)))
+    assert(both.exists(u => u.ckpts == Seq(1) && u.deltas == Seq(3)))
   }
 
-  test("twin fallback is NOT engaged over a vanished unified read — re-list, never memoize stale twin state") {
-    // the r16-ADVICE shape: a HEALTHY unified chain {1 ckpt, 2 delta,
-    // 3 delta} beside a legacy checkpoint twin at the max ordinal 3
-    // (mixed-version dataset). Delta 2's read transiently fails
-    // (vanish between listing and open): the gap makes
-    // contiguousAbove(postMax=1) false, which WANTS the twin fallback
-    // — whose expanded horizon (ckptMax=3) would then classify the
-    // vanished 2 as dead and silently return the stale twin state,
-    // dropping unified commits 2 AND 3. The classifier must re-list
-    // (None) instead; with all reads present the unified chain wins
-    // and the twin stays ignored.
-    val ckpt1 = GeoParquet.renderGenState(
-      GenState(1, 0, Map("f.parquet" -> GenEntry(0, -1))))
-    def delta(n: Int) = GeoParquet.renderGenDelta(GenDelta(n, 0, Set.empty,
-      Set.empty, Map(s"g$n.parquet" -> GenEntry(1, -1)), Set.empty))
-    def readOf(m: Map[String, String])(n: String): Option[String] = m.get(n)
-    val listing = Seq("_gen-1.json", "_gen-2.json", "_gen-3.json")
-    val vanished = GeoParquet.classifyUniArts(
-      listing, GeoParquet.GenArtPrefix, GeoParquet.genArtName,
-      GeoParquet.genArtKind,
-      legacyCkptOrds = Seq(3), legacyDeltaOrds = Nil, dirWhere = "spec",
-      read = readOf(Map("_gen-1.json" -> ckpt1, "_gen-3.json" -> delta(3))),
-      logLabel = "generation", path = "spec-vanish-twin")
-    assert(vanished.isEmpty,
-      "a vanished unified read engaged the twin fallback — stale twin " +
-        "state would be memoized and the live unified commits dropped")
-    val whole = GeoParquet.classifyUniArts(
-      listing, GeoParquet.GenArtPrefix, GeoParquet.genArtName,
-      GeoParquet.genArtKind,
-      legacyCkptOrds = Seq(3), legacyDeltaOrds = Nil, dirWhere = "spec",
-      read = readOf(Map("_gen-1.json" -> ckpt1,
-        "_gen-2.json" -> delta(2), "_gen-3.json" -> delta(3))),
-      logLabel = "generation", path = "spec-vanish-twin-whole")
-    assert(whole.exists(u => u.ckptOrds == Seq(1) &&
-        u.deltaOrds == Seq(2, 3) && u.legacyCkptOrds.isEmpty),
-      s"the re-listed whole chain must classify unified (twin ignored): $whole")
-  }
-
-  test("pre-r16 twin-name datasets migrate: exact reads mixed, unified commits beside legacy names, first fold sweeps them (both logs)") {
-    val dir = java.nio.file.Files.createTempDirectory("twin-migrate").toFile
+  test("log-read memo: a same-path rebuild of the SIDECAR never serves the dead dataset's state") {
+    // the sidecar twin of GeoPruneSpec's manifest case: the memo keys on
+    // the (name, length, mtime) listing of `_sc/`, so a rebuilt dataset
+    // whose checkpoint collides in all three would alias — only the
+    // `_scid-*` identity file, carried in the signature, tells them apart
+    val dir = java.nio.file.Files.createTempDirectory("scmemoalias").toFile
     try {
+      val path = s"$dir/d"
+      val scDir = new java.io.File(s"$path/_sc")
+      def sidecar(f: String) = GeoParquet.renderSidecar(
+        Map("geom" -> Map(f -> Array(0.0, 0.0, 1.0, 1.0))), 1)
+      val (t1, t2) = (sidecar("part-aaaaaaaa.parquet"), sidecar("part-bbbbbbbb.parquet"))
+      assert(t1 != t2 && t1.length == t2.length,
+        "precondition: distinct same-length checkpoint texts")
+      val mt = 1700000000000L
+      def build(text: String, id: String): Seq[(String, Long, Long)] = {
+        assert(scDir.mkdirs())
+        val ckpt = new java.io.File(scDir, GeoParquet.scLog.artName(1))
+        java.nio.file.Files.writeString(ckpt.toPath, text)
+        val idFile = new java.io.File(scDir, s"_scid-$id")
+        assert(idFile.createNewFile())
+        assert(ckpt.setLastModified(mt) && idFile.setLastModified(mt))
+        scDir.listFiles().filterNot(_.getName.startsWith("_scid-"))
+          .map(f => (f.getName, f.length(), f.lastModified())).toSeq.sorted
+      }
+      val oldListing = build(t1, "aaaaaaaaaaaa")
+      assert(GeoParquet.readSidecarText(path, conf).contains(t1))
+      // second read is memo-hot (same signature) and must still be t1
+      assert(GeoParquet.readSidecarText(path, conf).contains(t1))
+      // adversarial rebuild: same checkpoint name/length/mtime, other
+      // content, plus the fresh identity a real fold writes
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+      val newListing = build(t2, "bbbbbbbbbbbb")
+      assert(oldListing == newListing,
+        "precondition: without the identity file the signatures collide")
+      assert(GeoParquet.readSidecarText(path, conf).contains(t2),
+        "memo served the dead dataset's sidecar after a same-path rebuild")
+
+      // the real write path plants the identity at the first commit
       import spark.implicits._
-      val path = s"$dir/z"
-      val conf = spark.sessionState.newHadoopConf()
-      def batch(lo: Int) = Seq((lo.toLong, lo % 10, (lo * 3) % 10))
-        .toDF("id", "a", "b").coalesce(1)
-      GeoParquet.packZOrderToParquet(batch(0), Seq("a", "b"), path, 1)
-      (1 to 3).foreach(i =>
-        GeoParquet.appendNumericWithSidecar(batch(i), path, Seq("a", "b")))
-      val stBefore = GeoParquet.readGenState(path, conf).get
-      val scBefore = GeoParquet.readSidecarText(path, conf).get
-      // time-travel the layout: rename every unified artifact to its
-      // r15 twin name per kind — exactly what an r15-written dataset
-      // looks like on disk
-      LogLayout.genCkpts(path).foreach { case (o, f) =>
-        assert(f.renameTo(new java.io.File(f.getParent, s"_genckpt-$o.json"))) }
-      LogLayout.genDeltas(path).foreach { case (o, f) =>
-        assert(f.renameTo(new java.io.File(f.getParent, s"_gendelta-$o.json"))) }
-      LogLayout.scCkpts(path).foreach { case (o, f) =>
-        assert(f.renameTo(new java.io.File(f.getParent, s"_scckpt-$o.json"))) }
-      LogLayout.scDeltas(path).foreach { case (o, f) =>
-        assert(f.renameTo(new java.io.File(f.getParent, s"_scdelta-$o.json"))) }
-      // the rename broke the Hadoop checksum pairing; drop stale crcs
-      Seq("_gen", "_sc").foreach { d =>
-        Option(new java.io.File(s"$path/$d").listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".crc")).foreach(_.delete()) }
+      val real = s"$dir/real"
+      GeoParquet.packZOrderToParquet(Seq((1L, 0, 0)).toDF("id", "a", "b"),
+        Seq("a", "b"), real, 1)
+      assert(new java.io.File(s"$real/_sc").list().exists(_.startsWith("_scid-")),
+        "pack (first fold) must plant _scid-*")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 
-      // exact read of the pure-legacy layout
-      assert(GeoParquet.readGenState(path, conf).contains(stBefore))
-      assert(GeoParquet.readSidecarText(path, conf).contains(scBefore))
-
-      // new commits land UNIFIED beside the legacy names (the
-      // crash-window intermediate state: mixed namespaces, one
-      // ordinal line) and still read exactly
-      GeoParquet.appendNumericWithSidecar(batch(4), path, Seq("a", "b"))
-      assert(LogLayout.genDeltas(path).nonEmpty, "append did not commit unified")
-      val mixedNames = new java.io.File(s"$path/_gen").list().toSeq
-      assert(mixedNames.exists(_.startsWith(GeoParquet.DeltaPrefix)))
-      assert(GeoParquet.readGenState(path, conf).get.currentGen == 4)
-      assert(GeoParquet.readZOrderRange(spark, path, Seq(("a", -1e9, 1e9)))
-        .count() == 5)
-
-      // drive past the fold: the migration sweeps every legacy name
-      (5 to GeoParquet.DeltaFoldEvery + 2).foreach(i =>
-        GeoParquet.appendNumericWithSidecar(batch(i), path, Seq("a", "b")))
-      val genNames = new java.io.File(s"$path/_gen").list().toSeq
-      assert(!genNames.exists(n => n.startsWith(GeoParquet.DeltaPrefix) ||
-        n.startsWith(GeoParquet.CkptPrefix)),
-        s"fold did not sweep legacy manifest names: $genNames")
-      val scNames = new java.io.File(s"$path/_sc").list().toSeq
-      assert(!scNames.exists(n => n.startsWith(GeoParquet.ScDeltaPrefix) ||
-        n.startsWith(GeoParquet.ScCkptPrefix)),
-        s"fold did not sweep legacy sidecar names: $scNames")
-      val n = GeoParquet.DeltaFoldEvery + 3
-      assert(GeoParquet.readZOrderRange(spark, path, Seq(("a", -1e9, 1e9)))
-        .count() == n)
-      assert(GeoParquet.parseSidecar(
-        GeoParquet.readSidecarText(path, conf).get, "__rowcount").size == n)
-      // every generation still reconstructs across the migrated seam
-      (0 until n).foreach(g => assert(
-        GeoParquet.readZOrderAtGeneration(spark, path, g).count() == g + 1,
-        s"wrong snapshot at generation $g"))
+  test("pre-r16 layouts fail loudly: a log dir holding only twin names throws and names the layout (both logs)") {
+    val dir = java.nio.file.Files.createTempDirectory("pre-r16").toFile
+    try {
+      val st = GenState(1, 0, Map("f.parquet" -> GenEntry(0, -1)))
+      val d2 = GeoParquet.renderGenDelta(GenDelta(2, 0, Set.empty, Set.empty,
+        Map("g.parquet" -> GenEntry(1, -1)), Set.empty))
+      val sc = GeoParquet.renderSidecar(
+        Map("geom" -> Map("f.parquet" -> Array(0.0, 0.0, 1.0, 1.0))), 1)
+      val scD2 = GeoParquet.renderScDelta(upsert("g.parquet"))
+      def loud(read: => Any, layout: String): Unit = {
+        val e = intercept[IllegalStateException](read)
+        assert(e.getMessage.contains("pre-r16 twin-name layout") &&
+          e.getMessage.contains(layout), e.getMessage)
+      }
+      // a twin-named checkpoint and delta, nothing unified
+      val twin = s"$dir/twin"
+      writeGen(twin, "_genckpt-1.json", GeoParquet.renderGenState(st))
+      writeGen(twin, "_gendelta-2.json", d2)
+      writeLog(twin, "_sc", "_scckpt-1.json", sc)
+      writeLog(twin, "_sc", "_scdelta-2.json", scD2)
+      loud(GeoParquet.readGenState(twin, conf), "_gendelta-N")
+      loud(GeoParquet.readSidecarText(twin, conf), "_scdelta-N")
+      // a commit must not build a fresh base under the live history
+      loud(GeoParquet.commitGenState(spark, twin, _ => st), "_gendelta-N")
+      assert(!new java.io.File(s"$twin/_gen").list().exists(_.startsWith("_gen-")))
+      // twin deltas over a pre-delta-log ROOT base: never the older root
+      val rooted = s"$dir/rooted"
+      writeGen(rooted, "_gendelta-2.json", d2)
+      writeLog(rooted, "_sc", "_scdelta-2.json", scD2)
+      java.nio.file.Files.writeString(
+        new java.io.File(rooted, GeoParquet.GenerationsName).toPath,
+        GeoParquet.renderGenState(st))
+      java.nio.file.Files.writeString(
+        new java.io.File(rooted, GeoParquet.SidecarName).toPath, sc)
+      loud(GeoParquet.readGenState(rooted, conf), "_gendelta-N")
+      loud(GeoParquet.readSidecarText(rooted, conf), "_scdelta-N")
+      // the one pre-r16 build that kept its deltas at the dataset root
+      val rootDeltas = s"$dir/root-deltas"
+      new java.io.File(rootDeltas).mkdirs()
+      java.nio.file.Files.writeString(
+        new java.io.File(rootDeltas, GeoParquet.GenerationsName).toPath,
+        GeoParquet.renderGenState(st))
+      java.nio.file.Files.writeString(
+        new java.io.File(rootDeltas, "_gendelta-2.json").toPath, d2)
+      loud(GeoParquet.readGenState(rootDeltas, conf), "_gendelta-N")
+      // stale twin names BESIDE a unified checkpoint stay ignored
+      writeGen(twin, GeoParquet.genArtName(1), GeoParquet.renderGenState(st))
+      writeLog(twin, "_sc", GeoParquet.scLog.artName(1), sc)
+      assert(GeoParquet.readGenState(twin, conf).contains(st))
+      assert(GeoParquet.readSidecarText(twin, conf).contains(sc))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 }

@@ -2,27 +2,27 @@ package graft.io
 
 /** Test-side view of the single-name-per-ordinal log layout (r16):
   * ordinal N is exactly ONE artifact (`_gen-N.json` / `_sc-N.json`)
-  * whose KIND lives in the canonical text head. Specs that used to
-  * assert on the legacy kind-in-the-name twins (`_genckpt-…` /
-  * `_gendelta-…`) classify through here instead. */
+  * whose KIND lives in the canonical text head, classified through
+  * the log's own [[VersionedLog.kindOf]]. */
 object LogLayout {
 
   /** (ordinal, isCheckpoint, file) for every unified artifact in the
     * given log dir (`<dataset>/_gen` or `<dataset>/_sc`). */
-  private def arts(logDir: java.io.File, prefix: String,
-                   isCkpt: String => Boolean): Seq[(Int, Boolean, java.io.File)] =
-    Option(logDir.listFiles()).getOrElse(Array.empty).toSeq
+  private def arts(log: VersionedLog[_, _],
+                   path: String): Seq[(Int, Boolean, java.io.File)] =
+    Option(new java.io.File(s"$path/${log.dirName}").listFiles())
+      .getOrElse(Array.empty).toSeq
       .flatMap { f =>
         val n = f.getName
-        if (n.startsWith(prefix) && n.endsWith(".json"))
-          n.stripPrefix(prefix).stripSuffix(".json").toIntOption
-            .map(o => (o, isCkpt(java.nio.file.Files.readString(f.toPath)), f))
+        if (n.startsWith(log.artPrefix) && n.endsWith(".json"))
+          n.stripPrefix(log.artPrefix).stripSuffix(".json").toIntOption
+            .map(o => (o, log.kindOf(java.nio.file.Files.readString(f.toPath))
+              .getOrElse(throw new IllegalArgumentException(s"malformed log artifact $f")), f))
         else None
       }.sortBy(_._1)
 
   def genArts(path: String): Seq[(Int, Boolean, java.io.File)] =
-    arts(new java.io.File(s"$path/${GeoParquet.GenDirName}"),
-      GeoParquet.GenArtPrefix, GeoParquet.genArtIsCkpt(_, "spec"))
+    arts(GeoParquet.genLog, path)
 
   def genCkpts(path: String): Seq[(Int, java.io.File)] =
     genArts(path).collect { case (o, true, f) => (o, f) }
@@ -31,8 +31,7 @@ object LogLayout {
     genArts(path).collect { case (o, false, f) => (o, f) }
 
   def scArts(path: String): Seq[(Int, Boolean, java.io.File)] =
-    arts(new java.io.File(s"$path/${GeoParquet.ScDirName}"),
-      GeoParquet.ScArtPrefix, GeoParquet.scArtIsCkpt(_, "spec"))
+    arts(GeoParquet.scLog, path)
 
   def scCkpts(path: String): Seq[(Int, java.io.File)] =
     scArts(path).collect { case (o, true, f) => (o, f) }
