@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.functions._
 import graft.tools.Jobs.describedAs
+import graft.tools.Partitions
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -1032,7 +1033,16 @@ object Dedup {
    * partition (plus one per self row), so a round's task memory is
    * linear in the ids of its partition.
    *
-   * Two rules stop the loop, both read without a job:
+   * One check before round 1 and two stop rules, all read without a job:
+   *   - before round 1, when the null-filtered, cast edge plan is no
+   *     larger than what AQE would coalesce into one partition
+   *     ([[graft.tools.Partitions.fitOne]]: AQE and its coalescing on,
+   *     plan stats within the session's own size limit), the rounds are
+   *     skipped: the non-loop edges are coalesced into one task whose
+   *     union-find emits every id with its root, (root, root) included.
+   *     That is the first stop rule below, decided from plan statistics
+   *     before the first round instead of after it. One job, described
+   *     "connectedComponentsStar: one partition";
    *   - the round's checkpoint has one partition (AQE coalesced the small
    *     input): its union-find saw every edge, so its output already is
    *     the label set;
@@ -1050,14 +1060,15 @@ object Dedup {
    * further job. Returns (id, component) as a projection of that
    * checkpoint, the only one still persisted: each round releases the
    * previous round's checkpoint (never the caller's input) once its own
-   * is written. Jobs carry the description
+   * is written. Round jobs carry the description
    * "connectedComponentsStar: round <k>"; the caller's description is
    * restored on return. Throws IllegalStateException when `maxIters`
    * rounds pass without reaching the fixpoint, rather than return split
-   * components.
+   * components. The handle releases the returned frame's checkpoint;
+   * call it only once the frame is consumed.
    */
-  def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
-                              maxIters: Int = 50): DataFrame = {
+  def connectedComponentsStarWithRelease(edges: DataFrame, aCol: String, bCol: String,
+                                         maxIters: Int = 50): (DataFrame, () => Unit) = {
     val (u, v) = (col("__u"), col("__v"))
     val byCenter = Window.partitionBy(u)
     def edge(a: Column, b: Column): Column = struct(a.as("__u"), b.as("__v"))
@@ -1080,7 +1091,7 @@ object Dedup {
       // every smaller neighbor to the minimum; the minimum's own row
       // re-attaches the center (and passes a self row through)
       small.select(when(v === col("__m"), u).otherwise(v).as("__u"), col("__m").as("__v"))
-        .as(idPairs).mapPartitions(contractPartition)(idPairs).toDF("__u", "__v")
+        .as(idPairs).mapPartitions(contractPartition(_))(idPairs).toDF("__u", "__v")
     }
     // the RDD a localCheckpoint wrote, read from its plan without a job
     def written(checkpoint: DataFrame): RDD[_] = checkpoint.queryExecution.logical match {
@@ -1091,6 +1102,14 @@ object Dedup {
       .select(col(aCol).cast("long").as("__u"), col(bCol).cast("long").as("__v"))
     var previous: Option[RDD[_]] = None
     var unfinished = 1L
+    if (Partitions.fitOne(e))
+      describedAs(edges.sparkSession, "connectedComponentsStar: one partition") {
+        e = e.where(u =!= v).coalesce(1).as(idPairs)
+          .mapPartitions(contractPartition(_, allRoots = true))(idPairs).toDF("__u", "__v")
+          .localCheckpoint(true)
+        previous = Some(written(e))
+        unfinished = 0L
+      }
     var i = 0
     while (unfinished > 0) {
       if (i == maxIters) throw new IllegalStateException(
@@ -1110,8 +1129,15 @@ object Dedup {
           else probe.get.getOrElse("unfinished", 0L).asInstanceOf[Long]
       }
     }
-    e.select(u.as("id"), v.as("component"))
+    val last = previous
+    (e.select(u.as("id"), v.as("component")), () => last.foreach(Bridge.releaseCheckpoint))
   }
+
+  /** [[connectedComponentsStarWithRelease]] without the release handle:
+    * the last checkpoint stays until the ContextCleaner reclaims it. */
+  def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
+                              maxIters: Int = 50): DataFrame =
+    connectedComponentsStarWithRelease(edges, aCol, bCol, maxIters)._1
 
   private val idPairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
@@ -1121,12 +1147,15 @@ object Dedup {
    * edges. Emits (x, r) for every node x that is not the minimum r of its
    * component within the partition, and the self row (r, r) only when
    * the input carried it, so a round whose input is a star forest
-   * reproduces it without duplicate roots. Holds one `LongMap` entry per
-   * distinct id of the partition plus one per self row. The output is
-   * emitted in id order, so it depends only on the multiset of input rows
-   * and a retried task writes the same edges.
+   * reproduces it without duplicate roots. With `allRoots` it emits
+   * (r, r) for every minimum as well: the label set of a partition that
+   * holds every edge. Holds one `LongMap` entry per distinct id of the
+   * partition plus one per self row. The output is emitted in id order,
+   * so it depends only on the multiset of input rows and a retried task
+   * writes the same edges.
    */
-  private def contractPartition(rows: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+  private def contractPartition(rows: Iterator[(Long, Long)],
+                                allRoots: Boolean = false): Iterator[(Long, Long)] = {
     val parent = new mutable.LongMap[Long]()
     val selfRows = new mutable.LongMap[Unit]()
     def find(x0: Long): Long = {
@@ -1147,7 +1176,8 @@ object Dedup {
     }
     val ids = parent.keys.toArray
     java.util.Arrays.sort(ids)
-    ids.iterator.map(x => (x, find(x))).filter { case (x, r) => x != r || selfRows.contains(x) }
+    ids.iterator.map(x => (x, find(x)))
+      .filter { case (x, r) => allRoots || x != r || selfRows.contains(x) }
   }
 
   /**
@@ -1155,7 +1185,7 @@ object Dedup {
    * pairs -> exact-Jaccard refine -> [[connectedComponentsStar]] -> keep
    * the minimum-id document of every cluster (docs in no cluster survive
    * untouched). Returns the surviving rows of `df`. The component labels
-   * are the checkpoint of the last CC round, so the pair cache is
+   * are the checkpoint connected components ends in, so the pair cache is
    * released before return and the losers are a narrow projection of
    * that checkpoint.
    */
