@@ -5,6 +5,7 @@
     python3 scripts/ab.py summary <out.jsonl> [<BENCHMARK.json>]
     python3 scripts/ab.py trace <parent-dir> <change-dir> <workload> <seed> <out.json>
     python3 scripts/ab.py loc <parent-rev> <change-rev>
+    python3 scripts/ab.py procs <checkout> <workload> <seed>
 
 `run` takes the benchmark command and run length from each checkout's own
 BENCHMARK.json and runs it there, untraced, once per seed and side.
@@ -32,6 +33,17 @@ sides come from the same window.
 `loc` prints the net line change of `src/main` between two git revisions
 of this repository, once as written and once ignoring whitespace
 (`git diff -w`), so a reformat shows as the difference of the two.
+
+`procs` runs the checkout's benchmark command once, untraced, with a JFR
+recording of `jdk.ProcessStart` (and of the `System.gc()` collections
+that close the warm-up and the timed phase) switched on through
+`JAVA_TOOL_OPTIONS`, so the benchmark itself is unchanged. It prints the
+process starts that fall between those collections per timed op and per
+kind a op (on `lake_append`, per append), grouped by command name and by
+the innermost `graft.` frame of the starting stack, else its innermost
+frame above the JDK and Hadoop's `fs` and `util` layers (the
+filesystem's caller). A `--trace 1` run cannot replace it: the trace
+registers its own `file:` class, which the lake keeps.
 
 Each side must be a fresh `git clone` (never a `cp -r` of a built
 checkout: the copy would reuse the original's build directory).
@@ -106,6 +118,90 @@ def loc(parent, change, root):
         print(f"src/main{label}: +{added} -{removed} = {added - removed:+d} lines")
 
 
+JFC = """<?xml version="1.0" encoding="UTF-8"?>
+<configuration version="2.0">
+  <event name="jdk.ProcessStart"><setting name="enabled">true</setting>
+    <setting name="stackTrace">true</setting></event>
+  <event name="jdk.GarbageCollection"><setting name="enabled">true</setting>
+    <setting name="threshold">0 ms</setting></event>
+</configuration>
+"""
+
+
+def proc_site(frames):
+    """The innermost graft frame of a stack, else its innermost frame
+    above the JDK and Hadoop's fs and util layers (the caller of the
+    filesystem, e.g. Parquet's or the committer's)."""
+    names = [f"{f['method']['type']['name'].replace('/', '.')}.{f['method']['name']}"
+             for f in frames]
+    for n in names:
+        if n.startswith("graft."):
+            return n
+    for n in names:
+        if not n.startswith(("java.", "jdk.", "sun.", "org.apache.hadoop.fs.",
+                             "org.apache.hadoop.util.")):
+            return n
+    return names[-1] if names else "?"
+
+
+def procs(root, workload, seed):
+    import re
+    import tempfile
+    with tempfile.TemporaryDirectory() as tmp:
+        jfc = os.path.join(tmp, "procs.jfc")
+        with open(jfc, "w") as f:
+            f.write(JFC)
+        # one recording per JVM (%p): an sbt build the command may start
+        # records too, and is told apart by its lack of timed-phase GCs
+        env = dict(os.environ, JAVA_TOOL_OPTIONS=(
+            f"-XX:StartFlightRecording=settings={jfc},filename={tmp}/rec-%p.jfr "
+            "-XX:FlightRecorderOptions=stackdepth=512"))
+        p = subprocess.run(bench_command(root, workload, seed), cwd=root, env=env,
+                           capture_output=True, text=True)
+        if p.returncode != 0:
+            raise SystemExit(f"benchmark failed with code {p.returncode}:\n{p.stderr[-2000:]}")
+        m = re.search(r"(\d+) timed ops \((\d+) kind a, (\d+) kind b\)", p.stderr)
+        if not m:
+            raise SystemExit("no timed-op count in the benchmark's stderr")
+        ops, ops_a, ops_b = (int(g) for g in m.groups())
+        best = None
+        for name in sorted(os.listdir(tmp)):
+            if not name.endswith(".jfr"):
+                continue
+            out = subprocess.run(["jfr", "print", "--json", "--stack-depth", "512", "--events",
+                                  "jdk.ProcessStart,jdk.GarbageCollection",
+                                  os.path.join(tmp, name)],
+                                 capture_output=True, text=True, check=True).stdout
+            events = json.loads(out)["recording"]["events"]
+            gcs = sorted(e["values"]["startTime"] for e in events
+                         if e["type"] == "jdk.GarbageCollection"
+                         and e["values"]["name"] and e["values"]["cause"] == "System.gc()")
+            if len(gcs) >= 3:
+                best = (events, gcs)
+    if best is None:
+        raise SystemExit("no recording holds the benchmark's System.gc() collections")
+    events, gcs = best
+    # Main runs System.gc() twice after the warm-up and again right after
+    # the timed phase: the timed ops lie between the 2nd and the 3rd
+    lo, hi = gcs[1], gcs[2]
+    starts = [e for e in events if e["type"] == "jdk.ProcessStart"
+              and lo < e["values"]["startTime"] < hi]
+    print(f"{workload} seed {seed} at {os.path.abspath(root)}: {len(starts)} process starts "
+          f"in {ops} timed ops ({ops_a} kind a, {ops_b} kind b)")
+    print(f"  per timed op {len(starts) / max(ops, 1):.2f}   per kind a op "
+          f"{len(starts) / max(ops_a, 1):.2f}")
+    for label, key in (("command", lambda e: os.path.basename(
+                           (e["values"]["command"] or "?").split()[0])),
+                       ("site", lambda e: proc_site((e["values"].get("stackTrace") or {})
+                                                    .get("frames", [])))):
+        counts = {}
+        for e in starts:
+            counts[key(e)] = counts.get(key(e), 0) + 1
+        print(f"by {label}:")
+        for k, n in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0])):
+            print(f"  {n / max(ops, 1):8.2f} per op  {n / max(ops_a, 1):8.2f} per kind a op  {k}")
+
+
 def quartiles(v):
     if len(v) == 1:
         return v[0], v[0], v[0]
@@ -162,6 +258,8 @@ def main(argv):
         summary(argv[5], os.path.join(argv[1], "BENCHMARK.json"))
     elif len(argv) == 6 and argv[0] == "trace":
         trace(*argv[1:6])
+    elif len(argv) == 4 and argv[0] == "procs":
+        procs(*argv[1:4])
     elif len(argv) == 3 and argv[0] == "loc":
         loc(argv[1], argv[2], here)
     elif len(argv) in (2, 3) and argv[0] == "summary":

@@ -5,6 +5,7 @@ import graft.api.GeoFrame
 import graft.tools.Jobs.describedAs
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
+import LakeFs.lakeConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -35,6 +36,14 @@ import scala.jdk.CollectionConverters._
  * files (group by input_file_name), so nothing is collected to the driver
  * except the tiny per-file table — at 100 TB / 1 GB files that is ~100k
  * rows on the driver, negligible.
+ *
+ * Every public entry point builds ONE Hadoop conf, [[LakeFs.lakeConf]],
+ * and passes it down to its listings, footer opens and log commits; on
+ * `file:` it names the lake's local filesystem, which creates files and
+ * dirs without forking `chmod`. Every data write goes through one helper,
+ * [[writeParquet]], which hands the same keys to Spark's writer as write
+ * options; staging writes ([[stageInto]]) also skip the `_SUCCESS`
+ * marker, while direct writes to a dataset root keep it.
  */
 object GeoParquet {
 
@@ -63,8 +72,9 @@ object GeoParquet {
     // duplicate batch on retry)
     require(!(gf.geometryCol +: extraGeomCols).contains(RowCountCol),
       s"$RowCountCol is a reserved sidecar name")
-    gf.df.write.mode(mode).parquet(path)
-    writeSidecar(gf.df.sparkSession, path, gf.geometryCol +: extraGeomCols)
+    val conf = lakeConf(gf.df.sparkSession)
+    writeParquet(gf.df, path, mode, conf)
+    rebuildSidecar(gf.df.sparkSession, conf, path, gf.geometryCol +: extraGeomCols)
   }
 
   /** Hilbert-pack into `numPartitions` then write with sidecar — the
@@ -76,8 +86,9 @@ object GeoParquet {
     require(!(gf.geometryCol +: extraGeomCols).contains(RowCountCol),
       s"$RowCountCol is a reserved sidecar name")
     val packed = gf.packPartitions(numPartitions, p)
-    packed.df.write.mode(mode).parquet(path)
-    writeSidecar(gf.df.sparkSession, path, gf.geometryCol +: extraGeomCols)
+    val conf = lakeConf(gf.df.sparkSession)
+    writeParquet(packed.df, path, mode, conf)
+    rebuildSidecar(gf.df.sparkSession, conf, path, gf.geometryCol +: extraGeomCols)
   }
 
   /** NUMERIC two-column Z-order data-skipping pack: treat
@@ -107,19 +118,17 @@ object GeoParquet {
     // the curve rank is a transient sort key — only the point column
     // persists (the sidecar + residual filter need it)
     val spark = df.sparkSession
-    val before = listDataFileSet(spark, path)
+    val conf = lakeConf(spark)
+    val before = listDataFileSet(conf, path)
     val packed = gf.packPartitions(numPartitions, p).df.drop("hilbert_distance")
     // append mode stages like every concurrent-writer path (exact
     // file list, no shared _temporary, no listing-diff capture);
     // exclusive modes own the directory and write directly
     val staged =
-      if (mode.toLowerCase == "append") {
-        val root = new HadoopPath(path)
-        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        Some(stageInto(packed, root, fs))
-      } else { packed.write.mode(mode).parquet(path); None }
-    finishPack(spark, path, mode, before,
-      newFiles => pointBoundsForFiles(spark, path, newFiles, Seq(ZPointCol)),
+      if (mode.toLowerCase == "append") Some(stageInto(packed, path, conf))
+      else { writeParquet(packed, path, mode, conf); None }
+    finishPack(spark, conf, path, mode, before,
+      newFiles => pointBoundsForFiles(spark, conf, path, newFiles, Seq(ZPointCol)),
       Seq(ZPointCol), staged)
   }
 
@@ -172,29 +181,26 @@ object GeoParquet {
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"missing column(s): ${missing.mkString(", ")}")
     val spark = df.sparkSession
-    val before = listDataFileSet(spark, path)
+    val conf = lakeConf(spark)
+    val before = listDataFileSet(conf, path)
     // append-mode packs can race a concurrent streaming append:
     // STAGE the sorted output (exact file list, private staging dir)
     // instead of a direct shared-_temporary write + listing diff.
     // Exclusive modes (error/overwrite/ignore-on-absent) own the
     // directory by construction and write directly.
     val staged =
-      if (mode.toLowerCase == "append") {
-        val root = new HadoopPath(path)
-        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        Some(stageInto(zSortedFrame(df, cols, numPartitions, bitsPerCol),
-          root, fs))
-      } else {
-        zSortedFrame(df, cols, numPartitions, bitsPerCol)
-          .write.mode(mode).parquet(path)
+      if (mode.toLowerCase == "append")
+        Some(stageInto(zSortedFrame(df, cols, numPartitions, bitsPerCol), path, conf))
+      else {
+        writeParquet(zSortedFrame(df, cols, numPartitions, bitsPerCol), path, mode, conf)
         None
       }
     // per-file per-column min/max sidecar (degenerate [mn,mn,mx,mx]
     // box), computed over ONLY this pack's files and merged over any
     // surviving sidecar — an append-mode pack neither rescans the
     // existing files nor drops other columns' entries
-    finishPack(spark, path, mode, before,
-      newFiles => numericBoundsForFiles(spark, path, newFiles, cols),
+    finishPack(spark, conf, path, mode, before,
+      newFiles => numericBoundsForFiles(spark, conf, path, newFiles, cols),
       cols, staged)
   }
 
@@ -305,10 +311,9 @@ object GeoParquet {
     * OMITTED from every block, exactly like the scan's
     * groupBy(input_file_name) — [[dropEmptyNewFiles]] depends on that.
     * FooterStatsSpec pins footer == scan on every shape above. */
-  private[graft] def numericBoundsForFiles(spark: SparkSession, path: String,
-      files: Seq[String], cols: Seq[String])
+  private[graft] def numericBoundsForFiles(spark: SparkSession,
+      conf: Configuration, path: String, files: Seq[String], cols: Seq[String])
       : Map[String, Map[String, Array[Double]]] = {
-    val conf = spark.sessionState.newHadoopConf()
     val perFile = scala.collection.mutable.HashMap
       .empty[String, (Long, Map[String, Option[(Double, Double)]])]
     val fallback = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -343,11 +348,11 @@ object GeoParquet {
       .map { case (cs, fs) => cs -> fs.map(_._1) }
     val withPartial = partialGroups.foldLeft(trusted) { case (acc, (cs, fs)) =>
       applyScDelta(acc, ScDelta(describedAs(spark, "lake: bounds scan")(
-        numericBoundsPerFile(readFiles(spark, path, fs), cs)), Set.empty))
+        numericBoundsPerFile(readFiles(spark, conf, path, fs), cs)), Set.empty))
     }
     if (fallback.isEmpty) withPartial
     else applyScDelta(withPartial, ScDelta(describedAs(spark, "lake: bounds scan")(
-      numericBoundsPerFile(readFiles(spark, path, fallback.toSeq), cols)), Set.empty))
+      numericBoundsPerFile(readFiles(spark, conf, path, fallback.toSeq), cols)), Set.empty))
   }
 
   /** [[boundsPerFile]] for POINT-geometry columns over known file names
@@ -362,12 +367,11 @@ object GeoParquet {
     * not trusted (NaN / ±0.0 endpoints — common for coordinate grids
     * touching 0) falls back to the exact scan aggregate, per file.
     * FooterStatsSpec pins footer == scan here too. */
-  private[graft] def pointBoundsForFiles(spark: SparkSession, path: String,
-      files: Seq[String], geomCols: Seq[String])
+  private[graft] def pointBoundsForFiles(spark: SparkSession,
+      conf: Configuration, path: String, files: Seq[String], geomCols: Seq[String])
       : Map[String, Map[String, Array[Double]]] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.{GroupType, MessageType, Type}
-    val conf = spark.sessionState.newHadoopConf()
     def pointShaped(schema: MessageType): Boolean = geomCols.forall { g =>
       schema.containsField(g) && (schema.getType(Seq(g): _*) match {
         case gt: GroupType if gt.getRepetition != Type.Repetition.REPEATED &&
@@ -407,7 +411,7 @@ object GeoParquet {
       }.toMap)
     if (fallback.isEmpty) trusted
     else applyScDelta(trusted, ScDelta(describedAs(spark, "lake: bounds scan")(
-      boundsPerFile(readFiles(spark, path, fallback.toSeq), geomCols)), Set.empty))
+      boundsPerFile(readFiles(spark, conf, path, fallback.toSeq), geomCols)), Set.empty))
   }
 
   /** One file's (rowCount, per-LEAF (min, max)) from its parquet
@@ -533,15 +537,14 @@ object GeoParquet {
     * pinned listing the selection was pruned from); only when that is
     * empty too does the whole directory supply it, through Spark's
     * listing and inference. */
-  private[graft] def readFiles(spark: SparkSession, path: String,
-      names: Seq[String], listing: Seq[String] = Nil): DataFrame = {
+  private[graft] def readFiles(spark: SparkSession, conf: Configuration,
+      path: String, names: Seq[String], listing: Seq[String] = Nil): DataFrame = {
     import org.apache.parquet.hadoop.Footer
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetToSparkSchemaConverter}
     import org.apache.spark.sql.graftbridge.Bridge
     val schemaFiles = (if (names.nonEmpty) names else listing).sorted
     if (schemaFiles.isEmpty) return spark.read.parquet(path).limit(0)
-    val conf = spark.sessionState.newHadoopConf()
     val sqlConf = spark.sessionState.conf
     val converter = new ParquetToSparkSchemaConverter(sqlConf)
     def schemaOf(f: String) = {
@@ -580,7 +583,7 @@ object GeoParquet {
     val missing = cols.filterNot(batch.columns.contains)
     require(missing.isEmpty, s"missing column(s): ${missing.mkString(", ")}")
     appendWithBoundsOf(batch, path, cols,
-      files => numericBoundsForFiles(batch.sparkSession, path, files, cols))
+      (conf, files) => numericBoundsForFiles(batch.sparkSession, conf, path, files, cols))
   }
 
   /** Shared skeleton of the two incremental-append paths: STAGE the
@@ -597,17 +600,17 @@ object GeoParquet {
     * a crash before any move leaves only an invisible dot-dir. */
   private def appendWithBoundsOf(batch: DataFrame, path: String,
       cols: Seq[String],
-      boundsFn: Seq[String] => Map[String, Map[String, Array[Double]]])
+      boundsFn: (Configuration, Seq[String]) => Map[String, Map[String, Array[Double]]])
       : Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val root = new HadoopPath(path)
     val fs = root.getFileSystem(conf)
     val before = listDataFiles(fs, root).toSet
     val staged = describedAs(spark, "lake: stage append")(
-      stageInto(batch, root, fs))
+      stageInto(batch, path, conf))
     if (staged.nonEmpty) {
-      val boundsAll = boundsFn(staged)
+      val boundsAll = boundsFn(conf, staged)
       // 0-row parts never enter the dataset (see [[dropEmptyNewFiles]]);
       // an all-empty batch appends NOTHING — no sidecar write, no
       // generation (an idle streaming ingest no longer accretes empty
@@ -619,8 +622,8 @@ object GeoParquet {
         // path's read-back retry — appending with a subset of columns
         // preserves the others' (and the row-count block's) entries even
         // against a concurrent writer
-        commitSidecar(spark, path, newBounds, Set.empty)
-        commitGenState(spark, path, appendCommit(path, before, newFiles))
+        commitSidecar(conf, path, newBounds, Set.empty)
+        commitGenState(conf, path, appendCommit(path, before, newFiles))
       }
     }
   }
@@ -683,14 +686,18 @@ object GeoParquet {
     * listing diff can capture a CONCURRENT writer's files — staging
     * eliminates both. A crash after some moves leaves surfaced-
     * not-silent torn state (warnUnrecorded / adoptUnrecordedFiles); a
-    * crash before any move leaves only an invisible dot-dir. */
-  private def stageInto(df: DataFrame, root: HadoopPath,
-                        fs: org.apache.hadoop.fs.FileSystem,
+    * crash before any move leaves only an invisible dot-dir. The
+    * staging write leaves out the `_SUCCESS` marker: nothing reads it
+    * there, and the staging dir is deleted whole. */
+  private def stageInto(df: DataFrame, path: String, conf: Configuration,
                         prefix: String = ""): Seq[String] = {
+    val root = new HadoopPath(path)
+    val fs = root.getFileSystem(conf)
     val staging = new HadoopPath(root,
       s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
-      df.write.parquet(staging.toString)
+      writeParquet(df, staging.toString, "error", conf,
+        Map("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false"))
       val parts = fs.listStatus(staging).filter(_.isFile)
         .map(_.getPath.getName)
         .filter(n => !n.startsWith("_") && !n.startsWith(".")).sorted
@@ -707,6 +714,15 @@ object GeoParquet {
       catch { case _: java.io.IOException => () }
     }
   }
+
+  /** The lake's one parquet write: Spark's writer, with `conf`'s lake
+    * keys ([[LakeFs.writeOptions]]) and `extra` as write options, so the
+    * driver's committer and the executors' part files use the lake's
+    * `file:` implementation too. */
+  private def writeParquet(df: DataFrame, path: String, mode: String,
+                           conf: Configuration,
+                           extra: Map[String, String] = Map.empty): Unit =
+    df.write.mode(mode).options(LakeFs.writeOptions(conf) ++ extra).parquet(path)
 
   /** Compaction output carries this name prefix so readers can tell an
     * IN-FLIGHT (or aborted) rewrite's files — renamed into the live
@@ -857,10 +873,10 @@ object GeoParquet {
     * or torn commits — see [[warnUnrecorded]]). Empty when the dataset
     * has no manifest at all. */
   def unrecordedFiles(spark: SparkSession, path: String): Seq[String] = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     readGenState(path, conf) match {
       case None => Nil
-      case Some(st) => (listDataFileSet(spark, path) -- st.files.keySet)
+      case Some(st) => (listDataFileSet(conf, path) -- st.files.keySet)
         .toSeq.sorted
     }
   }
@@ -879,7 +895,7 @@ object GeoParquet {
     val found = unrecordedFiles(spark, path)
       .filterNot(_.startsWith(RewritePrefix))
     if (found.isEmpty) return Nil
-    commitGenState(spark, path, {
+    commitGenState(lakeConf(spark), path, {
       case Some(st) =>
         // recompute inside the CAS loop: a racing commit may have
         // recorded some of them already
@@ -910,7 +926,7 @@ object GeoParquet {
   def readZOrderRange(spark: SparkSession, path: String,
                       ranges: Seq[(String, Double, Double)]): DataFrame = {
     require(ranges.nonEmpty, "need at least one (column, lo, hi) range")
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val root = new HadoopPath(path)
     val fs = root.getFileSystem(conf)
     // listing FIRST, manifest second (see [[reconcileListing]]): the
@@ -934,9 +950,9 @@ object GeoParquet {
     // (empty top-level listing, e.g. hive subdirs someone attached a
     // sidecar to) — degrade to keep, never to zero rows.
     if (listed.nonEmpty && (stOpt.nonEmpty || sidecar.nonEmpty))
-      readZOrderSubset(spark, path, Some(current), ranges, sidecar)
+      readZOrderSubset(spark, conf, path, Some(current), ranges, sidecar)
     else
-      readZOrderSubset(spark, path, None, ranges, None)
+      readZOrderSubset(spark, conf, path, None, ranges, None)
   }
 
   /** TIME-TRAVEL read over a packed+appended dataset: the snapshot at
@@ -950,7 +966,7 @@ object GeoParquet {
                              ranges: Seq[(String, Double, Double)] = Nil)
       : DataFrame = {
     require(gen >= 0, s"generation must be >= 0, got $gen")
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val st = readGenState(path, conf).getOrElse(throw
       new IllegalArgumentException(s"no generation manifest at $path — " +
         "the dataset was not written via the graft pack/append API"))
@@ -961,14 +977,13 @@ object GeoParquet {
       s"generation $gen not recorded at $path (latest is $latest)")
     require(gen >= st.minGen,
       s"generation $gen at $path was vacuumed (oldest readable is ${st.minGen})")
-    readZOrderSubset(spark, path, Some(st.liveAt(gen)),
+    readZOrderSubset(spark, conf, path, Some(st.liveAt(gen)),
       ranges, readSidecarText(path, conf))
   }
 
   /** Latest recorded generation ordinal (0 = the initial pack). */
   def currentGeneration(spark: SparkSession, path: String): Int = {
-    val st = readGenState(path,
-      spark.sessionState.newHadoopConf()).getOrElse(throw
+    val st = readGenState(path, lakeConf(spark)).getOrElse(throw
       new IllegalArgumentException(s"no generation manifest at $path"))
     require(st.files.nonEmpty,
       s"generation manifest at $path records no data files")
@@ -977,8 +992,7 @@ object GeoParquet {
 
   /** Oldest generation still readable (0 until a vacuum advances it). */
   def minReadableGeneration(spark: SparkSession, path: String): Int = {
-    val st = readGenState(path,
-      spark.sessionState.newHadoopConf()).getOrElse(throw
+    val st = readGenState(path, lakeConf(spark)).getOrElse(throw
       new IllegalArgumentException(s"no generation manifest at $path"))
     st.minGen
   }
@@ -1000,7 +1014,7 @@ object GeoParquet {
       : DataFrame = {
     require(fromGen >= -1 && fromGen <= toGen,
       s"need -1 <= fromGen <= toGen, got ($fromGen, $toGen]")
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val st = readGenState(path, conf).getOrElse(throw
       new IllegalArgumentException(s"no generation manifest at $path — " +
         "the dataset was not written via the graft pack/append API"))
@@ -1035,10 +1049,10 @@ object GeoParquet {
       // schema-stable empty result (e.g. a window holding only a
       // compaction commit): ONE live file carries the schema — planning
       // over the whole head for a guaranteed-empty frame is wasted IO
-      readZOrderSubset(spark, path, Some(st.liveAt(st.currentGen).take(1)),
+      readZOrderSubset(spark, conf, path, Some(st.liveAt(st.currentGen).take(1)),
         ranges, None).limit(0)
     else
-      readZOrderSubset(spark, path, Some(files), ranges,
+      readZOrderSubset(spark, conf, path, Some(files), ranges,
         readSidecarText(path, conf))
   }
 
@@ -1058,7 +1072,7 @@ object GeoParquet {
   def statsAtGeneration(spark: SparkSession, path: String, gen: Int,
                         cols: Seq[String]): (Long, Map[String, (Double, Double)]) = {
     require(cols.distinct == cols, s"duplicate column in $cols")
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val st = readGenState(path, conf).getOrElse(throw
       new IllegalArgumentException(s"no generation manifest at $path"))
     require(st.files.nonEmpty,
@@ -1102,7 +1116,7 @@ object GeoParquet {
     * the count is no longer known. */
   def generationHistory(spark: SparkSession, path: String)
       : Seq[(Int, Boolean, Int, Long)] = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val st = readGenState(path, conf).getOrElse(throw
       new IllegalArgumentException(s"no generation manifest at $path"))
     require(st.files.nonEmpty,
@@ -1145,7 +1159,7 @@ object GeoParquet {
       s"bitsPerCol=$bitsPerCol x ${cols.length} cols must fit a signed long")
     require(!cols.contains(RowCountCol),
       s"$RowCountCol is a reserved sidecar name")
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val st = readGenState(path, conf).getOrElse(throw
       new IllegalArgumentException(s"no generation manifest at $path — " +
         "only pack/append-API datasets can be compacted"))
@@ -1154,7 +1168,7 @@ object GeoParquet {
     val snapshotGen = st.currentGen
     val live = st.liveAt(snapshotGen)
     require(live.nonEmpty, s"empty current snapshot at $path")
-    val df = readFiles(spark, path, live)
+    val df = readFiles(spark, conf, path, live)
     require(!df.columns.contains(ZCodeCol),
       s"input column collides with reserved name $ZCodeCol")
     val missing = cols.filterNot(df.columns.contains)
@@ -1170,7 +1184,7 @@ object GeoParquet {
     // the tombstoning commit lands these files duplicate live rows,
     // and the marker is what lets a racing reader drop them
     val staged = describedAs(spark, "lake: compact")(stageInto(
-      zSortedFrame(df, cols, numPartitions, bitsPerCol), root, fs,
+      zSortedFrame(df, cols, numPartitions, bitsPerCol), path, conf,
       prefix = RewritePrefix))
     val liveSet = live.toSet
     // the abort cleanup below must only touch files still on disk:
@@ -1186,7 +1200,7 @@ object GeoParquet {
       // sidecar: ADD the compacted files' bounds, KEEP the superseded
       // files' entries — they still prune reads at pre-compaction
       // generations (vacuum is what retires them)
-      val freshAll = numericBoundsForFiles(spark, path, newFiles, cols)
+      val freshAll = numericBoundsForFiles(spark, conf, path, newFiles, cols)
       // 0-row parts never enter the snapshot (see [[dropEmptyNewFiles]]);
       // an all-empty rewrite (compacting an empty snapshot) keeps ONE
       // schema-preserving file with explicit zero-count entries so the
@@ -1194,8 +1208,8 @@ object GeoParquet {
       val (kept, fresh, _) = dropEmptyNewFiles(
         fs, root, staged, freshAll, cols, keepSchemaFileIfAllEmpty = true)
       newFiles = kept
-      commitSidecar(spark, path, fresh, Set.empty)
-      commitGenState(spark, path, {
+      commitSidecar(conf, path, fresh, Set.empty)
+      commitGenState(conf, path, {
         case Some(cur) if newFiles.forall(cur.files.keySet) =>
           // CONVERGED RE-APPLICATION: commitGenState re-invokes this
           // update when an adoption or success-path marker cleanup
@@ -1258,7 +1272,7 @@ object GeoParquet {
         // and partitionSindex would index nonexistent files), then
         // remove the files themselves
         val straySet = strays.toSet
-        try commitSidecar(spark, path, Map.empty, straySet)
+        try commitSidecar(conf, path, Map.empty, straySet)
         catch { case se if scala.util.control.NonFatal(se) =>
           e.addSuppressed(se) }
         // Hadoop delete signals failure by RETURNING false — check it;
@@ -1304,12 +1318,12 @@ object GeoParquet {
   def vacuumGenerations(spark: SparkSession, path: String,
                         retain: Int): Seq[String] = {
     require(retain >= 0, s"retain must be >= 0, got $retain")
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val st0 = readGenState(path, conf).getOrElse(throw
       new IllegalArgumentException(s"no generation manifest at $path"))
     require(st0.files.nonEmpty,
       s"generation manifest at $path records no data files")
-    val st = commitGenState(spark, path, {
+    val st = commitGenState(conf, path, {
       case Some(cur) => cur.copy(minGen =
         math.max(cur.minGen, math.max(0, cur.currentGen - retain)))
       case None => throw new IllegalStateException(
@@ -1335,7 +1349,7 @@ object GeoParquet {
         // only readable files (pruning of remaining generations is
         // unaffected — per-file stats are independent)
         val deadSet = dead.toSet
-        commitSidecar(spark, path, Map.empty, deadSet)
+        commitSidecar(conf, path, Map.empty, deadSet)
         // Hadoop FileSystem.delete signals failure by RETURNING false,
         // not throwing — silently trusting it reported ghosts as
         // reclaimed. A failed delete is warned and left out of the
@@ -1372,7 +1386,7 @@ object GeoParquet {
         !onDisk(f) => f
     }.toSet
     if (droppable.nonEmpty)
-      commitGenState(spark, path, {
+      commitGenState(conf, path, {
         case Some(cur) =>
           // re-check against the CURRENT state inside the CAS loop; a
           // racing vacuum may have advanced minGen further (harmless)
@@ -1410,7 +1424,7 @@ object GeoParquet {
     * missing-sidecar fallback), then the exact residual filters.
     * Missing sidecar / unknown files degrade to keep — never to wrong
     * results. */
-  private def readZOrderSubset(spark: SparkSession, path: String,
+  private def readZOrderSubset(spark: SparkSession, conf: Configuration, path: String,
                                files: Option[Seq[String]],
                                ranges: Seq[(String, Double, Double)],
                                sidecar: Option[String])
@@ -1435,7 +1449,7 @@ object GeoParquet {
             }
           case _ => fl
         }
-        readFiles(spark, path, keep, fl)
+        readFiles(spark, conf, path, keep, fl)
     }
     norm.foldLeft(df) { case (d, (c, lo, hi)) =>
       // NaN bounds (e.g. min/max of an empty aggregate) match nothing,
@@ -1481,18 +1495,20 @@ object GeoParquet {
 
   /** Compute per-file bounds for the geometry columns and write the
     * sidecar JSON. One distributed aggregate per call. */
-  def writeSidecar(spark: SparkSession, path: String, geomCols: Seq[String]): Unit = {
+  def writeSidecar(spark: SparkSession, path: String, geomCols: Seq[String]): Unit =
+    rebuildSidecar(spark, lakeConf(spark), path, geomCols)
+
+  private def rebuildSidecar(spark: SparkSession, conf: Configuration,
+                             path: String, geomCols: Seq[String]): Unit = {
     require(!geomCols.contains(RowCountCol),
       s"$RowCountCol is a reserved sidecar name")
     // full rebuild, but still through the versioned update path so a
     // concurrent incremental append can't be silently clobbered;
     // point-shaped files rebuild from footers (zero data IO), others
     // scan — per file, see pointBoundsForFiles
-    val root = new HadoopPath(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val fresh = pointBoundsForFiles(spark, path,
-      listDataFiles(fs, root).sorted.toSeq, geomCols)
-    commitSidecar(spark, path, Map.empty, Set.empty, replace = Some(fresh))
+    val fresh = pointBoundsForFiles(spark, conf, path,
+      listDataFileSet(conf, path).toSeq.sorted, geomCols)
+    commitSidecar(conf, path, Map.empty, Set.empty, replace = Some(fresh))
   }
 
   /** Per-file bounds for each geometry column: one distributed
@@ -1669,13 +1685,13 @@ object GeoParquet {
     * the sidecar (no removal hits a recorded file, every upsert matches
     * the recorded bounds) writes nothing; the test is O(change), not an
     * O(live) render. */
-  private def commitSidecar(spark: SparkSession, path: String,
+  private def commitSidecar(conf: Configuration, path: String,
       ups: Map[String, Map[String, Array[Double]]],
       dels: Set[String],
       replace: Option[Map[String, Map[String, Array[Double]]]] = None)
       : Unit = {
     val change = ScDelta(ups, dels)
-    scLog.commit(spark.sessionState.newHadoopConf(), path, (cur, n) => {
+    scLog.commit(conf, path, (cur, n) => {
       val next = replace.getOrElse(applyScDelta(
         cur.fold(Map.empty[String, Map[String, Array[Double]]])(_.bounds), change))
       val noop = cur match {
@@ -1720,7 +1736,7 @@ object GeoParquet {
     val missing = geomCols.filterNot(batch.columns.contains)
     require(missing.isEmpty, s"missing column(s): ${missing.mkString(", ")}")
     appendWithBoundsOf(batch, path, geomCols,
-      files => pointBoundsForFiles(batch.sparkSession, path, files, geomCols))
+      (conf, files) => pointBoundsForFiles(batch.sparkSession, conf, path, files, geomCols))
   }
 
   /** The sidecar log's state: the CAS ordinal and the bounds blocks.
@@ -1786,7 +1802,7 @@ object GeoParquet {
     * discovery. */
   def read(spark: SparkSession, path: String, geomCol: String, kind: String,
            bounds: Option[(Double, Double, Double, Double)] = None): GeoFrame = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = lakeConf(spark)
     val sidecarText = bounds.flatMap(_ => readSidecarText(path, conf))
     // normalize inverted rects like GeoFrame.cx does: the residual
     // filters callers compose (cx, intersects_bounds) normalize, and a
@@ -1813,7 +1829,7 @@ object GeoParquet {
     // layouts (manifests only ever name flat files)
     def unprunedRead(): DataFrame =
       if (stOpt.isEmpty || listed.isEmpty) spark.read.parquet(path)
-      else readFiles(spark, path, current, listed)
+      else readFiles(spark, conf, path, current, listed)
     val df = (normBounds, sidecarText) match {
       case (Some((qx0, qy0, qx1, qy1)), Some(text)) =>
         val perFile = parseSidecar(text, geomCol)
@@ -1835,7 +1851,7 @@ object GeoParquet {
           // subdir layout someone attached a sidecar to) — degrade to
           // the full read, never to zero rows
           if (listed.isEmpty) spark.read.parquet(path)
-          else readFiles(spark, path, keep, listed)
+          else readFiles(spark, conf, path, keep, listed)
         }
       case _ => unprunedRead()
     }
@@ -1894,7 +1910,7 @@ object GeoParquet {
   def partitionSindex(path: String, geomCol: String,
                       spark: SparkSession = SparkSession.active)
       : Option[(graft.geom.HilbertRtree, Array[String])] = {
-    val text = readSidecarText(path, spark.sessionState.newHadoopConf())
+    val text = readSidecarText(path, lakeConf(spark))
       .getOrElse(return None)
     val perFile = parseSidecar(text, geomCol)
     if (perFile.isEmpty) return None
@@ -1909,10 +1925,9 @@ object GeoParquet {
   }
 
   /** The names of the data files directly under `path`, as a set. */
-  private def listDataFileSet(spark: SparkSession, path: String): Set[String] = {
+  private def listDataFileSet(conf: Configuration, path: String): Set[String] = {
     val root = new HadoopPath(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    listDataFiles(fs, root).toSet
+    listDataFiles(root.getFileSystem(conf), root).toSet
   }
 
   /** Shared tail of the pack functions: compute sidecar bounds over
@@ -1941,19 +1956,18 @@ object GeoParquet {
     * an append-mode pack whose parts are all empty appends NOTHING —
     * no sidecar write, no generation (same contract as
     * [[appendWithBoundsOf]]). */
-  private def finishPack(spark: SparkSession, path: String, mode: String,
-      before: Set[String],
+  private def finishPack(spark: SparkSession, conf: Configuration,
+      path: String, mode: String, before: Set[String],
       boundsOf: Seq[String] => Map[String, Map[String, Array[Double]]],
       cols: Seq[String],
       knownNew: Option[Seq[String]] = None)
       : Unit = {
-    val conf = spark.sessionState.newHadoopConf()
     val root = new HadoopPath(path)
     val fs = root.getFileSystem(conf)
     // a STAGED write knows its files exactly; the listing (one RPC on
     // an object store) is only taken for the exclusive modes, where no
     // concurrent writer can pollute the diff
-    lazy val after = listDataFileSet(spark, path)
+    lazy val after = listDataFileSet(conf, path)
     val rawNew = knownNew.getOrElse((after -- before).toSeq.sorted)
     val m = mode.toLowerCase
     if (m == "ignore" && rawNew.isEmpty) return
@@ -1969,22 +1983,22 @@ object GeoParquet {
           fs, root, rawNew, freshAll, cols,
           keepSchemaFileIfAllEmpty = m != "append" || before.isEmpty)
         if (kept.nonEmpty)
-          commitSidecar(spark, path, fresh, Set.empty)
+          commitSidecar(conf, path, fresh, Set.empty)
         (kept, droppedSet)
       } else (rawNew, Set.empty[String])
     if (m == "append") {
       // commit only what was actually appended; an all-empty (or
       // no-op) append touches neither the sidecar nor the manifest
       if (newFiles.nonEmpty)
-        commitGenState(spark, path, appendCommit(path, before, newFiles))
+        commitGenState(conf, path, appendCommit(path, before, newFiles))
     } else if (m == "ignore") {
       // a write happened (dir was absent): record it unless some other
       // writer's manifest already exists
       if (readGenState(path, conf).isEmpty)
-        commitGenState(spark, path, _ =>
+        commitGenState(conf, path, _ =>
           GenState(0, 0, (after -- dropped).map(_ -> GenEntry(0, -1)).toMap))
     }
-    else commitGenState(spark, path, _ =>
+    else commitGenState(conf, path, _ =>
       GenState(0, 0, (after -- dropped).map(_ -> GenEntry(0, -1)).toMap))
   }
 
@@ -2209,13 +2223,18 @@ object GeoParquet {
     * adoption or success-path cleanup voided our marker after the
     * write) finds it CONVERGED and commits nothing: an empty delta
     * would inflate the ordinals and break exact commit counting. */
-  private[graft] def commitGenState(spark: SparkSession, path: String,
+  private[graft] def commitGenState(conf: Configuration, path: String,
       update: Option[GenState] => GenState): GenState =
-    genLog.commit(spark.sessionState.newHadoopConf(), path, (cur, n) => {
+    genLog.commit(conf, path, (cur, n) => {
       val next = update(cur).copy(commit = n)
       if (cur.exists(_.copy(commit = n) == next)) None
       else Some((next, cur.map(diffGenState(_, next))))
     }).get
+
+  /** [[commitGenState]] on a fresh [[LakeFs.lakeConf]] of `spark`. */
+  private[graft] def commitGenState(spark: SparkSession, path: String,
+      update: Option[GenState] => GenState): GenState =
+    commitGenState(lakeConf(spark), path, update)
 
   /** Every geometry column recorded in a sidecar, with its per-file
     * bounds (column blocks are flat `{file:[...],...}` objects, so the

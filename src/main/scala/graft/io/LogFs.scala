@@ -52,12 +52,17 @@ import org.apache.hadoop.fs.{FileSystem, Path => HadoopPath}
  *    exists+rename DOES NOT EXIST here. On filesystems without any
  *    no-replace primitive the caller falls back to probe+rename,
  *    whose safety then rests on the FS's OWN rename semantics:
- *    Hadoop's checksummed LocalFileSystem and HDFS refuse an existing
- *    file target (LogFsSpec forces the race and pins the refusal),
+ *    the lake's `file:` class and HDFS refuse an existing file target
+ *    (LogFsSpec forces the race and pins the refusal),
  *    but a bare rename(2) (RawLocalFileSystem's fast path, POSIX
  *    mounts) silently REPLACES — pinned at the primitive level in
  *    LogFsSpec — which is exactly why the atomic link path is the
- *    default wherever the scheme provides one. An object-store
+ *    default wherever the scheme provides one. The lake's `file:`
+ *    class ([[LakeLocalFileSystem]], see [[LakeFs]]) is still Hadoop's
+ *    checksummed LocalFileSystem, with a rename that refuses an
+ *    existing file as Hive's ProxyLocalFileSystem (the session default
+ *    where Spark ships Hive's jars) does; only its permission setting
+ *    changed, so P1-P3 are unchanged. An object-store
  *    deployment restores P3 (and P1) by registering its store's
  *    conditional put ([[ConditionalPut]] via
  *    [[registerConditionalPut]] — the seam AdversarialFsSpec proves

@@ -144,8 +144,13 @@ private[graft] final class VersionedLog[S, D](
   /** The state plus how many deltas sit on its checkpoint (the fold
     * trigger); None when the dataset has no log. A file vanishing
     * between the listing and its read, or a delta gap, is a racing
-    * fold's cleanup: re-list. Either persisting is a torn dataset. */
-  def read(path: String, conf: Configuration): Option[(S, Int)] = {
+    * fold's cleanup: re-list. Either persisting is a torn dataset.
+    * `claimed` is the marker of ordinal 1 the caller holds (the first
+    * commit's re-check): a log dir listing nothing else is that commit
+    * in progress, not a readdir racing a fold, see the empty-dir rule
+    * below. */
+  def read(path: String, conf: Configuration,
+           claimed: Option[String] = None): Option[(S, Int)] = {
     val dir = logDir(path)
     val fs = dir.getFileSystem(conf)
     val dirWhere = dir.toString
@@ -201,9 +206,13 @@ private[graft] final class VersionedLog[S, D](
               // "no log" must be confirmed (a migration fold may have
               // swept the root between our listing and our read). A log
               // dir that EXISTS without artifacts is a torn first commit
-              // or a readdir racing a fold: retried on its own counter
+              // or a readdir racing a fold: retried on its own counter.
+              // Not when it lists only the caller's claimed marker: every
+              // log holds an identity file from its first commit on,
+              // which no sweep deletes, so a readdir racing a later fold
+              // still lists it
               if (confirmedNoCkpt()) {
-                if (!dirExists) return None
+                if (!dirExists || claimed.exists(names == Seq(_))) return None
                 emptySeen += 1
                 if (emptySeen >= 3) return None
               }
@@ -276,7 +285,8 @@ private[graft] final class VersionedLog[S, D](
           staleSinceNanos = 0L
         }
       } else if (markerHolds(fs, marker, nonce) &&
-          !read(path, conf).exists(s => ordinal(s._1) >= n)) {
+          !read(path, conf, Some(marker.getName).filter(_ => n == 1))
+            .exists(s => ordinal(s._1) >= n)) {
         val fold = delta.isEmpty || full.forall(_._2 + 1 >= DeltaFoldEvery)
         // before the checkpoint lands; a crash in between leaves an
         // extra identity file, which the signature just carries

@@ -29,7 +29,7 @@ class FooterStatsSpec extends AnyFunSuite {
       df.write.mode("overwrite").parquet(dir.getPath)
       val files = dataFiles(dir.getPath)
       val viaFooter = GeoParquet.numericBoundsForFiles(
-        spark, dir.getPath, files, cols)
+        spark, LakeFs.lakeConf(spark), dir.getPath, files, cols)
       val viaScan = GeoParquet.numericBoundsPerFile(
         spark.read.parquet(files.map(f => s"$dir/$f"): _*), cols)
       assert(viaFooter.keySet == viaScan.keySet)
@@ -115,7 +115,7 @@ class FooterStatsSpec extends AnyFunSuite {
           .mode("overwrite").parquet(dir.getPath)
         val files = dataFiles(dir.getPath)
         val viaFooter = GeoParquet.numericBoundsForFiles(
-          spark, dir.getPath, files, Seq("k", "v"))
+          spark, LakeFs.lakeConf(spark), dir.getPath, files, Seq("k", "v"))
         val viaScan = GeoParquet.numericBoundsPerFile(
           spark.read.parquet(dir.getPath), Seq("k", "v"))
         assert(viaFooter.keySet == viaScan.keySet)
@@ -137,7 +137,7 @@ class FooterStatsSpec extends AnyFunSuite {
       df.write.mode("overwrite").parquet(dir.getPath)
       val files = dataFiles(dir.getPath)
       val viaFooter = GeoParquet.pointBoundsForFiles(
-        spark, dir.getPath, files, geomCols)
+        spark, LakeFs.lakeConf(spark), dir.getPath, files, geomCols)
       val viaScan = GeoParquet.boundsPerFile(
         spark.read.parquet(files.map(f => s"$dir/$f"): _*), geomCols)
       assert(viaFooter.keySet == viaScan.keySet)
@@ -185,7 +185,7 @@ class FooterStatsSpec extends AnyFunSuite {
       df.write.mode("overwrite").parquet(dir.getPath)
       val files = dataFiles(dir.getPath)
       val viaFooter = GeoParquet.pointBoundsForFiles(
-        spark, dir.getPath, files, Seq("line"))
+        spark, LakeFs.lakeConf(spark), dir.getPath, files, Seq("line"))
       val viaScan = GeoParquet.boundsPerFile(
         spark.read.parquet(dir.getPath), Seq("line"))
       assert(viaFooter("line").keySet == viaScan("line").keySet)

@@ -39,7 +39,7 @@ class ReadFilesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** readFiles against spark.read.parquet over the same names: schema
     * (field metadata included) and rows. */
   private def assertParity(path: String, names: Seq[String]): Unit = {
-    val ours = GeoParquet.readFiles(spark, path, names)
+    val ours = GeoParquet.readFiles(spark, LakeFs.lakeConf(spark), path, names)
     val inferred = spark.read.parquet(names.map(f => s"$path/$f"): _*)
     assert(ours.schema == inferred.schema)
     assert(ours.collect().map(_.toString).sorted.toSeq ==
@@ -68,7 +68,7 @@ class ReadFilesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertParity(path, files)
     assertParity(path, files.reverse)
     assertParity(path, files.takeRight(1))
-    assert(GeoParquet.readFiles(spark, path, files).schema("poly").metadata == md)
+    assert(GeoParquet.readFiles(spark, LakeFs.lakeConf(spark), path, files).schema("poly").metadata == md)
   }
 
   test("TIMESTAMP(NANOS) under spark.sql.legacy.parquet.nanosAsLong") {
@@ -93,7 +93,7 @@ class ReadFilesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     withConfs("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       assertParity(path, names)
-      assert(GeoParquet.readFiles(spark, path, names).schema("ts").dataType ==
+      assert(GeoParquet.readFiles(spark, LakeFs.lakeConf(spark), path, names).schema("ts").dataType ==
         org.apache.spark.sql.types.LongType)
     }
   }
@@ -118,13 +118,13 @@ class ReadFilesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     withConfs("spark.sql.parquet.mergeSchema" -> "true") {
       assertParity(path, names)
       assertParity(path, names.reverse)
-      assert(GeoParquet.readFiles(spark, path, names).columns.toSeq ==
+      assert(GeoParquet.readFiles(spark, LakeFs.lakeConf(spark), path, names).columns.toSeq ==
         Seq("id", "a", "b", "c"))
     }
     withConfs("spark.sql.parquet.mergeSchema" -> "false") {
       // without merging, both pick the first file by path
       assertParity(path, names.reverse)
-      assert(GeoParquet.readFiles(spark, path, names.reverse).columns.toSeq ==
+      assert(GeoParquet.readFiles(spark, LakeFs.lakeConf(spark), path, names.reverse).columns.toSeq ==
         Seq("id", "a"))
     }
   }
@@ -139,11 +139,11 @@ class ReadFilesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gf = GeoParquet.read(spark, path, "pt", "point", Some((50.0, 50.0, 60.0, 60.0)))
     assert(gf.df.schema == spark.read.parquet(path).schema)
     assert(gf.df.count() == 0L)
-    val none: DataFrame = GeoParquet.readFiles(spark, path, Nil, dataFiles(path))
+    val none: DataFrame = GeoParquet.readFiles(spark, LakeFs.lakeConf(spark), path, Nil, dataFiles(path))
     assert(none.schema == spark.read.parquet(path).schema)
     assert(none.count() == 0L)
     // nothing at all to take a schema from: the directory read answers
-    val fromDir = GeoParquet.readFiles(spark, path, Nil)
+    val fromDir = GeoParquet.readFiles(spark, LakeFs.lakeConf(spark), path, Nil)
     assert(fromDir.schema == spark.read.parquet(path).schema)
     assert(fromDir.count() == 0L)
   }
