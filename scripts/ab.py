@@ -46,7 +46,10 @@ filesystem's caller). A `--trace 1` run cannot replace it: the trace
 registers its own `file:` class, which the lake keeps.
 
 Each side must be a fresh `git clone` (never a `cp -r` of a built
-checkout: the copy would reuse the original's build directory).
+checkout: the copy would reuse the original's build directory). `run`,
+`trace` and `procs` exit non-zero, naming the path, when a side's
+`.bench_build/geobench.classpath` lists a `target/` directory outside
+that side's checkout.
 """
 import json
 import math
@@ -70,6 +73,26 @@ def bench_command(root, workload, seed, trace=0):
                                "--seconds", str(bench["run_seconds"]), "--trace", str(trace)]
 
 
+def check_build(*roots):
+    """Exit when a checkout's benchmark classpath points into another
+    checkout: a `cp -r` of a built clone carries the original's
+    `.bench_build/`, whose build stamp hashes only the sources, so the
+    copy would run (and a rebuild of either would break) the original's
+    classes."""
+    for root in roots:
+        home = os.path.realpath(root)
+        cp_file = os.path.join(home, os.environ.get("CARGO_TARGET_DIR", ".bench_build"),
+                               "geobench.classpath")
+        if not os.path.exists(cp_file):
+            continue
+        with open(cp_file) as f:
+            for entry in f.read().strip().split(os.pathsep):
+                path = os.path.realpath(entry)
+                if "target" in path.split(os.sep) and os.path.commonpath([home, path]) != home:
+                    raise SystemExit(f"{cp_file} lists {entry}, a target/ directory outside "
+                                     f"{home}: use a fresh git clone, not a copy of a built one")
+
+
 def run_once(side, root, workload, seed, trace=0):
     """{"result": <the benchmark's JSON line>} or {"error": {code, stderr_tail}}."""
     p = subprocess.run(bench_command(root, workload, seed, trace), cwd=root,
@@ -86,6 +109,7 @@ def run_once(side, root, workload, seed, trace=0):
 
 
 def run(parent, change, workload, seeds, out):
+    check_build(parent, change)
     for pair, seed in enumerate(seeds_of(seeds)):
         sides = [("parent", parent), ("change", change)]
         for side, root in (sides if pair % 2 == 0 else sides[::-1]):
@@ -96,6 +120,7 @@ def run(parent, change, workload, seeds, out):
 
 
 def trace(parent, change, workload, seed, out):
+    check_build(parent, change)
     doc = {"workload": workload, "seed": int(seed),
            "command": " ".join(bench_command(parent, workload, seed, 1))}
     for side, root in (("parent", parent), ("change", change)):
@@ -147,6 +172,7 @@ def proc_site(frames):
 def procs(root, workload, seed):
     import re
     import tempfile
+    check_build(root)
     with tempfile.TemporaryDirectory() as tmp:
         jfc = os.path.join(tmp, "procs.jfc")
         with open(jfc, "w") as f:

@@ -1038,11 +1038,15 @@ object Dedup {
    *     larger than what AQE would coalesce into one partition
    *     ([[graft.tools.Partitions.fitOne]]: AQE and its coalescing on,
    *     plan stats within the session's own size limit), the rounds are
-   *     skipped: the non-loop edges are coalesced into one task whose
-   *     union-find emits every id with its root, (root, root) included.
-   *     That is the first stop rule below, decided from plan statistics
-   *     before the first round instead of after it. One job, described
-   *     "connectedComponentsStar: one partition";
+   *     skipped: the edges are collected to the driver in one job,
+   *     described "connectedComponentsStar: one partition" (none when the
+   *     edges already are a local relation), and [[contractPartition]]'s
+   *     union-find over the non-loop edges emits every id with its root,
+   *     (root, root) included, on the driver. The labels come back as a
+   *     local relation, so a consumer reads them with no job, and nothing
+   *     is checkpointed. That is the first stop rule below, decided from
+   *     plan statistics before the first round, on the data one coalesced
+   *     task would have held;
    *   - the round's checkpoint has one partition (AQE coalesced the small
    *     input): its union-find saw every edge, so its output already is
    *     the label set;
@@ -1057,15 +1061,16 @@ object Dedup {
    * Every round also emits one self row (r, r) per local minimum r; the
    * next round drops it before the stars. At either stop the output is
    * then exactly {(leaf, root)} ∪ {(root, root)}: the labels, with no
-   * further job. Returns (id, component) as a projection of that
+   * further job. The loop returns (id, component) as a projection of that
    * checkpoint, the only one still persisted: each round releases the
    * previous round's checkpoint (never the caller's input) once its own
    * is written. Round jobs carry the description
    * "connectedComponentsStar: round <k>"; the caller's description is
    * restored on return. Throws IllegalStateException when `maxIters`
    * rounds pass without reaching the fixpoint, rather than return split
-   * components. The handle releases the returned frame's checkpoint;
-   * call it only once the frame is consumed.
+   * components. The handle releases the loop's last checkpoint; call it
+   * only once the frame is consumed. On the one-partition path the
+   * handle does nothing: the local labels hold no RDD.
    */
   def connectedComponentsStarWithRelease(edges: DataFrame, aCol: String, bCol: String,
                                          maxIters: Int = 50): (DataFrame, () => Unit) = {
@@ -1100,16 +1105,15 @@ object Dedup {
 
     var e = edges.where(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).cast("long").as("__u"), col(bCol).cast("long").as("__v"))
+    if (Partitions.fitOne(e)) {
+      // collects the plan fitOne just optimized; self-loops drop on the driver
+      val rows = describedAs(edges.sparkSession, "connectedComponentsStar: one partition")(e.collect())
+      val labels = contractPartition(rows.iterator.map(r => (r.getLong(0), r.getLong(1)))
+        .filter { case (a, b) => a != b }, allRoots = true).toSeq
+      return (edges.sparkSession.createDataset(labels)(idPairs).toDF("id", "component"), () => ())
+    }
     var previous: Option[RDD[_]] = None
     var unfinished = 1L
-    if (Partitions.fitOne(e))
-      describedAs(edges.sparkSession, "connectedComponentsStar: one partition") {
-        e = e.where(u =!= v).coalesce(1).as(idPairs)
-          .mapPartitions(contractPartition(_, allRoots = true))(idPairs).toDF("__u", "__v")
-          .localCheckpoint(true)
-        previous = Some(written(e))
-        unfinished = 0L
-      }
     var i = 0
     while (unfinished > 0) {
       if (i == maxIters) throw new IllegalStateException(
@@ -1134,7 +1138,9 @@ object Dedup {
   }
 
   /** [[connectedComponentsStarWithRelease]] without the release handle:
-    * the last checkpoint stays until the ContextCleaner reclaims it. */
+    * the loop's last checkpoint stays until the ContextCleaner reclaims
+    * it. An edge set that fits one partition is solved on the driver and
+    * comes back as a local relation, with no checkpoint. */
   def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
                               maxIters: Int = 50): DataFrame =
     connectedComponentsStarWithRelease(edges, aCol, bCol, maxIters)._1
@@ -1185,9 +1191,11 @@ object Dedup {
    * pairs -> exact-Jaccard refine -> [[connectedComponentsStar]] -> keep
    * the minimum-id document of every cluster (docs in no cluster survive
    * untouched). Returns the surviving rows of `df`. The component labels
-   * are the checkpoint connected components ends in, so the pair cache is
-   * released before return and the losers are a narrow projection of
-   * that checkpoint.
+   * are the checkpoint connected components ends in, or, when the pairs
+   * fit one partition, a local relation solved on the driver from one
+   * collect of the pairs. Either way the pair cache is released before
+   * return, and the losers are a narrow projection of the labels (a
+   * `LocalTableScan` on the one-partition path, read with no job).
    */
   def dedupNearClusters(df: DataFrame, idCol: String, textCol: String,
                         shingle: Int = 3, numHashes: Int = 64,

@@ -12,7 +12,13 @@ private[graft] object Partitions {
     * `coalescePartitions.minPartitionSize` when
     * `coalescePartitions.parallelismFirst` is on (the default), else
     * `advisoryPartitionSizeInBytes`. False whenever AQE or its partition
-    * coalescing is off. */
+    * coalescing is off.
+    *
+    * It also bounds a driver collect: `Dedup.connectedComponentsStar`
+    * collects its edges when this holds, so the driver takes no more
+    * than one coalesced task would. A plan Spark cannot size (an uncached
+    * RDD-backed frame estimates `spark.sql.defaultSizeInBytes`) does not
+    * pass unless that setting is lowered below the limit. */
   def fitOne(df: DataFrame): Boolean = {
     val conf = df.sparkSession.sessionState.conf
     conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled && {

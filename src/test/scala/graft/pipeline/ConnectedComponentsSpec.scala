@@ -1,9 +1,13 @@
 package graft.pipeline
 
+import graft.tools.Partitions
 import org.apache.spark.grafttest.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -184,18 +188,30 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     sc.setJobDescription("caller")
     try {
       val chain = permutedChain(40, 8L).toDF("a", "b")
-      for (conf <- Seq(uncoalesced(4), Seq.empty)) withConf(conf: _*) {
-        val (comps, inside) = jobsOf(Dedup.connectedComponentsStar(chain, "a", "b"))
+      // a plan of its own: the cache would serve `chain` too if it matched
+      val cached = chain.repartition(2).persist()
+      cached.count()
+      // (conf, input, the call's jobs): the loop's rounds; the one-partition
+      // collect on cached edges; no job on edges that are a local relation
+      for ((conf, in, path) <- Seq((uncoalesced(4), chain, "loop"),
+          (Seq.empty, cached, "cached"), (Seq.empty, chain, "local"))) withConf(conf: _*) {
+        val (comps, inside) = jobsOf(Dedup.connectedComponentsStar(in, "a", "b"))
         val phases = inside.distinct
-        if (conf.isEmpty) assert(inside == Seq(onePartition), inside)
-        else {
-          assert(phases.size > 1, inside)
-          assert(phases == (1 to phases.size).map(k => s"connectedComponentsStar: round $k"), inside)
+        path match {
+          case "loop" =>
+            assert(phases.size > 1, inside)
+            assert(phases == (1 to phases.size).map(k => s"connectedComponentsStar: round $k"), inside)
+          case "cached" => assert(inside == Seq(onePartition), inside)
+          case "local" => assert(inside.isEmpty, inside)
         }
         assert(sc.getLocalProperty("spark.job.description") == "caller")
+        // the loop's labels are a checkpoint, read by a job of the caller;
+        // the one-partition labels are a local relation, read with none
         val (_, after) = jobsOf(comps.collect())
-        assert(after.nonEmpty && after.forall(_ == "caller"), after)
+        if (path == "loop") assert(after.nonEmpty && after.forall(_ == "caller"), after)
+        else assert(after.isEmpty, after)
       }
+      cached.unpersist()
     } finally sc.setJobDescription(null)
   }
 
@@ -245,19 +261,38 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("one partition: the loop's labels on every graph family, self-loops, nulls, int ids, empty input") {
-    def same(df: DataFrame, what: String, jobs: Int = 1): Unit = {
-      val (comps, descs) = jobsOf(Dedup.connectedComponentsStar(df, "a", "b"))
-      assert(descs == Seq.fill(jobs)(onePartition), what)
-      val rows = comps.as[(Long, Long)].collect()
-      assert(rows.length == rows.map(_._1).distinct.length, s"$what: one row per id")
-      val loop = withConf(uncoalesced(16): _*)(labels(df))
-      assert(rows.toMap == loop, what)
+    val sc = spark.sparkContext
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    // `local` is a local relation: the collect runs no job. Its cached
+    // copy runs exactly the one described collect job
+    def same(local: DataFrame, what: String): Unit = {
+      val (loop, loopSchema) = withConf(uncoalesced(16): _*) {
+        val (comps, release) = Dedup.connectedComponentsStarWithRelease(local, "a", "b")
+        try (comps.as[(Long, Long)].collect().toMap, comps.schema) finally release()
+      }
+      // a plan of its own: the cache would serve `local` too if it matched
+      val cached = local.repartition(2).persist()
+      cached.count()
+      for ((in, jobs) <- Seq(local -> Seq.empty, cached -> Seq(onePartition))) {
+        val before = persisted
+        val ((comps, release), descs) = jobsOf(Dedup.connectedComponentsStarWithRelease(in, "a", "b"))
+        assert(descs == jobs, what)
+        assert(persisted == before, s"$what: the call persists no RDD")
+        assert(comps.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], what)
+        val (rows, read) = jobsOf(comps.as[(Long, Long)].collect())
+        assert(read.isEmpty, s"$what: the labels are read with no job")
+        assert(rows.length == rows.map(_._1).distinct.length, s"$what: one row per id")
+        assert(rows.toMap == loop, what)
+        assert(comps.schema == loopSchema, what)
+        release()
+        assert(persisted == before, s"$what: nothing to release")
+      }
+      cached.unpersist()
     }
     for ((what, edges) <- families) same(edges.toDF("a", "b"), what)
     same(fixture._1.toDF("a", "b"), "self-loops and nulls")
     same(permutedChain(100, 5L).map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b"), "int ids")
-    // an empty checkpoint has no partition, so no task and no job
-    same(spark.emptyDataset[(Long, Long)].toDF("a", "b"), "empty input", jobs = 0)
+    same(spark.emptyDataset[(Long, Long)].toDF("a", "b"), "empty input")
     assert(labels(fixture._1.toDF("a", "b")) == fixture._2)
   }
 
@@ -290,6 +325,32 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     } finally chain.unpersist()
   }
 
+  test("the driver collects only sized edges: fitOne is false on an RDD-backed or oversized frame") {
+    val sc = spark.sparkContext
+    val conf = spark.sessionState.conf
+    val limit = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    // an uncached parallelize-backed frame: Spark cannot size the RDD
+    val edges = permutedChain(256, 7L)
+    val rdd = sc.parallelize(edges, 4).toDF("a", "b")
+    assert(rdd.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes) ==
+      Seq(BigInt(conf.defaultSizeInBytes)))
+    // a cached frame of random ids (incompressible) larger than the limit
+    val rnd = new scala.util.Random(19)
+    val big = Seq.fill(100000)((rnd.nextLong(), rnd.nextLong())).toDF("a", "b").persist()
+    big.count()
+    try {
+      assert(big.queryExecution.optimizedPlan.stats.sizeInBytes > limit)
+      for (in <- Seq(rdd, big)) {
+        assert(!Partitions.fitOne(in))
+        assert(!Partitions.fitOne(in.select(col("a").cast("long"), col("b").cast("long"))))
+      }
+      // so connected components takes the round loop on the unsized frame
+      val (comps, descs) = jobsOf(Dedup.connectedComponentsStar(rdd, "a", "b"))
+      assert(!descs.contains(onePartition) && roundsOf(descs) >= 1, descs)
+      assert(comps.as[(Long, Long)].collect().toMap == UnionFind.labels(edges))
+    } finally big.unpersist()
+  }
+
   test("release() leaves no RDD of the call persisted; the caller's input stays") {
     val sc = spark.sparkContext
     def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
@@ -304,7 +365,10 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       if (conf.isEmpty) assert(descs == Seq(onePartition), descs)
       else assert(roundsOf(descs) > 1, descs)
       assert(comps.as[(Long, Long)].collect().toMap == UnionFind.labels(edges))
-      assert((persisted -- before).nonEmpty, "the result's checkpoint")
+      // the loop's result projects its last checkpoint; the one-partition
+      // result is a local relation and persists nothing
+      if (conf.isEmpty) assert(persisted == before, "no checkpoint on the one-partition path")
+      else assert((persisted -- before).nonEmpty, "the result's checkpoint")
       release()
       assert((persisted -- before).isEmpty, "every RDD the call persisted is released")
       assert(inputs.subsetOf(persisted), "the caller's input stays persisted")
